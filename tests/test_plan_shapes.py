@@ -468,3 +468,69 @@ def test_tpch_q16_anti_join_blocklist(spark):
 def test_tpch_q10_topk_no_global_sort(spark):
     plan = _physical(q("tpch_q10_returned_items")(spark, SF))
     assert "TakeOrderedAndProject" in plan
+
+
+def _pair_family(spark):
+    from workshoop2_etl_spark.operators import basket, dedup, similarity
+    from workshoop2_etl_spark.operators.pairs import both_orientations
+    from workshoop2_etl_spark.sources.readers import read_parquet
+
+    docs = read_parquet(spark, f"{SF}/documents.parquet")
+    emb = read_parquet(spark, f"{SF}/embeddings.parquet")
+    li = read_parquet(spark, f"{SF}/lineitem.parquet")
+
+    def copurchase(min_count):
+        return basket.copurchase_pairs(
+            li, basket_col="l_orderkey", item_col="l_partkey", min_count=min_count
+        )
+
+    return {
+        "lsh_candidate_pairs": lambda: dedup.lsh_candidate_pairs(
+            dedup.minhash_signatures(docs, "doc_id", "text"), "doc_id"
+        ),
+        "simhash_neardup_pairs": lambda: dedup.simhash_neardup_pairs(
+            dedup.simhash(docs, "doc_id", "text"), "doc_id"
+        ),
+        "ngram_jaccard_neardup": lambda: dedup.ngram_jaccard_neardup(
+            docs, "doc_id", "text"
+        ),
+        "winnow_candidates": lambda: dedup.winnow_candidates(
+            docs, "doc_id", "text", k=20, w=8
+        ),
+        "embedding_neardup": lambda: similarity.embedding_neardup(
+            emb, dim=64, threshold=0.35, num_tables=8, num_planes=8
+        ),
+        "copurchase_pairs": lambda: copurchase(1),
+        "both_orientations": lambda: both_orientations(
+            copurchase(3), "item_a", "item_b", "src", "dst"
+        ),
+        "association_rules_lineitem": lambda: q("association_rules_lineitem")(
+            spark, SF
+        ),
+        "triangles_copurchase_lineitem": lambda: q(
+            "triangles_copurchase_lineitem"
+        )(spark, SF),
+    }
+
+
+# Exchange counts of the AQE final plans, read before the pair
+# callers were moved onto operators/pairs.py and unchanged by that
+# move: one bucket aggregate per caller, no self-join. A kernel edit
+# that adds a second aggregate or a join shows up here.
+_PAIR_FAMILY_EXCHANGES = {
+    "lsh_candidate_pairs": 2,
+    "simhash_neardup_pairs": 4,
+    "ngram_jaccard_neardup": 3,
+    "winnow_candidates": 3,
+    "embedding_neardup": 5,
+    "copurchase_pairs": 2,
+    "both_orientations": 2,
+    "association_rules_lineitem": 21,
+    "triangles_copurchase_lineitem": 27,
+}
+
+
+@pytest.mark.parametrize("caller", sorted(_PAIR_FAMILY_EXCHANGES))
+def test_pair_family_exchange_counts(spark, caller):
+    final = _final(_pair_family(spark)[caller]())
+    assert final.count("Exchange") == _PAIR_FAMILY_EXCHANGES[caller], final

@@ -111,7 +111,10 @@ def test_parquet_sink_checkpoint_no_reprocess(spark, session_fixture, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
 
     activate()
     first = spark.read.parquet(out).count()
@@ -180,7 +183,10 @@ def test_no_data_batches_skip_identical_for_semi_join(spark, sf_dir, tmp_path):
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
+            try:
+                assert q.awaitTermination(120)
+            finally:
+                q.stop()
         prog = [
             json.loads(p) if isinstance(p, str) else p for p in q.recentProgress
         ]

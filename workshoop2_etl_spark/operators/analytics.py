@@ -2,7 +2,7 @@
 
 Parity targets (reference SURVEY.md §2.5/§2.6): the EDA notebook's
 profiling ops and the 10 Metabase dashboard queries —
-value_counts (A3), group means (A4), scalar min/max (A5),
+value_counts (A3), scalar min/max (A5),
 count-distinct KPIs (A6/A11), null profile (A7), summary stats (A8),
 histogram (A10), grouped rankings (A12/A13), year×category series
 (A14), sorts/top-k (T1-T4).
@@ -29,15 +29,6 @@ def value_counts(df: DataFrame, col: str, *, count_col: str = "n") -> DataFrame:
         .agg(F.count(F.lit(1)).alias(count_col))
         .orderBy(F.desc(count_col), F.asc(col))
     )
-
-
-def group_mean(
-    df: DataFrame, keys: Sequence[str], value: Column | str, *, alias: str = "mean"
-) -> DataFrame:
-    """Per-group average (A4); pass ``bool_rate(col)`` style columns
-    for boolean-rate semantics (reference eda cells 6-7)."""
-    v = F.col(value) if isinstance(value, str) else value
-    return df.groupBy(*keys).agg(F.avg(v).alias(alias))
 
 
 def null_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:

@@ -4,14 +4,13 @@ classic retail companion to the star-schema dashboards (Agrawal &
 Srikant, VLDB 1994 define the measures; pairs-only here, which is
 what production recommenders actually ship).
 
-Scale shape: ONE basket-keyed shuffle groups each basket's distinct
-items into a sorted array; the C(n,2) pair expansion is then a
-higher-order transform INSIDE the row — no self-join, no second
-data-sized shuffle (the earlier self-join formulation paid one, and
-bench showed it). Pair volume is bounded by Σ_b |basket_b|² —
-baskets are order-sized (single digits), NOT corpus-sized. Item
-marginals are a separate aggregate broadcast back onto the (far
-smaller) surviving pair aggregate. No collect, no cross-join, no
+Scale shape: each basket is one bucket of
+:func:`~workshoop2_etl_spark.operators.pairs.bucket_pairs` — ONE
+basket-keyed shuffle, pairs expanded in-row, no self-join. Pair
+volume is bounded by Σ_b |basket_b|² — baskets are order-sized
+(single digits), NOT corpus-sized. Item marginals are a separate
+aggregate broadcast back onto the (far smaller) surviving pair
+aggregate. No collect, no cross-join, no
 per-item loop. A pathologically large basket would square — the
 ``max_basket`` guard drops those baskets loudly rather than letting
 one degenerate basket explode quadratically (same policy as
@@ -22,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from workshoop2_etl_spark.operators.pairs import both_orientations, bucket_pairs
 
 
 def copurchase_pairs(
@@ -34,45 +35,18 @@ def copurchase_pairs(
 ) -> DataFrame:
     """Distinct co-occurring item pairs with their basket counts.
 
-    Items are deduplicated within a basket first (map-side distinct
-    on (basket, item)); pairs are oriented ``item_a < item_b`` so each
-    unordered pair appears once. Baskets larger than ``max_basket``
-    items are excluded (squared fan-out guard).
+    Each basket is one bucket of
+    :func:`~workshoop2_etl_spark.operators.pairs.bucket_pairs`, so an
+    item repeated in a basket counts once; pairs are oriented
+    ``item_a < item_b`` so each unordered pair appears once. Baskets
+    larger than ``max_basket`` items are excluded (squared fan-out
+    guard).
 
     Returns (``item_a``, ``item_b``, ``n_baskets`` long).
     """
-    baskets = (
-        df.select(
-            F.col(basket_col).alias("__b"), F.col(item_col).alias("__i")
-        )
-        .groupBy("__b")
-        .agg(F.array_sort(F.collect_set("__i")).alias("__items"))
-    )
-    if max_basket is not None:
-        baskets = baskets.filter(F.size("__items") <= max_basket)
-    # Pair expansion as a higher-order transform over the sorted
-    # per-basket array — each basket emits its C(n,2) oriented pairs
-    # WITHOUT a basket-keyed self-join (one shuffle to group, zero to
-    # pair; the self-join formulation paid a second data-sized
-    # shuffle plus join bookkeeping for the same rows).
-    pair_structs = F.flatten(
-        F.transform(
-            "__items",
-            lambda x, i: F.transform(
-                F.slice(
-                    F.col("__items"),
-                    i + 2,
-                    F.greatest(F.size("__items") - i - 1, F.lit(0)),
-                ),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
     out = (
-        baskets.select(F.explode(pair_structs).alias("__p"))
-        .groupBy(
-            F.col("__p.a").alias("item_a"), F.col("__p.b").alias("item_b")
-        )
+        bucket_pairs(df, [basket_col], item_col, max_bucket_size=max_basket)
+        .groupBy(F.col("a").alias("item_a"), F.col("b").alias("item_b"))
         .agg(F.count(F.lit(1)).alias("n_baskets"))
     )
     if min_count > 1:
@@ -130,27 +104,10 @@ def association_rules(
         F.count(F.lit(1)).alias("__n_item")
     )
     total = b.agg(F.countDistinct("__b").alias("__n"))
-    # Both directions emitted IN-ROW (explode of the two orientation
-    # structs) rather than a union of two projections: the union form
-    # re-executed the pair-count aggregate once per branch (r15,
-    # guide §2.4 — same rewrite as the graph symmetrization; row
-    # multiset identical).
-    both = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("item_a").alias("antecedent"),
-                    F.col("item_b").alias("consequent"),
-                    F.col("n_baskets").alias("n_pair"),
-                ),
-                F.struct(
-                    F.col("item_b").alias("antecedent"),
-                    F.col("item_a").alias("consequent"),
-                    F.col("n_baskets").alias("n_pair"),
-                ),
-            )
-        ).alias("__r")
-    ).select("__r.antecedent", "__r.consequent", "__r.n_pair")
+    both = both_orientations(
+        pairs.withColumnRenamed("n_baskets", "n_pair"),
+        "item_a", "item_b", "antecedent", "consequent", "n_pair",
+    )
     out = (
         both.join(
             F.broadcast(marg.withColumnRenamed("__n_item", "__n_ante")),

@@ -15,8 +15,8 @@ needs *content* dedup:
 
 Scale design. Exact dedup shuffles a 64-bit hash, never the document
 bytes. MinHash is one explode + one hash-aggregate (k mins computed
-map-side); LSH banding turns the quadratic pair search into an
-equi-join on (band, band-hash) buckets, and ``max_bucket_size``
+map-side); LSH banding turns the quadratic pair search into per-bucket
+pair emission on (band, band-hash) buckets, and ``max_bucket_size``
 guards against degenerate buckets going quadratic (skew guard — at
 100 TB a boilerplate page can put millions of docs in one bucket).
 Everything is JVM-side built-ins: no Python runs per row.
@@ -28,6 +28,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from workshoop2_etl_spark.operators.pairs import bucket_pairs
 
 
 # ---------------------------------------------------------------------------
@@ -177,22 +179,6 @@ def tokens_expr(text_col: str) -> Column:
     )
 
 
-def shingles_expr(text_col: str, n: int = 3) -> Column:
-    """Word ``n``-shingles as space-joined strings. Documents shorter
-    than ``n`` tokens yield one shingle of all their tokens.
-
-    NOTE: inlines the tokenization inside the transform lambda, so the
-    regex split re-evaluates per shingle index — O(tokens²) per doc.
-    Fine for ad-hoc use on short strings; the operators below use
-    :func:`with_distinct_shingles` (two-step projection, split runs
-    once per row)."""
-    toks = f"filter(split(lower({text_col}), '\\\\s+'), t -> t != '')"
-    return F.expr(
-        f"transform(sequence(1, greatest(size({toks}) - {n} + 1, 1)),"
-        f" i -> array_join(slice({toks}, i, {n}), ' '))"
-    )
-
-
 def with_distinct_shingles(
     df: DataFrame, text_col: str, n: int, out_col: str
 ) -> DataFrame:
@@ -335,44 +321,22 @@ def lsh_candidate_pairs(
 
     The signature is cut into ``bands`` bands of ``num_hashes/bands``
     rows; two docs are candidates iff at least one band hashes equal.
-    Implemented as ONE bucket aggregate + in-row pair emission (r15,
-    guide §2.4 — the same trick as ``basket.copurchase_pairs``): each
-    (band, band_hash) bucket collects its member ids, and the sorted
-    array emits its C(n, 2) oriented pairs with a higher-order
-    transform. The previous self-equi-join form evaluated the banded
-    subtree twice (no ReusedExchange across join sides) and paid a
-    window sort for the bucket cap — 7 Exchanges vs 3, and the cost
-    stays Σ bucket², never n². ``max_bucket_size`` becomes a free
-    ``size()`` filter on the bucket array: degenerate buckets
-    (boilerplate that would go quadratic) drop whole; docs there were
-    already near-identical to *many* others and should be routed to
-    exact dedup instead.
+    Each (band, band_hash) bucket emits its pairs through
+    :func:`~workshoop2_etl_spark.operators.pairs.bucket_pairs`.
+    ``max_bucket_size`` drops degenerate buckets whole: docs there
+    (boilerplate that would go quadratic) were already near-identical
+    to *many* others and should be routed to exact dedup instead.
 
-    Output: ``{id_col}_a < {id_col}_b`` distinct candidate pairs —
-    row-identical to the self-join form (a doc appears once per band,
-    so bucket member ids are distinct; checked ``exceptAll`` both
-    ways at sf0.1).
+    Output: ``{id_col}_a < {id_col}_b`` distinct candidate pairs.
     """
     banded = lsh_banded(
         signatures, id_col, num_hashes=num_hashes, bands=bands
     )
-    buckets = banded.groupBy("band", "bh").agg(
-        F.array_sort(F.collect_list(id_col)).alias("__ids")
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("__ids") <= max_bucket_size)
-    pair_structs = F.expr(
-        "flatten(transform(__ids, (x, i) ->"
-        " transform(slice(__ids, i + 2, greatest(size(__ids) - i - 1, 0)),"
-        " y -> struct(x AS a, y AS b))))"
-    )
     return (
-        buckets.filter(F.size("__ids") >= 2)
-        .select(F.explode(pair_structs).alias("__p"))
-        .select(
-            F.col("__p.a").alias(f"{id_col}_a"),
-            F.col("__p.b").alias(f"{id_col}_b"),
+        bucket_pairs(
+            banded, ["band", "bh"], id_col, max_bucket_size=max_bucket_size
         )
+        .select(F.col("a").alias(f"{id_col}_a"), F.col("b").alias(f"{id_col}_b"))
         .distinct()
     )
 
@@ -778,7 +742,7 @@ def simhash(
     ``bits`` ≤ 63 keeps the fingerprint in a signed long.
 
     Near-duplicate docs differ in a few bits — pair search is
-    :func:`simhash_neardup_pairs` (blocked-prefix self-join + exact
+    :func:`simhash_neardup_pairs` (block buckets + exact
     popcount verify); the MinHash path is the engine's primary
     near-dedup.
 
@@ -836,9 +800,9 @@ def simhash_neardup_pairs(
     ``n_blocks`` = m bit blocks (default ``max_hamming + 3``). A pair
     within hamming distance d ≤ ``max_hamming`` differs in at most d
     blocks, so it agrees EXACTLY on at least m−d blocks (pigeonhole)
-    — hence on at least one specific (m−d)-subset. Candidates come
-    from ONE self-equi-join on (subset id, packed values of that
-    subset's blocks), enumerated over all C(m, d) subsets.
+    — hence on at least one specific (m−d)-subset. Candidates are
+    the pairs sharing a bucket keyed on (subset id, packed values of
+    that subset's blocks), enumerated over all C(m, d) subsets.
 
     Why not the minimal m = d+1 (one-block match keys): a 63-bit
     fingerprint in 4 blocks gives 16-bit keys, and random-collision
@@ -910,36 +874,14 @@ def simhash_neardup_pairs(
     ).select(
         id_col, "__fp", F.col("__b.blk").alias("blk"), F.col("__b.val").alias("val")
     )
-    # One aggregate per (blk, val) bucket + in-row pair emission
-    # (r15, guide §2.4 — the lsh_candidate_pairs rewrite): the
-    # self-equi-join form evaluated the fingerprint+probe subtree
-    # once per join side and paid a window sort for the cap. A doc
-    # appears once per blk, so bucket members have distinct ids;
-    # array_sort on (id, fp) structs orders by id and the i<j
-    # emission IS the old ``__ida < __idb`` filter. Pairs proven
-    # row-identical (exceptAll = 0 both ways).
-    buckets = b.groupBy("blk", "val").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col(id_col).alias("i"), F.col("__fp").alias("f"))
-            )
-        ).alias("__m")
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("__m") <= max_bucket_size)
-    pair_structs = F.expr(
-        "flatten(transform(__m, (x, i) ->"
-        " transform(slice(__m, i + 2, greatest(size(__m) - i - 1, 0)),"
-        " y -> struct(x AS a, y AS b))))"
-    )
+    member = F.struct(F.col(id_col).alias("i"), F.col("__fp").alias("f"))
     return (
-        buckets.filter(F.size("__m") >= 2)
-        .select(F.explode(pair_structs).alias("__p"))
+        bucket_pairs(b, ["blk", "val"], member, max_bucket_size=max_bucket_size)
         .select(
-            F.col("__p.a.i").alias("__ida"),
-            F.col("__p.a.f").alias("__fa"),
-            F.col("__p.b.i").alias("__idb"),
-            F.col("__p.b.f").alias("__fb"),
+            F.col("a.i").alias("__ida"),
+            F.col("a.f").alias("__fa"),
+            F.col("b.i").alias("__idb"),
+            F.col("b.f").alias("__fb"),
         )
         .dropDuplicates(["__ida", "__idb"])
         .withColumn(
@@ -990,7 +932,7 @@ def ngram_jaccard_neardup(
     an exact DuckDB twin and the whole pipeline is oracle-checkable).
 
     Candidates = docs sharing ≥1 of their bottom-``sketch_k`` hashed
-    char shingles (one explode + one self-equi-join on the hash —
+    char shingles (one explode + one bucket per hash —
     Σ bucket², never n²; ``max_bucket_size`` is the same boilerplate
     skew guard as the LSH path). Verification = exact word
     ``shingle_n``-gram Jaccard via :func:`verify_jaccard`, computed
@@ -1004,27 +946,9 @@ def ngram_jaccard_neardup(
             bottomk_char_sketch(text_col, char_ngram=char_ngram, k=sketch_k)
         ).alias("__h"),
     )
-    # One aggregate per sketch-hash bucket + in-row pair emission
-    # (r15, guide §2.4 — the lsh_candidate_pairs rewrite; the sketch
-    # is per-doc distinct, so bucket member ids are distinct and the
-    # sorted i<j emission reproduces ``__ida < __idb`` exactly).
-    buckets = sketched.groupBy("__h").agg(
-        F.array_sort(F.collect_list(id_col)).alias("__ids")
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.filter(F.size("__ids") <= max_bucket_size)
-    pair_structs = F.expr(
-        "flatten(transform(__ids, (x, i) ->"
-        " transform(slice(__ids, i + 2, greatest(size(__ids) - i - 1, 0)),"
-        " y -> struct(x AS a, y AS b))))"
-    )
     pairs = (
-        buckets.filter(F.size("__ids") >= 2)
-        .select(F.explode(pair_structs).alias("__p"))
-        .select(
-            F.col("__p.a").alias(f"{id_col}_a"),
-            F.col("__p.b").alias(f"{id_col}_b"),
-        )
+        bucket_pairs(sketched, ["__h"], id_col, max_bucket_size=max_bucket_size)
+        .select(F.col("a").alias(f"{id_col}_a"), F.col("b").alias(f"{id_col}_b"))
         .distinct()
     )
     verified = verify_jaccard(
@@ -1384,14 +1308,8 @@ def winnow_candidates(
     they would have contributed are overwhelmingly already connected
     by rarer shared grams.
 
-    Shape (r15, guide §2.4 — the ``lsh_candidate_pairs`` rewrite):
-    ONE aggregate per gram collects the posting list; the cap is a
-    ``size()`` filter on it, and the sorted list emits its C(n, 2)
-    oriented pairs in-row. The previous postings-count + self-join
-    form evaluated the winnowing-fingerprint subtree THREE times
-    (count, join side a, join side b — no ReusedExchange across
-    differently-projected branches) and shuffled the postings twice.
-    Pairs proven row-identical (``exceptAll`` = 0 both ways).
+    Each gram's posting list is one bucket of
+    :func:`~workshoop2_etl_spark.operators.pairs.bucket_pairs`.
 
     Shuffle: postings are ``(gram_hash, id)`` pairs — 32 hex chars +
     an id, never text; the pair aggregation groups on (id_a, id_b).
@@ -1399,23 +1317,9 @@ def winnow_candidates(
     fp = winnow_fingerprints(df, id_col, text_col, k=k, w=w).select(
         id_col, "gram_hash"
     ).distinct()
-    postings = (
-        fp.groupBy("gram_hash")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("__ids"))
-        .filter(
-            (F.size("__ids") <= max_postings) & (F.size("__ids") >= 2)
-        )
-    )
-    pair_structs = F.expr(
-        "flatten(transform(__ids, (x, i) ->"
-        " transform(slice(__ids, i + 2, greatest(size(__ids) - i - 1, 0)),"
-        " y -> struct(x AS a, y AS b))))"
-    )
     return (
-        postings.select(F.explode(pair_structs).alias("__p"))
-        .groupBy(
-            F.col("__p.a").alias("id_a"), F.col("__p.b").alias("id_b")
-        )
+        bucket_pairs(fp, ["gram_hash"], id_col, max_bucket_size=max_postings)
+        .groupBy(F.col("a").alias("id_a"), F.col("b").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )

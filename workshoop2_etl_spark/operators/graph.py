@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from workshoop2_etl_spark.operators.pairs import both_orientations
+
 
 def pagerank(
     edges: DataFrame,
@@ -517,28 +519,8 @@ def label_propagation(
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    # Symmetrize in-row (explode of both orientations) rather than a
-    # union of two projections: the union re-executes the caller's
-    # edge derivation once per branch (r15, guide §2.4 — only the
-    # base scan gets a ReusedExchange; an aggregate-built edge list
-    # like copurchase_pairs pays its pair count twice). Same row
-    # multiset, and `distinct` collapses it identically.
     sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src_col).alias("__u"),
-                        F.col(dst_col).alias("__v"),
-                    ),
-                    F.struct(
-                        F.col(dst_col).alias("__u"),
-                        F.col(src_col).alias("__v"),
-                    ),
-                )
-            ).alias("__e")
-        )
-        .select("__e.__u", "__e.__v")
+        both_orientations(edges, src_col, dst_col, "__u", "__v")
         .filter(F.col("__u") != F.col("__v"))
         .distinct()
         .persist()

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.operators.pairs import bucket_pairs
+
 
 def _as_double(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -486,39 +488,18 @@ def embedding_neardup(
     seed: int = 42,
 ) -> DataFrame:
     """Near-duplicate vector pairs (cosine ≥ threshold) via LSH
-    buckets: self-join per table on the bucket id, union, dedup,
+    buckets: the id pairs sharing a (table, bucket), dedup,
     exact-cosine filter. Quadratic only within buckets (and the
     plane count bounds expected bucket size)."""
-    # Id-only pair generation (see lsh_topk): one self-equi-join on
-    # long-format (table, bucket) assignments; candidate rows are two
-    # longs, embeddings join back once per side after dedup.
+    # Id-only pair generation: candidate rows are two longs,
+    # embeddings join back once per side after dedup.
     b = bucket_assignments(
         df, id_col, vec_col=vec_col, dim=dim, num_tables=num_tables,
         num_planes=num_planes, seed=seed,
     )
-    # One aggregate per (table, bucket) + in-row C(n,2) emission
-    # (r15, guide §2.4 — the lsh_candidate_pairs rewrite): the
-    # self-equi-join evaluated the bucket-assignment subtree (the
-    # hyperplane matmul) once per join side. A vector hashes to one
-    # bucket per table, so member ids are distinct and sorted i<j
-    # emission reproduces ``__ida < __idb``. Pairs exceptAll = 0.
     pairs = (
-        b.groupBy("__table", "__bucket")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("__ids"))
-        .filter(F.size("__ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(__ids, (x, i) ->"
-                    " transform(slice(__ids, i + 2,"
-                    " greatest(size(__ids) - i - 1, 0)),"
-                    " y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("__p")
-        )
-        .select(
-            F.col("__p.a").alias("__ida"), F.col("__p.b").alias("__idb")
-        )
+        bucket_pairs(b, ["__table", "__bucket"], id_col)
+        .select(F.col("a").alias("__ida"), F.col("b").alias("__idb"))
         .dropDuplicates(["__ida", "__idb"])
     )
     va = df.select(F.col(id_col).alias("__ida"), F.col(vec_col).alias("__va"))

@@ -13,30 +13,8 @@ from pyspark.sql import functions as F
 
 from workshoop2_etl_spark.operators.basket import association_rules
 from workshoop2_etl_spark.operators.graph import triangle_count
+from workshoop2_etl_spark.operators.pairs import both_orientations
 from workshoop2_etl_spark.plans.reference_queries import _register, _t
-
-def _symmetrize(pairs: DataFrame) -> DataFrame:
-    """Both orientations of an (item_a, item_b) pair frame as
-    (src, dst) rows, emitted IN-ROW via explode instead of a union of
-    two projections (r15, guide §2.4): the union form re-executed the
-    pair-count aggregate — the substrate's largest intermediate —
-    once per branch (ReusedExchange covers only the base-table scan),
-    doubling its compute and its exchange. Row multiset is identical
-    (checked ``exceptAll`` both ways on the copurchase substrate)."""
-    return pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("item_a").alias("src"),
-                    F.col("item_b").alias("dst"),
-                ),
-                F.struct(
-                    F.col("item_b").alias("src"),
-                    F.col("item_a").alias("dst"),
-                ),
-            )
-        ).alias("__e")
-    ).select("__e.src", "__e.dst")
 
 
 _RULES_SQL = """
@@ -356,13 +334,7 @@ def pagerank_fixed_point_copurchase(
     pairs = copurchase_pairs(
         li, basket_col="l_orderkey", item_col="l_partkey", min_count=3
     )
-    # Symmetrize IN-ROW (explode of both orientations) rather than a
-    # union of two projections: the union re-executes the pair-count
-    # aggregate — the substrate's largest intermediate — once per
-    # branch (r15, guide §2.4: 4 Exchange → 2, base-scan
-    # ReusedExchange kept; row multiset proven identical,
-    # exceptAll = 0 both ways).
-    sym = _symmetrize(pairs)
+    sym = both_orientations(pairs, "item_a", "item_b", "src", "dst")
     ranks = pagerank_fixed_point(sym, iterations=5)
     return (
         ranks.select("node", F.col("rank").alias("pr"))
@@ -443,10 +415,7 @@ def textrank_fixed_point_documents(
     pairs = copurchase_pairs(
         words, basket_col="doc_id", item_col="word", min_count=20
     )
-    # In-row symmetrization — same rationale as the copurchase
-    # pagerank entry (r15): one evaluation of the word-pair count
-    # instead of two, identical row multiset.
-    sym = _symmetrize(pairs)
+    sym = both_orientations(pairs, "item_a", "item_b", "src", "dst")
     ranks = pagerank_fixed_point(sym, iterations=5)
     return (
         ranks.select(

@@ -14,6 +14,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
 
 def get_session(
     app_name: str = "workshoop2_etl_spark",
@@ -63,6 +67,10 @@ def get_session(
         # table) as long nanos; the reader layer rebuilds timestamps.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers import this package by name: put its parent
+        # directory on their path, so the driver can be launched from
+        # any working directory.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
