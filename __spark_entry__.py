@@ -108,7 +108,7 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "cdx_fetch_plan_documents": (12,),
     "cdx_ingest_documents": (12,),
     "cdx_range_fetch_documents": (12,),
-    "char_entropy_documents": (11,),
+    "char_entropy_documents": (11, 15),
     "charset_decode_documents": (10, 13),
     "chisq_events_weekday": (10, 14),
     "chunk_documents_128": (10, 14),
@@ -116,20 +116,20 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "clustered_scan_events": (13,),
     "coerce_numeric_events_props": (2, 3, 4, 5, 6, 7, 8),
     "cohort_ltv_orders": (12,),
-    "compact_roundtrip_orders": (11,),
+    "compact_roundtrip_orders": (11, 15),
     "concentration_metrics_orders": (12,),
     "conditional_fetch_documents": (13,),
     "contribution_analysis_orders": (12,),
-    "corpus_diff_documents": (11,),
+    "corpus_diff_documents": (11, 15),
     "corr_matrix_lineitem": (2, 3, 4, 5, 6, 7),
     "count_distinct_customers": (1, 2, 3, 4, 5, 6),
     "crawl_prep_documents": (10, 14),
-    "crawl_upsert_timetravel_documents": (11,),
+    "crawl_upsert_timetravel_documents": (11, 15),
     "csv_roundtrip_region": (2, 3, 4, 5),
     "cube_status_priority": (10, 14),
     "cumulative_monthly_revenue": (3, 4, 5, 6, 7, 8),
     "days_between_events": (2, 3, 4, 5),
-    "decontaminate_documents": (11,),
+    "decontaminate_documents": (11, 15),
     "dedup_rows_order_flags": (2, 3, 4, 5, 6, 7, 8),
     "dim_build_priority": (1, 2, 3, 4, 5, 6, 7, 8, 9),
     "domain_cap_documents": (12,),
@@ -137,7 +137,7 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "dq_report_orders": (10, 14),
     "dsir_sample_documents": (7, 8, 9),
     "duplicate_groups_documents": (2, 3, 4, 5, 6, 7),
-    "duplicate_spans_documents": (11,),
+    "duplicate_spans_documents": (11, 15),
     "dynamic_overwrite_orders": (10, 14),
     "ensure_columns_conform": (2, 3, 4, 5, 6, 7, 8),
     "entity_resolution_customers": (7, 8, 9),
@@ -146,18 +146,18 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "filtered_count_distinct": (1, 2, 3, 4, 5, 6, 7, 8),
     "fingerprint_documents": (2, 3, 4, 5, 6),
     "fix_mojibake_documents": (10, 14),
-    "flagship_merge_indicator": (1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14),
+    "flagship_merge_indicator": (1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15),
     "flatten_first_tokens": (2, 3, 4, 5),
     "frame_sample_documents": (2, 3, 4, 5, 6, 7),
     "from_records_lookup_join": (2, 3, 4, 5, 6, 7, 8, 9),
-    "frontier_crawl_delay_documents": (11,),
-    "frontier_waves_documents": (11,),
-    "funnel_conversion_events": (11,),
+    "frontier_crawl_delay_documents": (11, 15),
+    "frontier_waves_documents": (11, 15),
+    "funnel_conversion_events": (11, 15),
     "fuzzy_join_big_customers": (8, 9),
     "fuzzy_join_nation_names": (10, 14),
     "geomean_grouped_agg_orders": (10, 14),
-    "global_ids_documents": (11,),
-    "gopher_rules_documents": (11,),
+    "global_ids_documents": (11, 15),
+    "gopher_rules_documents": (11, 15),
     "group_mean_event_value": (2, 3, 4, 5, 6),
     "grouped_quantiles_by_status": (2, 3, 4, 5, 6, 7, 8),
     "grouping_sets_orders": (10, 14),
@@ -170,7 +170,7 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "holt_winters_daily_revenue": (7, 8, 9),
     "host_graph_documents": (12,),
     "html_extract_documents": (10, 14),
-    "hybrid_rrf_search_documents": (11,),
+    "hybrid_rrf_search_documents": (11, 15),
     "image_ahash_documents": (12,),
     "image_ahash_pairs_documents": (12,),
     "image_decode_documents": (6, 7),
@@ -187,20 +187,20 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "k_anonymity_customers": (10, 14),
     "kaplan_meier_customers": (13,),
     "kcore_word_cooccurrence": (9, 13),
-    "kfold_split_documents": (11,),
+    "kfold_split_documents": (11, 15),
     "ks_drift_orders": (8, 9),
     "label_propagation_copurchase": (9, 13),
     "lakehouse_roundtrip_orders": (7, 8, 9),
     "langid_trained_documents": (13,),
     "language_id_documents": (2, 3, 4, 5, 6, 7, 8, 9),
-    "line_dedup_documents": (11,),
-    "link_graph_documents": (11,),
-    "lm_quality_buckets_documents": (11,),
+    "line_dedup_documents": (11, 15),
+    "link_graph_documents": (11, 15),
+    "lm_quality_buckets_documents": (11, 15),
     "mad_outliers_events": (10, 14),
     "media_metadata_documents": (2, 3, 4, 5, 6, 7),
-    "media_payload_dedup": (11,),
+    "media_payload_dedup": (11, 15),
     "minmax_orderdate": (1, 2, 3, 4, 5),
-    "mixture_sample_documents": (11,),
+    "mixture_sample_documents": (11, 15),
     "mode_or_first_lineitem": (1, 2, 3, 4, 5, 6, 7, 8),
     "model_registry_roundtrip_documents": (13,),
     "mom_revenue_growth": (12,),
@@ -208,13 +208,13 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "nested_lineitems_orders": (10, 14),
     "nfc_normalize_documents": (14,),
     "ngram_jaccard_pairs_documents": (10, 14),
-    "normalize_text_documents": (11,),
+    "normalize_text_documents": (11, 15),
     "ntile_quartiles_orders": (10, 14),
     "null_profile_events": (2, 3, 4, 5, 6, 7, 8, 9),
     "ols_trend_orders": (10, 14),
     "orc_roundtrip_orders": (10, 14),
     "outlink_stats_documents": (12,),
-    "overlap_join_events": (11,),
+    "overlap_join_events": (11, 15),
     "pack_chunks_by_lang": (10, 14),
     "page_directives_documents": (13,),
     "pagerank_fixed_point_copurchase": (9, 13),
@@ -223,24 +223,24 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "pdf_text_extract_documents": (13,),
     "pdf_xrefstream_extract_documents": (14,),
     "percent_rank_customers": (10, 14),
-    "phrase_search_documents": (11,),
+    "phrase_search_documents": (11, 15),
     "pii_redact_documents": (6, 7),
     "pivot_status_by_priority": (3, 4, 5, 6, 7, 8),
-    "pmi_collocations_documents": (11,),
+    "pmi_collocations_documents": (11, 15),
     "pricing_summary": (1, 2, 3, 4, 5, 6, 7, 8),
     "psi_drift_orders": (10, 14),
     "python_datasource_synthetic": (12,),
-    "python_stream_datasource_synthetic": (11,),
-    "quality_classifier_documents": (11,),
+    "python_stream_datasource_synthetic": (11, 15),
+    "quality_classifier_documents": (11, 15),
     "quality_score_documents": (2, 3, 4, 5, 6, 7, 8, 9),
     "quality_train_score_documents": (13,),
     "quantiles_totalprice": (2, 3, 4, 5, 6, 7, 8, 9),
     "range_join_events_within_hour": (6, 7, 8, 9),
     "recode_event_types": (2, 3, 4, 5, 6, 7, 8),
     "recrawl_select_documents": (12,),
-    "redirect_resolve_documents": (11,),
+    "redirect_resolve_documents": (11, 15),
     "repetition_stats_documents": (10, 14),
-    "resample_fill_events": (11,),
+    "resample_fill_events": (11, 15),
     "reservoir_sample_orders": (13,),
     "resize_images_documents": (7, 8),
     "resize_images_gif_documents": (13,),
@@ -249,10 +249,10 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "resize_images_png_documents": (8, 9),
     "resize_images_tiff_documents": (14,),
     "resolve_fk_required_routing": (2, 3, 4, 5, 6, 7, 8, 9),
-    "retention_cohorts_events": (11,),
+    "retention_cohorts_events": (11, 15),
     "rfm_segments_orders": (10, 14),
     "robots_filter_documents": (10, 14),
-    "robots_wildcard_documents": (11,),
+    "robots_wildcard_documents": (11, 15),
     "rolling_7d_revenue": (12,),
     "rollup_revenue_year_priority": (10, 14),
     "scd2_customer_status": (10, 14),
@@ -263,38 +263,38 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "session_concurrency_events": (13,),
     "session_window_events": (3, 4, 5, 6, 7, 8),
     "setops_customer_status": (3, 4, 5, 6),
-    "sink_roundtrip_orders": (3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14),
-    "sitemap_ingest_documents": (11,),
+    "sink_roundtrip_orders": (3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15),
+    "sitemap_ingest_documents": (11, 15),
     "skew_profile_events": (9, 13),
     "split_sentences_documents": (12,),
-    "sql_lateral_top2_nations": (11,),
+    "sql_lateral_top2_nations": (11, 15),
     "sql_monthly_order_trend": (2, 3, 4, 5, 6),
-    "sql_popularity_correlation": (11,),
-    "sql_recursive_halving_depth": (11,),
+    "sql_popularity_correlation": (11, 15),
+    "sql_recursive_halving_depth": (11, 15),
     "sql_revenue_by_nation": (3, 4, 5, 6, 7, 8, 9),
-    "sql_udtf_word_bigrams": (11,),
-    "sql_variant_props": (11,),
+    "sql_udtf_word_bigrams": (11, 15),
+    "sql_variant_props": (11, 15),
     "star_fact_resolution": (1, 2, 3, 4, 5, 6, 7, 8, 9),
-    "stratified_sample_documents": (11,),
+    "stratified_sample_documents": (11, 15),
     "streaming_dedup_events": (8, 9),
-    "streaming_dedup_watermark_events": (11,),
+    "streaming_dedup_watermark_events": (11, 15),
     "streaming_heavy_hitters_events": (9, 13),
     "streaming_hourly_event_counts": (3, 5, 6, 7, 8, 9),
-    "streaming_interval_join_events": (11,),
-    "streaming_interval_join_full_outer_events": (11,),
-    "streaming_interval_join_outer_events": (11,),
+    "streaming_interval_join_events": (11, 15),
+    "streaming_interval_join_full_outer_events": (11, 15),
+    "streaming_interval_join_outer_events": (11, 15),
     "streaming_interval_join_semi_events": (9, 13),
-    "streaming_sliding_event_counts": (11,),
-    "streaming_static_join_events": (11,),
+    "streaming_sliding_event_counts": (11, 15),
+    "streaming_static_join_events": (11, 15),
     "streaming_user_sessions": (9, 13),
-    "streaming_versioned_sink_events": (11,),
+    "streaming_versioned_sink_events": (11, 15),
     "substring_dedup_documents": (8, 9),
     "summary_stats_lineitem": (1, 2, 3, 4, 5, 6, 7, 8),
     "textrank_fixed_point_documents": (9, 13),
     "tfidf_documents": (3, 4, 5, 6, 7, 8, 9),
     "tfrecord_roundtrip_documents": (13,),
     "tiff_decode_documents": (14,),
-    "token_budget_sample_documents": (11,),
+    "token_budget_sample_documents": (11, 15),
     "token_stats_documents": (2, 3, 4, 5, 6, 7, 8),
     "top3_customers_per_segment": (3, 4, 5, 6),
     "top_customers_by_revenue": (1, 2, 3, 4, 5, 6, 7, 8, 9),
@@ -321,20 +321,20 @@ _WINDOW_HISTORY: dict[str, tuple[int, ...]] = {
     "tpch_q8_market_share": (12,),
     "tpch_q9_product_type_profit": (12,),
     "training_export_documents": (6, 7),
-    "transitions_events": (11,),
+    "transitions_events": (11, 15),
     "triangles_copurchase_lineitem": (10, 14),
     "unicode_nfc_documents": (9, 13),
     "unpivot_lineitem_metrics": (10, 14),
     "upsert_dim_incremental": (2, 3, 4, 5, 6, 7, 8, 9),
     "url_blocklist_filter_documents": (12,),
-    "url_dedup_documents": (11,),
+    "url_dedup_documents": (11, 15),
     "url_normalize_documents": (10, 14),
     "value_counts_event_type": (2, 3, 4, 5),
     "versioned_timetravel_orders": (13,),
     "video_demux_documents": (7, 8, 9),
-    "warc_gzip_ingest_documents": (10,),
-    "warc_http_encoded_ingest_documents": (11,),
-    "warc_ingest_documents": (10,),
+    "warc_gzip_ingest_documents": (10, 15),
+    "warc_http_encoded_ingest_documents": (11, 15),
+    "warc_ingest_documents": (10, 15),
     "warc_pdf_extract_documents": (13,),
     "warc_revisit_dedup_documents": (12,),
     "warc_zst_ingest_documents": (14,),

@@ -534,3 +534,68 @@ _PAIR_FAMILY_EXCHANGES = {
 def test_pair_family_exchange_counts(spark, caller):
     final = _final(_pair_family(spark)[caller]())
     assert final.count("Exchange") == _PAIR_FAMILY_EXCHANGES[caller], final
+
+
+def _prefix_family(spark):
+    from workshoop2_etl_spark.operators.ids import assign_global_ids
+    from workshoop2_etl_spark.operators.quality import ks_two_sample
+    from workshoop2_etl_spark.operators.timeseries import concurrency_profile
+    from workshoop2_etl_spark.sources.readers import read_parquet
+
+    docs = read_parquet(spark, f"{SF}/documents.parquet")
+    orders = read_parquet(spark, f"{SF}/orders.parquet")
+
+    def entry(name):
+        return lambda: q(name)(spark, SF)
+
+    return {
+        "assign_global_ids": lambda: assign_global_ids(
+            docs, "doc_id", num_partitions=8
+        ),
+        "concurrency_profile": lambda: concurrency_profile(
+            orders.select(
+                F.col("o_orderdate").alias("s"),
+                F.date_add("o_orderdate", 30).alias("e"),
+            ),
+            start_col="s",
+            end_col="e",
+            num_partitions=8,
+        ),
+        "ks_two_sample": lambda: ks_two_sample(
+            orders, "o_totalprice", F.col("o_orderpriority") == "1-URGENT",
+            num_partitions=5,
+        ),
+        "global_ids_documents": entry("global_ids_documents"),
+        "quantiles_totalprice": entry("quantiles_totalprice"),
+        "winsorize_orders_totalprice": entry("winsorize_orders_totalprice"),
+        "ks_drift_orders": entry("ks_drift_orders"),
+        "session_concurrency_events": entry("session_concurrency_events"),
+    }
+
+
+# (Exchange count, ReusedExchange present) of the AQE final plans,
+# read before the three callers were moved onto ids.running_sums and
+# unchanged by that move. Where the offsets branch reads the range
+# exchange of the running-sum branch, it must keep doing so. The bare
+# assign_global_ids call keeps every documents column, which column
+# pruning strips from the offsets branch only, so its two range
+# exchanges differ and nothing is reused (see running_sums).
+_PREFIX_FAMILY_PLANS = {
+    "assign_global_ids": (5, False),
+    "concurrency_profile": (7, True),
+    "ks_two_sample": (12, True),
+    "global_ids_documents": (6, True),
+    "quantiles_totalprice": (11, True),
+    "winsorize_orders_totalprice": (12, True),
+    "ks_drift_orders": (12, True),
+    "session_concurrency_events": (34, True),
+}
+
+
+@pytest.mark.parametrize("caller", sorted(_PREFIX_FAMILY_PLANS))
+def test_prefix_family_exchange_counts(spark, caller):
+    exchanges, reused = _PREFIX_FAMILY_PLANS[caller]
+    final = _final(_prefix_family(spark)[caller]())
+    assert final.count("Exchange") == exchanges, final
+    if reused:
+        assert "ReusedExchange" in final, final

@@ -62,42 +62,6 @@ def test_star_pipeline_end_to_end(spark):
     assert set(fact.columns) == {"song_id", "artist_id", "year"}
 
 
-def test_build_dim_hash_strategy(spark):
-    from pyspark.sql import functions as F
-    src = spark.createDataFrame(
-        [("a",), ("b",), ("a",), (None,)], "nk string"
-    )
-    dim = build_dim(src, ["nk"], "id", key_strategy="hash")
-    rows = {r["nk"]: r["id"] for r in dim.collect()}
-    assert set(rows) == {"a", "b"}
-    # ids are the content hash — stable across reruns and cluster sizes
-    expected = {
-        r["nk"]: r["h"]
-        for r in spark.createDataFrame([("a",), ("b",)], "nk string")
-        .select("nk", F.xxhash64("nk").alias("h"))
-        .collect()
-    }
-    assert rows == expected
-
-
-def test_upsert_dim_hash_strategy_keeps_existing(spark):
-    from pyspark.sql import functions as F
-    existing = spark.createDataFrame([(999, "a")], "id long, nk string")
-    src = spark.createDataFrame([("a",), ("b",)], "nk string")
-    out = {r["nk"]: r["id"] for r in
-           upsert_dim(existing, src, ["nk"], "id", key_strategy="hash").collect()}
-    assert out["a"] == 999  # existing id preserved
-    hb = spark.range(1).select(F.xxhash64(F.lit("b")).alias("h")).collect()[0]["h"]
-    assert out["b"] == hb
-
-
-def test_key_strategy_rejects_unknown(spark):
-    import pytest
-    src = spark.createDataFrame([("a",)], "nk string")
-    with pytest.raises(ValueError, match="key_strategy"):
-        build_dim(src, ["nk"], "id", key_strategy="bogus")
-
-
 def test_scd2_history_collapses_runs(spark):
     from datetime import date
 

@@ -165,9 +165,8 @@ def quantiles_ranked(
     100 TB it simply does not complete. This form keeps
     ``quantile_cont`` semantics but distributes the order statistic:
 
-    1. global ranks via the ids.py two-phase range exchange
-       (:func:`..ids.assign_global_ids` — range-partitioned local
-       sorts + a P-row prefix-sum, never a single-partition sort);
+    1. global ranks via :func:`..ids.assign_global_ids` (the
+       range-partition prefix sum, never a single-partition sort);
     2. the ≤ 2·len(probs) boundary ranks ``floor/ceil(p·(n−1))``
        computed IN-PLAN from a 1-row count (no driver collect) and
        broadcast onto the ranked rows — one hash-join scan;

@@ -30,10 +30,6 @@ from pyspark.sql import functions as F
 
 from workshoop2_etl_spark.functions.text import normalize_join_keys
 
-#: pandas uses a Categorical {left_only, right_only, both}; the engine
-#: uses plain strings with the same vocabulary.
-INDICATOR_VALUES = ("left_only", "right_only", "both")
-
 
 def full_outer_with_indicator(
     left: DataFrame,

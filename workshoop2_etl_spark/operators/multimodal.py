@@ -2433,7 +2433,6 @@ def _encode_hold(pred: int, idx: int) -> tuple[tuple[int, int], int]:
 #: The decoded signal is therefore amp, amp+7, amp+6, amp+7, amp+7, …
 #: — a REAL adaptive-codec trace whose every sample is closed-form,
 #: which is what lets the DuckDB oracle replay RMS exactly.
-_ADPCM_WARMUP = (4, 8, 0)
 _ADPCM_OFFSETS = (0, 7, 6, 7)  # sample i offset; i>=3 stays +7
 
 
@@ -2623,16 +2622,6 @@ def _flac_read_utf8(r: _BitReader) -> int:
     for _ in range(n_more):
         out = (out << 6) | (r.read(8) & 0x3F)
     return out
-
-
-#: FIXED-predictor coefficients, order 0-4 (spec §9.2.1).
-_FLAC_FIXED = {
-    0: (),
-    1: (1,),
-    2: (2, -1),
-    3: (3, -3, 1),
-    4: (4, -6, 4, -1),
-}
 
 
 def _rice_write(w: _BitWriter, residual: list[int], param: int) -> None:

@@ -26,10 +26,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-REPORT_COLS = ("check", "target", "n_bad", "metric", "threshold", "ok")
+from workshoop2_etl_spark.operators.ids import running_sums
 
 
 def _finish(df: DataFrame, check: str, target: str, threshold: float) -> DataFrame:
@@ -663,22 +663,15 @@ def ks_two_sample(
     score: D = sup_x |F_a(x) − F_b(x)|, computed over EVERY distinct
     value (no binning, no approximation).
 
-    Scalable shape: the empirical CDFs need a global prefix sum over
-    value-ordered distinct values — the naive window is a
-    single-partition sort, so this runs the same two-phase scheme as
-    ``ids.assign_global_ids``: range-repartition the distinct-value
-    aggregate, per-partition running sums, then a P-row offsets
-    branch (partition subtotals, prefix-summed on ≤P rows) broadcast
-    back. One data-sized shuffle total; the offsets branch reuses the
-    same range exchange.
+    Scalable shape: the empirical CDFs are global prefix sums of the
+    per-value counts over value-ordered distinct values —
+    ``ids.running_sums``, never a single-partition sort.
 
     Returns ONE row: ``n_a``, ``n_b`` (long), ``ks_stat`` (double —
     the per-value D values are exact rationals evaluated identically
     on any engine, so the max compares bit-equal), ``ks_at`` (the
     smallest value achieving the max, deterministic under ties).
     """
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
     flag = group_col if not isinstance(group_col, str) else F.col(group_col)
     agg = (
         df.select(F.col(value_col).alias("__v"), flag.alias("__g"))
@@ -689,60 +682,22 @@ def ks_two_sample(
             F.sum((~F.col("__g")).cast("long")).alias("__cb"),
         )
     )
-    local = (
-        agg.repartitionByRange(n, F.col("__v"))
-        .withColumn("__pid", F.spark_partition_id())
-        .withColumn(
-            "__ra",
-            F.sum("__ca").over(
-                Window.partitionBy("__pid").orderBy("__v")
-            ),
-        )
-        .withColumn(
-            "__rb",
-            F.sum("__cb").over(
-                Window.partitionBy("__pid").orderBy("__v")
-            ),
-        )
-    )
-    offsets = (
-        local.groupBy("__pid")
-        .agg(F.sum("__ca").alias("__sa"), F.sum("__cb").alias("__sb"))
-        .coalesce(1)
-        .select(
-            "__pid",
-            F.coalesce(
-                F.sum("__sa").over(
-                    Window.orderBy("__pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).alias("__oa"),
-            F.coalesce(
-                F.sum("__sb").over(
-                    Window.orderBy("__pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).alias("__ob"),
-        )
-    )
     totals = agg.agg(
         F.sum("__ca").cast("long").alias("n_a"),
         F.sum("__cb").cast("long").alias("n_b"),
     )
     cdf = (
-        local.join(F.broadcast(offsets), "__pid")
+        running_sums(
+            agg, ["__v"], {"__ra": F.col("__ca"), "__rb": F.col("__cb")},
+            num_partitions=num_partitions,
+        )
         .crossJoin(F.broadcast(totals))
         .select(
             "__v",
             "n_a",
             "n_b",
             F.abs(
-                (F.col("__oa") + F.col("__ra")) / F.col("n_a")
-                - (F.col("__ob") + F.col("__rb")) / F.col("n_b")
+                F.col("__ra") / F.col("n_a") - F.col("__rb") / F.col("n_b")
             ).alias("__d"),
         )
     )

@@ -24,8 +24,7 @@ dimension tables are small by construction, so the 100 TB fact scan
 never shuffles during resolution. The only caveat is the global
 ``row_number`` for key assignment: it funnels *new distinct keys*
 (not rows) through one partition; fine for real dimension
-cardinalities, and swappable for ``xxhash64(natural_key)`` keys when
-a dimension itself is huge.
+cardinalities.
 """
 
 from __future__ import annotations
@@ -42,7 +41,6 @@ def build_dim(
     surrogate_col: str,
     *,
     extra_cols: Sequence[str] = (),
-    key_strategy: str = "row_number",
 ) -> DataFrame:
     """Fresh dimension from a source: distinct non-null natural keys
     plus a surrogate id.
@@ -50,18 +48,10 @@ def build_dim(
     Mirrors what the reference's per-row ``insert_dim`` loop converges
     to (dags/merge_to_dw.py:198-251), minus arrival-order key values.
     ``extra_cols`` are carried attributes, deduplicated by first value
-    under natural-key ordering.
-
-    ``key_strategy`` picks the surrogate assignment:
-
-    - ``"row_number"`` (default): dense ids 1..N ordered by natural
-      key — reference-faithful, but the global window funnels the
-      *distinct keys* through one partition. Right for true
-      dimensions (≤ millions of keys).
-    - ``"hash"``: ``xxhash64(natural_keys)`` — fully parallel, no
-      global window, stable across reruns and cluster sizes. The
-      100 TB path for high-cardinality dimensions (user ids, URLs);
-      ids are sparse 64-bit, collision odds ~n²/2⁶⁵.
+    under natural-key ordering. Surrogate ids are dense 1..N ordered
+    by natural key; the global window funnels the *distinct keys*
+    through one partition, which is right for true dimensions
+    (≤ millions of keys).
     """
     nk = list(natural_keys)
     cols = nk + list(extra_cols)
@@ -77,12 +67,6 @@ def build_dim(
         )
     else:
         distinct = distinct.distinct()
-    if key_strategy == "hash":
-        return distinct.withColumn(surrogate_col, F.xxhash64(*nk)).select(
-            surrogate_col, *cols
-        )
-    if key_strategy != "row_number":
-        raise ValueError(f"unknown key_strategy: {key_strategy!r}")
     w_key = Window.orderBy(*[F.col(k) for k in nk])
     return distinct.withColumn(surrogate_col, F.row_number().over(w_key)).select(
         surrogate_col, *cols
@@ -94,19 +78,13 @@ def upsert_dim(
     src: DataFrame,
     natural_keys: Sequence[str],
     surrogate_col: str,
-    *,
-    key_strategy: str = "row_number",
 ) -> DataFrame:
     """Insert-or-lookup, set-wise (reference S9): keys already in
     ``existing`` keep their surrogate id; new keys get fresh ids.
     Equivalent to the reference's try-INSERT-except-SELECT per row
-    (dags/merge_to_dw.py:153-170), executed as one anti-join.
-
-    ``key_strategy="row_number"`` continues dense ids after the
-    current max, ordered by natural key (global window over *new*
-    keys only); ``"hash"`` assigns ``xxhash64(natural_keys)`` with no
-    window at all — use when the dim itself is huge, paired with a
-    hash-built ``existing``."""
+    (dags/merge_to_dw.py:153-170), executed as one anti-join. New ids
+    continue densely after the current max, ordered by natural key
+    (global window over *new* keys only)."""
     nk = list(natural_keys)
     new_keys = (
         src.select(*nk)
@@ -114,13 +92,6 @@ def upsert_dim(
         .distinct()
         .join(existing.select(*nk), nk, "left_anti")
     )
-    if key_strategy == "hash":
-        assigned = new_keys.withColumn(surrogate_col, F.xxhash64(*nk)).select(
-            surrogate_col, *nk
-        )
-        return existing.select(surrogate_col, *nk).unionByName(assigned)
-    if key_strategy != "row_number":
-        raise ValueError(f"unknown key_strategy: {key_strategy!r}")
     offset = existing.agg(F.coalesce(F.max(surrogate_col), F.lit(0)).alias("m"))
     w_key = Window.orderBy(*[F.col(k) for k in nk])
     assigned = (

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from workshoop2_etl_spark.functions.text import epoch_micros
+from workshoop2_etl_spark.operators.ids import running_sums
 
 _US = 1_000_000
 
@@ -896,10 +897,8 @@ def concurrency_profile(
     ends at one instant collapse into a single net — which also
     encodes the half-open convention: an interval ending exactly when
     another starts never overlaps it). The running sum over distinct
-    boundaries then runs the same two-phase range-partition scheme as
-    ``ids.assign_global_ids``/``quality.ks_two_sample`` — NOT a
-    single-partition global window: per-partition cumsums + a P-row
-    offsets branch broadcast back.
+    boundaries is ``ids.running_sums`` — never a single-partition
+    global window.
 
     Pure integer arithmetic end to end — cross-engine exact.
 
@@ -907,8 +906,6 @@ def concurrency_profile(
     ``n_active`` long — the count active immediately AFTER the
     boundary).
     """
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
     deltas = (
         df.select(F.col(start_col).alias("__ts"), F.lit(1).alias("__d"))
         .unionByName(
@@ -918,35 +915,7 @@ def concurrency_profile(
         .groupBy("__ts")
         .agg(F.sum("__d").cast("long").alias("net"))
     )
-    local = (
-        deltas.repartitionByRange(n, F.col("__ts"))
-        .withColumn("__pid", F.spark_partition_id())
-        .withColumn(
-            "__run",
-            F.sum("net").over(Window.partitionBy("__pid").orderBy("__ts")),
-        )
-    )
-    offsets = (
-        local.groupBy("__pid")
-        .agg(F.sum("net").alias("__s"))
-        .coalesce(1)
-        .select(
-            "__pid",
-            F.coalesce(
-                F.sum("__s").over(
-                    Window.orderBy("__pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ).alias("__off"),
-        )
-    )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .select(
-            F.col("__ts").alias("ts"),
-            "net",
-            (F.col("__off") + F.col("__run")).cast("long").alias("n_active"),
-        )
-    )
+    return running_sums(
+        deltas, ["__ts"], {"n_active": F.col("net")},
+        num_partitions=num_partitions,
+    ).select(F.col("__ts").alias("ts"), "net", "n_active")

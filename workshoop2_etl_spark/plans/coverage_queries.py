@@ -1873,9 +1873,8 @@ SELECT (SELECT CAST(na AS BIGINT) FROM t) AS n_a,
 def ks_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov drift test on order totals,
     pre-1998 vs 1998+ (operators/quality.py:ks_two_sample): the
-    empirical-CDF prefix sums run the two-phase range-partition
-    scheme (per-partition running sums + a P-row offsets branch) —
-    never a single-partition global window over the data. Per-value
+    empirical-CDF prefix sums run ``ids.running_sums`` — never a
+    single-partition global window over the data. Per-value
     D is the same integer arithmetic on both engines, so the sup
     compares bit-equal unrounded."""
     from workshoop2_etl_spark.operators.quality import ks_two_sample

@@ -1248,7 +1248,7 @@ SELECT CAST((SELECT count(*) FROM sess) AS BIGINT) AS n_sessions,
 def session_concurrency_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak concurrent sessions: 30-minute-gap sessions swept as
     half-open intervals (+1/−1 boundaries, exact integer running sum
-    via the two-phase prefix scheme — never a sampled-instants
+    via ``ids.running_sums`` — never a sampled-instants
     approximation or a single-partition window;
     operators/timeseries.py:concurrency_profile). Reports session
     count, distinct boundaries, the maximum concurrency, and the

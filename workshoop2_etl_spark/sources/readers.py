@@ -8,7 +8,7 @@ slices and forces a full pre-scan at 100 TB).
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Mapping
+from collections.abc import Callable, Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -349,13 +349,8 @@ def read_avro(
     schema: T.StructType | None = None,
 ) -> DataFrame:
     """Avro object-container scan (S3 sibling; see
-    ``sources/avro.py`` for why the engine carries its own codec).
-
-    Distributed shape: a ``binaryFile`` scan lists and reads the
-    ``*.avro`` files executor-side, and a per-file Arrow kernel
-    decodes each container where its scan task runs — the file is
-    the unit of parallelism (exactly ``spark-avro``'s split story
-    for non-splittable codecs), and blob bytes never shuffle.
+    ``sources/avro.py`` for why the engine carries its own codec),
+    one container per file through :func:`read_container_files`.
 
     ``schema=None`` peeks ONE file header driver-side (local
     filesystem — this container's scope; on shared storage pass the
@@ -386,21 +381,40 @@ def read_avro(
         avro_schema, _codec, _sync, _pos = read_header(head)
         schema = spark_schema_of(avro_schema)
 
+    return read_container_files(
+        spark, path, lambda blob: decode_pandas(blob, schema)[0], schema,
+        ext="avro",
+    )
+
+
+def read_container_files(
+    spark: SparkSession,
+    path: str,
+    decode: Callable[[bytes], object],
+    schema: T.StructType,
+    *,
+    ext: str,
+) -> DataFrame:
+    """Container-file scan shared by the Avro, TFRecord and XML
+    readers: a ``binaryFile`` scan lists and reads the ``*.{ext}``
+    files executor-side, and ``decode(blob) -> pandas.DataFrame``
+    (rows in ``schema``) runs per file in a ``mapInPandas`` kernel
+    where its scan task runs — the file is the unit of parallelism
+    (``spark-avro``'s split story for non-splittable codecs), and
+    blob bytes never shuffle."""
     blobs = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.avro")
+        .option("pathGlobFilter", f"*.{ext}")
         .load(path)
         .select("content")
     )
-    target = schema
 
     def _decode(it):
         for pdf in it:
             for blob in pdf["content"]:
-                out, _ = decode_pandas(bytes(blob), target)
-                yield out
+                yield decode(bytes(blob))
 
-    return blobs.mapInPandas(_decode, target)
+    return blobs.mapInPandas(_decode, schema)
 
 
 def jdbc_read_options(

@@ -23,11 +23,11 @@ the feature key for that row (the TF-ecosystem convention for
 missing features); NULL array ELEMENTS are refused (TF lists cannot
 hold holes). Anything else refuses with the type named.
 
-Shapes mirror the Avro pair: the writer folds each partition into
-ONE shard via a ``mapInPandas`` iterator and hands (file_no, blob)
-to the blob sink; the reader is a ``binaryFile`` scan + per-file
-Arrow decode kernel that VERIFIES both CRCs per record (a truncated
-or bit-flipped shard fails loudly, never yields garbage rows).
+Shapes are the Avro pair's: the writer encodes ONE shard per
+partition through ``writers.write_container_files``; the reader
+decodes each shard through ``readers.read_container_files`` and
+VERIFIES both CRCs per record (a truncated or bit-flipped shard
+fails loudly, never yields garbage rows).
 TFRecord carries no schema, so the reader REQUIRES a declared one —
 there is nothing to infer from.
 
@@ -366,54 +366,38 @@ def _validate(schema: T.StructType) -> None:
 
 
 def write_tfrecord(df: DataFrame, out_dir: str) -> int:
-    """One ``.tfrecord`` shard per non-empty partition (mapInPandas
-    partition fold → blob sink, the Avro-sink shape). Deterministic
-    for a given partitioning: features key-sorted, no timestamps, no
-    randomness. Returns the number of shards written."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    from workshoop2_etl_spark.sources.writers import write_binary_files
+    """One ``.tfrecord`` shard per non-empty partition through
+    ``writers.write_container_files``. Deterministic for a given
+    partitioning: features key-sorted, no timestamps, no randomness.
+    Returns the number of shards written."""
+    from workshoop2_etl_spark.sources.writers import write_container_files
 
     _validate(df.schema)
     fields = df.schema.fields
 
-    def _encode(it):
-        parts = []
-        file_no = None
-        for pdf in it:
-            if len(pdf):
-                if file_no is None:
-                    file_no = int(pdf["__pid"].iloc[0])
-                parts.append(pdf.drop(columns="__pid"))
-        if file_no is None:
-            return
-        whole = parts[0] if len(parts) == 1 else pd.concat(parts)
-        blob = b"".join(
+    def _encode(pdf, _file_no: int) -> bytes:
+        return b"".join(
             _frame_record(_example_bytes(row, fields))
-            for row in whole.to_dict("records")
+            for row in pdf.to_dict("records")
         )
-        yield pd.DataFrame({"file_no": [file_no], "content": [blob]})
 
-    blobs = df.withColumn("__pid", F.spark_partition_id()).mapInPandas(
-        _encode, "file_no long, content binary"
-    )
-    return write_binary_files(blobs, out_dir, ext="tfrecord")
+    return write_container_files(df, out_dir, _encode, ext="tfrecord")
 
 
 def read_tfrecord(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> DataFrame:
-    """Distributed TFRecord scan: ``binaryFile`` over the shards +
-    a per-file Arrow kernel that walks the CRC-verified framing and
-    decodes each Example against the DECLARED schema (TFRecord
+    """Distributed TFRecord scan: ``readers.read_container_files``
+    over the shards, each walked through its CRC-verified framing and
+    decoded Example by Example against the DECLARED schema (TFRecord
     carries none). Missing features read as NULL (scalar) / NULL
     (array); kind mismatches (e.g. a bytes feature declared long)
     raise with the column named. Scalar columns take the list's
     single value; a multi-value list under a scalar column raises
     (silent truncation would drop data)."""
     import pandas as pd
+
+    from workshoop2_etl_spark.sources.readers import read_container_files
 
     _validate(schema)
     fields = schema.fields
@@ -431,70 +415,61 @@ def read_tfrecord(
         else:
             kinds[f.name] = "bytes"
 
-    blobs = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.tfrecord")
-        .load(path)
-        .select("content")
-    )
-
-    def _decode(it):
-        for pdf in it:
-            data: dict[str, list] = {f.name: [] for f in fields}
-            for blob in pdf["content"]:
-                for rec in split_tfrecords(bytes(blob)):
-                    row = _example_to_row(rec)
-                    for f in fields:
-                        got = row.get(f.name)
-                        if got is None:
-                            data[f.name].append(None)
-                            continue
-                        kind, vals = got
-                        if kind != kinds[f.name]:
-                            raise ValueError(
-                                f"feature {f.name!r} is {kind} on the "
-                                f"wire but declared "
-                                f"{f.dataType.simpleString()}"
-                            )
-                        if kind == "bytes":
-                            vals = [
-                                v.decode("utf-8")
-                                if isinstance(
-                                    (
-                                        f.dataType.elementType
-                                        if isinstance(
-                                            f.dataType, T.ArrayType
-                                        )
-                                        else f.dataType
-                                    ),
-                                    T.StringType,
-                                )
-                                else bytes(v)
-                                for v in vals
-                            ]
-                        if isinstance(f.dataType, T.ArrayType):
-                            data[f.name].append(list(vals))
-                        elif len(vals) == 1:
-                            data[f.name].append(vals[0])
-                        else:
-                            raise ValueError(
-                                f"feature {f.name!r} holds "
-                                f"{len(vals)} values but is declared "
-                                "scalar"
-                            )
-            out = {}
+    def _decode(blob: bytes) -> pd.DataFrame:
+        data: dict[str, list] = {f.name: [] for f in fields}
+        for rec in split_tfrecords(blob):
+            row = _example_to_row(rec)
             for f in fields:
-                t = type(f.dataType)
-                if t is T.LongType:
-                    out[f.name] = pd.array(data[f.name], dtype="Int64")
-                elif t is T.IntegerType:
-                    out[f.name] = pd.array(data[f.name], dtype="Int32")
-                elif t is T.DoubleType:
-                    out[f.name] = pd.array(data[f.name], dtype="float64")
-                elif t is T.FloatType:
-                    out[f.name] = pd.array(data[f.name], dtype="float32")
+                got = row.get(f.name)
+                if got is None:
+                    data[f.name].append(None)
+                    continue
+                kind, vals = got
+                if kind != kinds[f.name]:
+                    raise ValueError(
+                        f"feature {f.name!r} is {kind} on the "
+                        f"wire but declared "
+                        f"{f.dataType.simpleString()}"
+                    )
+                if kind == "bytes":
+                    vals = [
+                        v.decode("utf-8")
+                        if isinstance(
+                            (
+                                f.dataType.elementType
+                                if isinstance(
+                                    f.dataType, T.ArrayType
+                                )
+                                else f.dataType
+                            ),
+                            T.StringType,
+                        )
+                        else bytes(v)
+                        for v in vals
+                    ]
+                if isinstance(f.dataType, T.ArrayType):
+                    data[f.name].append(list(vals))
+                elif len(vals) == 1:
+                    data[f.name].append(vals[0])
                 else:
-                    out[f.name] = pd.Series(data[f.name], dtype="object")
-            yield pd.DataFrame(out)
+                    raise ValueError(
+                        f"feature {f.name!r} holds "
+                        f"{len(vals)} values but is declared "
+                        "scalar"
+                    )
+        out = {}
+        for f in fields:
+            t = type(f.dataType)
+            if t is T.LongType:
+                out[f.name] = pd.array(data[f.name], dtype="Int64")
+            elif t is T.IntegerType:
+                out[f.name] = pd.array(data[f.name], dtype="Int32")
+            elif t is T.DoubleType:
+                out[f.name] = pd.array(data[f.name], dtype="float64")
+            elif t is T.FloatType:
+                out[f.name] = pd.array(data[f.name], dtype="float32")
+            else:
+                out[f.name] = pd.Series(data[f.name], dtype="object")
+        return pd.DataFrame(out)
 
-    return blobs.mapInPandas(_decode, schema)
+    return read_container_files(spark, path, _decode, schema, ext="tfrecord")

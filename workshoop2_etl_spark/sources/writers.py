@@ -9,7 +9,7 @@ files, and parallel writers per partition.
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame
 
@@ -96,13 +96,9 @@ def write_avro(
     codec: str = "deflate",
 ) -> int:
     """Avro object-container sink (S6 sibling; see
-    ``sources/avro.py``): one container file per non-empty partition,
-    encoded executor-side in a ``mapInPandas`` fold over the whole
-    partition (the iterator form — batches concatenate into ONE blob,
-    so file count == partition count, not Arrow-batch count) and
-    written through :func:`write_binary_files`. ``file_no`` is the
-    partition id — unique by construction, so the sink's uniqueness
-    guard is a no-op check. Returns the number of files written.
+    ``sources/avro.py``): one container file per non-empty partition
+    through :func:`write_container_files`. Returns the number of
+    files written.
 
     Deterministic: the sync marker derives from (schema, partition
     id), never a random value — re-running the same frame writes
@@ -113,38 +109,20 @@ def write_avro(
         encode_pandas,
     )
 
-    from pyspark.sql import functions as F
-
     avro_schema_json(df.schema)  # validate the lattice up front
     if codec not in ("null", "deflate"):
         # refuse driver-side, before any job starts — an executor-side
         # raise would surface as an opaque PythonException mid-stage
         raise ValueError(f"unsupported Avro codec: {codec!r}")
     schema = df.schema
-
-    import pandas as pd
-
-    def _encode(it):
-        parts: list = []
-        file_no = None
-        for pdf in it:
-            if len(pdf):
-                if file_no is None:
-                    file_no = int(pdf["__pid"].iloc[0])
-                parts.append(pdf.drop(columns="__pid"))
-        if file_no is None:
-            return
-        whole = parts[0] if len(parts) == 1 else pd.concat(parts)
-        blob = encode_pandas(
-            whole, schema, codec=codec, file_no=file_no
-        )
-        yield pd.DataFrame({"file_no": [file_no], "content": [blob]})
-
-    blobs = (
-        df.withColumn("__pid", F.spark_partition_id())
-        .mapInPandas(_encode, "file_no long, content binary")
+    return write_container_files(
+        df,
+        out_dir,
+        lambda pdf, file_no: encode_pandas(
+            pdf, schema, codec=codec, file_no=file_no
+        ),
+        ext="avro",
     )
-    return write_binary_files(blobs, out_dir, ext="avro")
 
 
 def timestamped_path(base: str, run_ts: str, *, ext: str = "parquet") -> str:
@@ -583,6 +561,46 @@ def overwrite_partitions_dynamic(
         .partitionBy(*partition_by)
         .parquet(path)
     )
+
+
+def write_container_files(
+    df: DataFrame,
+    out_dir: str,
+    encode: Callable[..., bytes],
+    *,
+    ext: str,
+) -> int:
+    """Container-file sink shared by the Avro, TFRecord and XML
+    writers: one ``{ext}`` file per non-empty partition, encoded
+    executor-side by ``encode(pdf, file_no) -> bytes`` in a
+    ``mapInPandas`` fold over the whole partition (the iterator form —
+    batches concatenate into ONE blob, so file count == partition
+    count, not Arrow-batch count) and written through
+    :func:`write_binary_files`. ``file_no`` is the partition id —
+    unique by construction, so the sink's uniqueness guard is a no-op
+    check. Returns the number of files written."""
+    import pandas as pd
+
+    from pyspark.sql import functions as F
+
+    def _fold(it):
+        parts: list = []
+        file_no = None
+        for pdf in it:
+            if len(pdf):
+                if file_no is None:
+                    file_no = int(pdf["__pid"].iloc[0])
+                parts.append(pdf.drop(columns="__pid"))
+        if file_no is None:
+            return
+        whole = parts[0] if len(parts) == 1 else pd.concat(parts)
+        blob = encode(whole, file_no)
+        yield pd.DataFrame({"file_no": [file_no], "content": [blob]})
+
+    blobs = df.withColumn("__pid", F.spark_partition_id()).mapInPandas(
+        _fold, "file_no long, content binary"
+    )
+    return write_binary_files(blobs, out_dir, ext=ext)
 
 
 def write_binary_files(

@@ -18,10 +18,9 @@ job starts. NULL values round-trip as an ABSENT element; empty
 string is an empty element — the distinction the five-entity escape
 preserves.
 
-Distributed shape (the Avro/TFRecord layout): the sink encodes one
-file per non-empty partition in a ``mapInPandas`` partition fold;
-the scan is ``binaryFile`` + a per-file Arrow decode kernel — files
-are the unit of parallelism and blob bytes never shuffle.
+Distributed shape (shared with Avro/TFRecord): one file per
+non-empty partition through ``writers.write_container_files``, one
+decode per file through ``readers.read_container_files``.
 
 Tolerance contract on read (the ``parse_wiki_pages`` convention):
 a row element missing a column yields NULL for it; bytes outside
@@ -33,7 +32,6 @@ from __future__ import annotations
 
 import datetime
 import re
-from collections.abc import Iterator
 from decimal import Decimal
 
 import pandas as pd
@@ -211,39 +209,22 @@ def write_xml(
     row_tag: str = "row",
     root_tag: str = "rows",
 ) -> int:
-    """XML sink: one document per non-empty partition, encoded
-    executor-side in a ``mapInPandas`` partition fold and written
-    through ``write_binary_files`` (the Avro/TFRecord sink shape —
-    ``file_no`` = partition id, unique by construction). Returns the
-    number of files written. Schema/lattice validation happens
-    driver-side before any job starts."""
-    from pyspark.sql import functions as F
-
-    from workshoop2_etl_spark.sources.writers import write_binary_files
+    """XML sink: one document per non-empty partition through
+    ``writers.write_container_files``. Returns the number of files
+    written. Schema/lattice validation happens driver-side before any
+    job starts."""
+    from workshoop2_etl_spark.sources.writers import write_container_files
 
     schema = df.schema
     _check_schema(schema, row_tag)
-
-    def _encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts: list = []
-        file_no = None
-        for pdf in it:
-            if len(pdf):
-                if file_no is None:
-                    file_no = int(pdf["__pid"].iloc[0])
-                parts.append(pdf.drop(columns="__pid"))
-        if file_no is None:
-            return
-        whole = parts[0] if len(parts) == 1 else pd.concat(parts)
-        blob = encode_xml_pandas(
-            whole, schema, row_tag=row_tag, root_tag=root_tag
-        )
-        yield pd.DataFrame({"file_no": [file_no], "content": [blob]})
-
-    blobs = df.withColumn("__pid", F.spark_partition_id()).mapInPandas(
-        _encode, "file_no long, content binary"
+    return write_container_files(
+        df,
+        out_dir,
+        lambda pdf, _file_no: encode_xml_pandas(
+            pdf, schema, row_tag=row_tag, root_tag=root_tag
+        ),
+        ext="xml",
     )
-    return write_binary_files(blobs, out_dir, ext="xml")
 
 
 def read_xml(
@@ -253,24 +234,16 @@ def read_xml(
     *,
     row_tag: str = "row",
 ) -> DataFrame:
-    """Declared-schema XML scan: ``binaryFile`` lists and reads the
-    ``*.xml`` files executor-side; a per-file Arrow kernel extracts
-    row elements where the scan task runs (files are the unit of
-    parallelism; blobs never shuffle). The schema is REQUIRED — XML
+    """Declared-schema XML scan: one document per file through
+    ``readers.read_container_files``. The schema is REQUIRED — XML
     text carries no trustworthy type metadata to infer."""
+    from workshoop2_etl_spark.sources.readers import read_container_files
+
     _check_schema(schema, row_tag)
-    blobs = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.xml")
-        .load(path)
-        .select("content")
+    return read_container_files(
+        spark,
+        path,
+        lambda blob: decode_xml_pandas(blob, schema, row_tag=row_tag),
+        schema,
+        ext="xml",
     )
-
-    def _decode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for blob in pdf["content"]:
-                yield decode_xml_pandas(
-                    bytes(blob), schema, row_tag=row_tag
-                )
-
-    return blobs.mapInPandas(_decode, schema)
