@@ -85,44 +85,6 @@ def test_jsonl_failfast_raises_on_corrupt_and_permissive_tolerates(spark, tmp_pa
     assert vals == [1, 3, None]
 
 
-def test_read_parquet_evolving_merges_and_conforms(spark, tmp_path):
-    from workshoop2_etl_spark.sources.readers import read_parquet_evolving
-
-    g1 = str(tmp_path / "gen1")
-    g2 = str(tmp_path / "gen2")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id int, name string"
-    ).write.parquet(g1)
-    spark.createDataFrame(
-        [(3, "c", 9.5)], "id int, name string, score double"
-    ).write.parquet(g2)
-
-    # mergeSchema alone: union of fields, NULL score for gen1 rows
-    merged = read_parquet_evolving(spark, [g1, g2])
-    assert set(merged.columns) == {"id", "name", "score"}
-    by_id = {r["id"]: r for r in merged.collect()}
-    assert by_id[1]["score"] is None and by_id[3]["score"] == 9.5
-
-    # contract conformance: widen id, drop name, add missing col
-    out = read_parquet_evolving(
-        spark, [g1, g2],
-        target_schema="id long, score double, flag boolean",
-    )
-    assert [f.simpleString() for f in out.schema.fields] == [
-        "id:bigint", "score:double", "flag:boolean"
-    ]
-    assert all(r["flag"] is None for r in out.collect())
-
-
-def test_read_parquet_evolving_single_generation_noop(spark, tmp_path):
-    from workshoop2_etl_spark.sources.readers import read_parquet_evolving
-
-    p = str(tmp_path / "only")
-    spark.createDataFrame([(1, 2.0)], "a int, b double").write.parquet(p)
-    got = read_parquet_evolving(spark, [p]).collect()
-    assert [(r["a"], r["b"]) for r in got] == [(1, 2.0)]
-
-
 def test_schema_diff_classification():
     from pyspark.sql import types as T
 

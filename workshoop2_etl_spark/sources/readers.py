@@ -29,43 +29,63 @@ TESTDATA_TABLES = (
 )
 
 
-#: Driver-side schema memo for :func:`read_parquet`, keyed by
-#: ``(realpath, mtime_ns, size)`` of a single-FILE parquet path. This
-#: is METADATA caching, not result caching: any byte of the file
-#: changing invalidates the key, and the cached StructType is exactly
-#: what footer inference returned for that identical file. Measured
-#: (optimization round 14, guide §1/§5): ``spark.read.parquet(path)``
-#: re-infers the footer schema on the driver on EVERY call — 60 ms
-#: steady-state vs 8 ms with an explicit schema — and the bench's
-#: ~760 table reads per run paid it each time. At 100 TB this is the
-#: role a table format's manifest plays (guide §6); for bare paths
-#: the session-lifetime memo is the equivalent.
+#: Driver-side schema memo for :func:`read_parquet`: one entry per
+#: local path, ``{realpath: (signature, nanos_cols, schema)}``. The
+#: signature of a regular file is ``(mtime_ns, size)``; that of a
+#: directory is the sorted recursive listing ``(relpath, mtime_ns,
+#: size)`` of every file under it (``_SUCCESS``, hidden files and
+#: partition subdirectories included), see :func:`_path_signature`.
+#: This is METADATA caching, not result caching: any file under the
+#: path being added, removed or rewritten changes the signature, and
+#: the cached StructType is exactly what inference returned for that
+#: identical path state — inference is the only source of schemas.
+#: Rewriting a path replaces its entry, so the memo grows with the
+#: distinct paths read (a StructType each — KBs), not with rewrites.
+#: Measured (optimization round 14, guide §1/§5):
+#: ``spark.read.parquet(path)`` re-infers the footer schema on EVERY
+#: call — 60 ms steady-state vs 8 ms with an explicit schema — and
+#: for a directory that inference is a Spark job per read (one per
+#: table a dashboard card reads). At 100 TB this is the role a table
+#: format's manifest plays (guide §6); for bare paths the
+#: session-lifetime memo is the equivalent.
 #:
-#: Known limits (r14 ADVICE, accepted for this engine's single
-#: session factory): the key does NOT fold in session confs that can
-#: steer parquet schema inference (e.g.
+#: Known limit (r14 ADVICE, accepted for this engine's single session
+#: factory): the entry does NOT fold in session confs that can steer
+#: parquet schema inference (e.g.
 #: ``spark.sql.parquet.inferTimestampNTZ.enabled``) — a schema
 #: inferred under one conf set replays verbatim on a session where
-#: inference would differ; and the memo grows with distinct files
-#: touched over the process lifetime (entries are a StructType each —
-#: KBs; the bench touches a few dozen files). Processes that flip
-#: inference confs mid-life or stream unbounded distinct paths should
-#: clear or key-extend the memo.
-_SCHEMA_MEMO: dict[tuple[str, int, int], tuple[list[str], object]] = {}
+#: inference would differ. Processes that flip inference confs
+#: mid-life should clear or key-extend the memo.
+_SCHEMA_MEMO: dict[str, tuple[tuple, list[str], T.StructType | None]] = {}
 
 
-def _file_memo_key(path: str) -> tuple[str, int, int] | None:
-    """Memo key for a single-file path; None for dirs/globs (their
-    contents can change without the top-level stat changing)."""
+def _path_signature(path: str) -> tuple | None:
+    """State of a local parquet file or directory for ``_SCHEMA_MEMO``;
+    None (no memo, plain inference) for globs, URIs, missing paths and
+    any ``stat`` that fails during the walk."""
+    import glob
     import os
+    import stat
 
+    if "://" in path or glob.has_magic(path):
+        return None
     try:
         st = os.stat(path)
+        if stat.S_ISREG(st.st_mode):
+            return (st.st_mtime_ns, st.st_size)
+        if not stat.S_ISDIR(st.st_mode):
+            return None
+        listing, errors = [], []
+        for root, _dirs, files in os.walk(path, onerror=errors.append, followlinks=True):
+            for name in files:
+                full = os.path.join(root, name)
+                fst = os.stat(full)
+                listing.append(
+                    (os.path.relpath(full, path), fst.st_mtime_ns, fst.st_size)
+                )
     except OSError:
         return None
-    if not __import__("stat").S_ISREG(st.st_mode):
-        return None
-    return (os.path.realpath(path), st.st_mtime_ns, st.st_size)
+    return None if errors else tuple(sorted(listing))
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -81,32 +101,38 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     rebuilt into micro-precision timestamps here — the same
     truncation DuckDB applies, keeping oracle comparisons aligned.
 
-    Single-file paths without nanos columns take a memoized
-    explicit-schema fast path (see ``_SCHEMA_MEMO``): identical
-    DataFrame (the schema IS the one inference produced for this
-    exact file state), ~8× less driver work per call. Nanos-bearing
-    files keep the original inference path — the nanosAsLong
-    schema-conversion must happen inside the conf window.
+    Local files and directories without nanos columns take a memoized
+    explicit-schema fast path (see ``_SCHEMA_MEMO``, one entry per
+    path, keyed on the file's stat or the directory's listing): an
+    identical DataFrame (the schema IS the one inference produced for
+    this exact path state, partition columns included), ~8× less
+    driver work per call and, for a directory, no inference job. The
+    memo is filled only by an inferred read whose path state did not
+    change while it inferred. Nanos-bearing paths keep the inference
+    path — the nanosAsLong schema conversion must happen inside the
+    conf window — and memoize only their probed column list.
     """
-    key = _file_memo_key(path)
-    if key is not None:
-        memo = _SCHEMA_MEMO.get(key)
-        if memo is not None:
-            nanos_cols, schema = memo
-            if not nanos_cols:
-                return spark.read.schema(schema).parquet(path)
-        else:
-            nanos_cols = _nanos_timestamp_columns(path)
-            if not nanos_cols:
-                df = spark.read.parquet(path)
-                _SCHEMA_MEMO[key] = ([], df.schema)
-                return df
-            # nanos-bearing single file: memoize the probed column
-            # list (skips the pyarrow footer walk on later calls) and
-            # fall through to the conf-window slow path below.
-            _SCHEMA_MEMO[key] = (nanos_cols, None)
+    import os
+
+    sig = _path_signature(path)
+    key = os.path.realpath(path) if sig is not None else None
+    memo = _SCHEMA_MEMO.get(key)
+    if memo is not None and memo[0] == sig:
+        _, nanos_cols, schema = memo
+        if schema is not None:
+            return spark.read.schema(schema).parquet(path)
     else:
         nanos_cols = _nanos_timestamp_columns(path)
+        if key is not None and not nanos_cols:
+            df = spark.read.parquet(path)
+            if _path_signature(path) == sig:
+                _SCHEMA_MEMO[key] = (sig, [], df.schema)
+            return df
+        if key is not None:
+            # nanos-bearing path: memoize the probed column list (skips
+            # the pyarrow footer walk on later calls) and fall through
+            # to the conf-window slow path below.
+            _SCHEMA_MEMO[key] = (sig, nanos_cols, None)
     if nanos_cols:
         # Runtime SQL conf — must hold on *whatever* session the caller
         # supplies (the driver passes its own), not just the engine's
@@ -118,16 +144,16 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         # TIMESTAMP(NANOS) columns. Concurrent reads from other
         # threads during this narrow window would see the conf set —
         # acceptable for a driver-side builder API.
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prior = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
+        conf = "spark.sql.legacy.parquet.nanosAsLong"
+        prior = spark.conf.get(conf, None)
+        spark.conf.set(conf, "true")
         try:
             df = spark.read.parquet(path)
         finally:
             if prior is None:
-                spark.conf.unset(key)
+                spark.conf.unset(conf)
             else:
-                spark.conf.set(key, prior)
+                spark.conf.set(conf, prior)
     else:
         df = spark.read.parquet(path)
     for c in nanos_cols:
@@ -514,43 +540,3 @@ def load_tables(
         out[name] = df
     return out
 
-
-def read_parquet_evolving(
-    spark: SparkSession,
-    paths: list[str],
-    *,
-    target_schema=None,
-) -> DataFrame:
-    """Read parquet generations whose schemas EVOLVED (columns added
-    over time, types widened) as one DataFrame.
-
-    ``mergeSchema`` unions the footers' fields (files missing a
-    column yield NULLs for it) — the standard long-lived-table
-    situation where last year's files predate this quarter's columns.
-    Schema merging reads every footer, which is why Spark defaults it
-    OFF; this entry point makes the cost explicit and opt-in rather
-    than a session-wide default.
-
-    ``target_schema`` (StructType or DDL string) additionally
-    CONFORMS the result to a declared contract — the other half of
-    evolution, where the reader, not the files, owns the truth:
-    missing columns materialize as typed NULLs, extra columns drop,
-    every kept column casts to the declared type (widening int→long /
-    float→double; lossy casts follow Spark cast semantics). Column
-    order follows the contract, so downstream positional consumers
-    (CSV sinks, COPY loads) stay stable across generations.
-    """
-    from pyspark.sql import types as T
-
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
-    if target_schema is None:
-        return df
-    if isinstance(target_schema, str):
-        target_schema = T._parse_datatype_string(target_schema)
-    cols = []
-    for field in target_schema.fields:
-        if field.name in df.columns:
-            cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
