@@ -1,23 +1,8 @@
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
-
-# Activate the protobuf path-extension shim (vendor/README.md) BEFORE
-# any SparkSession exists: transformWithStateInPandas needs
-# google.protobuf in both the driver and the JVM-forked Python
-# workers, and the workers inherit PYTHONPATH at JVM launch. No-op
-# where a real protobuf package is installed; where neither exists
-# the gated operator keeps its documented refusal path.
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "vendor", "pbshim"))
-try:
-    from activate import activate as _pb_activate  # type: ignore
-
-    _pb_activate()
-finally:
-    sys.path.pop(0)
 
 from workshoop2_etl_spark.session import get_session
 

@@ -93,94 +93,3 @@ def test_cluster_requires_cols(spark):
     df = spark.range(10)
     with pytest.raises(ValueError, match="cluster_cols"):
         cluster_parquet(df, "/tmp/never", cluster_cols=[])
-
-
-def test_bloom_filter_prunes_point_lookup(spark):
-    """Equality probes on a scrambled high-cardinality key: min/max
-    stats are useless (every row group spans the hash domain), so any
-    pruning observed is the bloom filter's doing."""
-    import tempfile
-
-    from workshoop2_etl_spark.sources.writers import write_parquet_bloom
-
-    base = tempfile.mkdtemp(prefix="wsbloom_")
-    df = spark.range(300_000).select(
-        F.xxhash64("id").alias("k"), F.col("id").alias("v")
-    )
-    write_parquet_bloom(
-        df, os.path.join(base, "bloom"),
-        bloom_cols={"k": 300_000}, rowgroup_bytes=128 * 1024,
-    )
-    (
-        df.write.option("parquet.block.size", 128 * 1024)
-        .mode("overwrite").parquet(os.path.join(base, "plain"))
-    )
-    target = df.filter("v = 123456").select("k").collect()[0]["k"]
-
-    def scan_rows(path):
-        q = spark.read.parquet(path).filter(F.col("k") == target)
-        q.collect()
-        leaves = q._jdf.queryExecution().executedPlan().collectLeaves()
-        tot = 0
-        for i in range(leaves.size()):
-            node = leaves.apply(i)
-            if "Scan" in node.getClass().getName():
-                tot += node.metrics().apply("numOutputRows").value()
-        return tot
-
-    bloom = scan_rows(os.path.join(base, "bloom"))
-    plain = scan_rows(os.path.join(base, "plain"))
-    assert plain >= 0.9 * 300_000      # no bloom → reads ~everything
-    assert bloom * 10 <= plain         # bloom skips non-matching groups
-
-    with pytest.raises(ValueError, match="bloom_cols"):
-        write_parquet_bloom(df, os.path.join(base, "x"), bloom_cols={})
-
-
-def test_zorder_prunes_both_dimensions(spark):
-    """Z-order vs single-key sort: the sorted layout prunes only its
-    leading key; the Morton layout prunes selective filters on BOTH
-    columns (statistically — order of magnitude, not perfection)."""
-    import tempfile
-
-    from workshoop2_etl_spark.sources.writers import zorder_parquet
-
-    base = tempfile.mkdtemp(prefix="wszorder_")
-    n = 200_000
-    # two independent uniform dimensions
-    df = spark.range(n).select(
-        (F.xxhash64("id") % 100_000).alias("x"),
-        (F.xxhash64(F.col("id") + 1) % 100_000).alias("y"),
-    ).select(F.abs("x").alias("x"), F.abs("y").alias("y"))
-    zorder_parquet(
-        df, os.path.join(base, "z"), cluster_cols=["x", "y"],
-        bits=16, n_files=8, rowgroup_bytes=32 * 1024,
-    )
-    (
-        df.repartitionByRange(8, "x").sortWithinPartitions("x")
-        .write.option("parquet.block.size", 64 * 1024)
-        .mode("overwrite").parquet(os.path.join(base, "xsort"))
-    )
-
-    def scan_rows(path, col):
-        q = spark.read.parquet(path).filter(
-            (F.col(col) >= 50_000) & (F.col(col) < 51_000)  # 1% window
-        )
-        q.collect()
-        leaves = q._jdf.queryExecution().executedPlan().collectLeaves()
-        tot = 0
-        for i in range(leaves.size()):
-            node = leaves.apply(i)
-            if "Scan" in node.getClass().getName():
-                tot += node.metrics().apply("numOutputRows").value()
-        return tot
-
-    # x-sorted layout: near-perfect on x, useless on y
-    assert scan_rows(os.path.join(base, "xsort"), "x") * 10 <= n
-    assert scan_rows(os.path.join(base, "xsort"), "y") >= 0.9 * n
-    # z-order: prunes BOTH dimensions by ≥4× (statistical locality)
-    assert scan_rows(os.path.join(base, "z"), "x") * 4 <= n
-    assert scan_rows(os.path.join(base, "z"), "y") * 4 <= n
-
-    with pytest.raises(ValueError, match="exactly 2"):
-        zorder_parquet(df, os.path.join(base, "bad"), cluster_cols=["x"])

@@ -829,25 +829,6 @@ def test_corpus_diff_all_statuses(spark):
     }
 
 
-def test_lsh_tuning_monotone_and_divisor(spark):
-    from workshoop2_etl_spark.operators.dedup import lsh_tuning
-
-    import pytest as _pytest
-
-    b_lo, r_lo = lsh_tuning(0.2, 64)
-    b_hi, r_hi = lsh_tuning(0.9, 64)
-    assert b_lo * r_lo == 64 and b_hi * r_hi == 64
-    # low threshold → more, narrower bands; high → fewer, wider
-    assert b_lo > b_hi and r_lo < r_hi
-    # inflection (1/b)^(1/r) lands near the requested threshold
-    for t in (0.3, 0.5, 0.7):
-        b, r = lsh_tuning(t, 64)
-        inflect = (1.0 / b) ** (1.0 / r)
-        assert abs(inflect - t) < 0.25
-    with _pytest.raises(ValueError):
-        lsh_tuning(0.0, 64)
-
-
 def test_with_load_metrics_zero_extra_pass(spark):
     from pyspark.sql import functions as SF
 

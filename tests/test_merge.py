@@ -120,6 +120,50 @@ def test_merge_pipeline_checkpoint_roundtrip(spark, tmp_path):
     assert got == {("a", "left_only"), ("b", "both"), ("c", "right_only")}
 
 
+def test_merge_pipeline_checkpoint_read_back_fires_no_job(
+    spark, tmp_path, monkeypatch
+):
+    """The checkpoint is read back under the schema it was written
+    with: the read-back runs no schema-inference job, and its schema
+    and rows equal an inferred read of the same directory."""
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from workshoop2_etl_spark.plans.pipelines import merge_pipeline
+
+    sc = spark.sparkContext
+    read_back_jobs = []
+    original = DataFrameReader.parquet
+
+    def parquet_in_own_group(self, *paths, **options):
+        group = f"test-merge-read-back-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            return original(self, *paths, **options)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+            read_back_jobs.append(
+                len(sc.statusTracker().getJobIdsForGroup(group))
+            )
+
+    left = _mk(spark, [("a", 1), ("b", 2)], "key string, lv int")
+    right = _mk(spark, [("b", 20), ("c", 30)], "key string, rv int")
+    ckpt = str(tmp_path / "merged_ckpt")
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet_in_own_group)
+    out = merge_pipeline(left, right, ["key"], checkpoint_path=ckpt)
+    monkeypatch.undo()
+    assert read_back_jobs == [0]
+
+    inferred = spark.read.parquet(ckpt)
+    assert out.schema == inferred.schema
+    assert sorted(map(tuple, out.collect())) == sorted(
+        map(tuple, inferred.collect())
+    )
+
+
 def test_asof_join_backward_semantics(spark):
     """Exact-timestamp match counts; no prior right row → NULLs;
     latest prior right row wins."""

@@ -110,14 +110,6 @@ def test_extract_audio_features_stub(spark):
     assert {k: v.rms_profile for k, v in rows.items()} == again
 
 
-def test_timestamped_path():
-    from workshoop2_etl_spark.sources.writers import timestamped_path
-
-    assert timestamped_path("/data/merged", "20240101T020000") == \
-        "/data/merged/run_20240101T020000.parquet"
-    assert timestamped_path("s3://b/x/", "t1", ext="csv") == "s3://b/x/run_t1.csv"
-
-
 def test_synth_bmp_real_decode_roundtrip(spark):
     from workshoop2_etl_spark.operators.multimodal import (
         synthesize_media_payload,

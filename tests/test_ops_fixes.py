@@ -222,53 +222,6 @@ def test_approx_quantiles_within_rank_error(spark, sf_dir):
         assert abs(rank - p * n) <= n / 10000 + 2, (p, exact[p], approx[p])
 
 
-def test_upsert_parquet_replaces_by_key_and_keeps_rest(spark, tmp_path):
-    from workshoop2_etl_spark.sources.writers import upsert_parquet
-
-    path = str(tmp_path / "dim")
-    seed = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", 30)], "id long, v string, n long"
-    )
-    upsert_parquet(spark, seed, path, ["id"])
-    updates = spark.createDataFrame(
-        [(2, "B", 99), (4, "d", 40)], "id long, v string, n long"
-    )
-    upsert_parquet(spark, updates, path, ["id"])
-    got = sorted(
-        (r.id, r.v, r.n) for r in spark.read.parquet(path).collect()
-    )
-    assert got == [(1, "a", 10), (2, "B", 99), (3, "c", 30), (4, "d", 40)]
-
-    # schema drift must fail loudly, not silently drop columns
-    import pytest as _pytest
-
-    bad = spark.createDataFrame([(5, "e")], "id long, v string")
-    with _pytest.raises(ValueError, match="lack columns"):
-        upsert_parquet(spark, bad, path, ["id"])
-
-
-def test_upsert_parquet_recovers_stranded_backup(spark, tmp_path):
-    """A crash between the two swap renames strands the base dataset
-    at {path}__old with nothing at {path}; the next call must recover
-    the backup before merging instead of writing only the updates."""
-    import os
-
-    from workshoop2_etl_spark.sources.writers import upsert_parquet
-
-    path = str(tmp_path / "dim")
-    seed = spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id long, v string"
-    )
-    upsert_parquet(spark, seed, path, ["id"])
-    # simulate the crash window: base renamed away, swap never landed
-    os.rename(path, f"{path}__old")
-    updates = spark.createDataFrame([(2, "B"), (3, "c")], "id long, v string")
-    upsert_parquet(spark, updates, path, ["id"])
-    got = sorted((r.id, r.v) for r in spark.read.parquet(path).collect())
-    assert got == [(1, "a"), (2, "B"), (3, "c")]
-    assert not os.path.exists(f"{path}__old")
-
-
 def test_drop_table_clears_qualified_orphan(spark):
     """drop_table on a db-qualified name must clear the orphaned
     warehouse directory at <warehouse>/db.db/tbl, not <warehouse>/

@@ -119,54 +119,6 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     assert got == want
 
 
-def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
-    # Co-located join via bucketed tables: two tables bucketed on the
-    # join key with equal bucket counts sort-merge join with ZERO
-    # Exchange operators — the 100 TB pattern for repeated fact joins
-    # on a stable key (write pays the partitioning cost once).
-    from pyspark.sql import functions as F
-
-    from workshoop2_etl_spark.sources.readers import read_parquet
-    from workshoop2_etl_spark.sources.writers import (
-        drop_table,
-        seed_bucketed_table,
-    )
-
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    orders = read_parquet(spark, f"{SF}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    customer = read_parquet(spark, f"{SF}/customer.parquet").select(
-        "c_custkey", "c_mktsegment"
-    )
-    drop_table(spark, "bkt_orders")
-    drop_table(spark, "bkt_customer")
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        seed_bucketed_table(
-            orders, "bkt_orders", buckets=8,
-            bucket_cols=["o_custkey"], sort_cols=["o_custkey"],
-        )
-        seed_bucketed_table(
-            customer, "bkt_customer", buckets=8,
-            bucket_cols=["c_custkey"], sort_cols=["c_custkey"],
-        )
-        # Force the sort-merge path (no broadcast) to prove bucketing
-        # removes the shuffle the join would otherwise need.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bkt_orders").join(
-            spark.table("bkt_customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        plan = _physical(joined)
-        assert "Exchange" not in plan, plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-        drop_table(spark, "bkt_orders")
-        drop_table(spark, "bkt_customer")
-
-
 def test_media_metadata_never_reads_payload_from_parquet(spark, tmp_path):
     # The multimodal design claim: a metadata-only query over a
     # parquet-backed media table must never read the payload bytes —

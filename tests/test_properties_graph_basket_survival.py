@@ -1,6 +1,6 @@
 """Round-6 property-test wave 2: the session's new operators vs
 obvious independent Python references on seeded randomized inputs —
-the same discipline as test_properties_r6, extended to the
+the same discipline as test_properties_aggregates, extended to the
 basket/graph/survival/search additions."""
 
 from __future__ import annotations

@@ -85,46 +85,6 @@ def test_jsonl_failfast_raises_on_corrupt_and_permissive_tolerates(spark, tmp_pa
     assert vals == [1, 3, None]
 
 
-def test_schema_diff_classification():
-    from pyspark.sql import types as T
-
-    from workshoop2_etl_spark.sources.contracts import schema_diff
-
-    old = T.StructType(
-        [
-            T.StructField("id", T.IntegerType(), False),
-            T.StructField("name", T.StringType(), True),
-            T.StructField("legacy", T.StringType(), True),
-            T.StructField("score", T.FloatType(), True),
-            T.StructField("opt", T.StringType(), True),
-        ]
-    )
-    new = T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),      # safe widening
-            T.StructField("name", T.IntegerType(), True),  # breaking change
-            T.StructField("score", T.DoubleType(), True),  # safe widening
-            T.StructField("opt", T.StringType(), False),   # tightened: breaking
-            T.StructField("extra", T.StringType(), True),  # additive
-            T.StructField("req", T.StringType(), False),   # new required: breaking
-        ]
-    )
-    d = schema_diff(old, new)
-    assert d["added"] == ["extra", "req"]
-    assert d["removed"] == ["legacy"]
-    by = {c["name"]: c for c in d["changed"]}
-    assert not by["id"]["breaking"] and not by["score"]["breaking"]
-    assert by["name"]["breaking"]
-    nb = {c["name"]: c for c in d["nullability"]}
-    assert nb["opt"]["breaking"]
-    assert d["breaking"] is True
-    # purely additive evolution is non-breaking
-    add_only = T.StructType(
-        list(old.fields) + [T.StructField("note", T.StringType(), True)]
-    )
-    assert schema_diff(old, add_only)["breaking"] is False
-
-
 def test_dynamic_partition_overwrite_preserves_untouched(spark, tmp_path):
     import pytest as _pt
 

@@ -65,42 +65,6 @@ def test_stream_reader_replay_is_deterministic():
         SyntheticEventsStreamReader(n_rows=10, batch_rows=0)
 
 
-def test_foreachbatch_stream_upsert_merges_incrementally(spark, tmp_path):
-    """Two bounded activations over a growing source directory: the
-    second batch's overlapping keys replace the first's rows, new
-    keys append, untouched keys survive — the streaming MERGE sink."""
-    from pyspark.sql import functions as F
-
-    from workshoop2_etl_spark.streaming.events import run_stream_upsert
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
-        "k long, name string, v double",
-    ).write.parquet(src)
-
-    def activate():
-        stream = spark.readStream.schema(
-            "k long, name string, v double"
-        ).parquet(src)
-        run_stream_upsert(stream, dst, ckpt, ["k"])
-
-    activate()
-    assert sorted(
-        (r.k, r.v) for r in spark.read.parquet(dst).collect()
-    ) == [(1, 10.0), (2, 20.0), (3, 30.0)]
-
-    # second file: update k=2, insert k=4
-    spark.createDataFrame(
-        [(2, "b2", 99.0), (4, "d", 40.0)], "k long, name string, v double"
-    ).write.mode("append").parquet(src)
-    activate()
-    got = sorted((r.k, r.name, r.v) for r in spark.read.parquet(dst).collect())
-    assert got == [(1, "a", 10.0), (2, "b2", 99.0), (3, "c", 30.0), (4, "d", 40.0)]
-
-
 def test_drop_duplicates_within_watermark_suppresses_near_dupes(spark, tmp_path):
     """dropDuplicatesWithinWatermark: duplicate keys arriving within
     the watermark horizon are suppressed while state for expired keys
@@ -125,71 +89,3 @@ def test_drop_duplicates_within_watermark_suppresses_near_dupes(spark, tmp_path)
     out = run_available_now(deduped, "q_dd_watermark")
     keys = sorted(r.k for r in out.collect())
     assert keys == [1, 2, 3]  # one survivor per key
-
-
-def test_transform_with_state_running_totals(spark):
-    """Spark 4 arbitrary-state API (transformWithStateInPandas):
-    batch parity of the last emission per user. Environment-gated —
-    the API needs protobuf in the Python env; where absent, the
-    operator must refuse with a clear error instead of crashing the
-    activation mid-stream."""
-    import pytest as _pytest
-    from pyspark.sql import functions as SF
-
-    from workshoop2_etl_spark.streaming.events import (
-        _tws_available,
-        running_user_totals_tws,
-        run_available_now,
-        stream_events,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    stream = stream_events(spark, f"{sf_dir}/events.parquet")
-    if not _tws_available():
-        with _pytest.raises(RuntimeError, match="protobuf"):
-            running_user_totals_tws(stream)
-        return
-
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_available_now(
-            running_user_totals_tws(stream),
-            "tws_running_totals",
-            output_mode="update",
-        )
-        # last (= max-n, monotone) emission per user == batch aggregate
-        from pyspark.sql import Window as W
-
-        last = (
-            out.withColumn(
-                "__r",
-                SF.row_number().over(
-                    W.partitionBy("user_id").orderBy(SF.desc("n"))
-                ),
-            )
-            .filter("__r = 1")
-            .select("user_id", "n", SF.round("total", 2).alias("total"))
-        )
-        batch = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .groupBy(SF.col("user_id").cast("long").alias("user_id"))
-            .agg(
-                SF.count(SF.lit(1)).alias("n"),
-                SF.round(SF.sum("value"), 2).alias("total"),
-            )
-        )
-        a = sorted(map(tuple, last.collect()))
-        b = sorted(map(tuple, batch.collect()))
-        assert a == b
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior
-            )

@@ -1,7 +1,7 @@
 """Streaming Misra–Gries heavy hitters (streaming/events.py
 ``streaming_heavy_hitters``): the fold's textbook guarantees, the
-over-capacity decrement path, pure-Python replay parity, and
-TWS/applyInPandasWithState ladder agreement."""
+over-capacity decrement path, pure-Python replay parity, and the
+single ``applyInPandasWithState`` state path."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from workshoop2_etl_spark.streaming.events import (
     _mg_batch,
-    _tws_available,
     mg_fold,
     run_available_now,
     streaming_heavy_hitters,
@@ -89,14 +88,12 @@ def _write_planted(spark, n_heavy=500, n_tail=40) -> str:
     return path
 
 
-def _drain_summary(spark, path: str, *, api: str, k: int) -> dict[str, int]:
+def _drain_summary(spark, path: str, *, k: int) -> dict[str, int]:
     stream = spark.readStream.schema("item string").parquet(path)
-    mg = streaming_heavy_hitters(
-        stream, "item", k=k, n_shards=1, api=api
-    )
+    mg = streaming_heavy_hitters(stream, "item", k=k, n_shards=1)
     out = run_available_now(
         mg,
-        f"q_mg_{api}_{uuid.uuid4().hex[:6]}",
+        f"q_mg_{uuid.uuid4().hex[:6]}",
         output_mode="update",
         shuffle_partitions=1,
     )
@@ -111,45 +108,12 @@ def test_streaming_apws_matches_python_replay(spark):
     the pure-Python fold of the same data (deterministic batch
     order), including decrements (44 distinct items vs k=8)."""
     path = _write_planted(spark)
-    got = _drain_summary(spark, path, api="apws", k=8)
+    got = _drain_summary(spark, path, k=8)
     pdf = spark.read.parquet(path).toPandas()
     expect: dict[str, int] = {}
     _mg_batch(expect, pdf["item"], 8)
     assert got == expect
     assert "HEAVY" in got  # the planted heavy hitter survived
-
-
-def test_streaming_tws_matches_apws(spark):
-    """The two state APIs are the same operator: identical final
-    summaries on identical input. Executes for real here (pbshim);
-    refuses cleanly where no protobuf runtime exists."""
-    path = _write_planted(spark)
-    if not _tws_available():  # pragma: no cover - exercised elsewhere
-        import pytest as _pytest
-
-        stream = spark.readStream.schema("item string").parquet(path)
-        with _pytest.raises(RuntimeError, match="protobuf"):
-            streaming_heavy_hitters(stream, "item", api="tws")
-        return
-    prior = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        tws = _drain_summary(spark, path, api="tws", k=8)
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prior
-            )
-    apws = _drain_summary(spark, path, api="apws", k=8)
-    assert tws == apws
 
 
 def test_streaming_mg_exact_under_capacity(spark):
@@ -162,15 +126,36 @@ def test_streaming_mg_exact_under_capacity(spark):
     spark.createDataFrame(rows, "item string").coalesce(1).write.parquet(
         path
     )
-    got = _drain_summary(spark, path, api="apws", k=8)
+    got = _drain_summary(spark, path, k=8)
     assert got == {f"i{j}": 200 for j in range(5)}
 
 
-def test_streaming_mg_rejects_unknown_api(spark):
-    import pytest as _pytest
-
-    d = os.path.join(tempfile.gettempdir(), f"mg_empty_{uuid.uuid4().hex[:8]}")
-    os.makedirs(d, exist_ok=True)
-    ev = spark.readStream.schema("item string").parquet(d)
-    with _pytest.raises(ValueError, match="unknown api"):
-        streaming_heavy_hitters(ev, "item", api="nope")
+def test_streaming_mg_single_state_path_under_rocksdb(spark, tmp_path):
+    """The operator plans ``applyInPandasWithState`` under any
+    state-store provider, RocksDB included, so the tests run the same
+    stateful path as the registry query under a default session."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+    )
+    try:
+        stream = spark.readStream.schema("item string").parquet(
+            str(tmp_path)
+        )
+        plan = (
+            streaming_heavy_hitters(stream, "item")
+            ._jdf.queryExecution()
+            .logical()
+            .toString()
+        )
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+    assert "FlatMapGroupsInPandasWithState" in plan, plan
+    # transformWithStateInPandas plans as TransformWithStateInPySpark
+    assert "TransformWithState" not in plan, plan

@@ -183,58 +183,6 @@ def test_foreach_batch_sink_through_real_stream(spark, tmp_path):
     assert current_version(t) == v1
 
 
-def test_manifest_stats_prune_files(spark, tmp_path):
-    """Range-clustered commit + manifest stats: a narrow range read
-    plans a small subset of files, and returns exactly the rows the
-    unpruned filter would."""
-    from workshoop2_etl_spark.sources.versioned import (
-        candidate_files,
-        commit_with_stats,
-        read_version_pruned,
-    )
-
-    t = str(tmp_path / "tbl")
-    df = spark.range(0, 10_000).selectExpr("id", "id % 97 AS v")
-    # range layout makes per-file id ranges tight and disjoint
-    commit_with_stats(
-        df.repartitionByRange(8, "id"), t, stats_cols=["id"]
-    )
-    keep, total = candidate_files(t, "id", 100, 200)
-    assert total >= 8 and len(keep) <= 2, (keep, total)
-    got = sorted(
-        r.id for r in read_version_pruned(spark, t, "id", 100, 200).collect()
-    )
-    assert got == list(range(100, 201))
-
-
-def test_manifest_stats_missing_column_keeps_all_files(spark, tmp_path):
-    from workshoop2_etl_spark.sources.versioned import (
-        candidate_files,
-        commit_with_stats,
-    )
-
-    t = str(tmp_path / "tbl")
-    commit_with_stats(
-        _df(spark, 0, 100).repartition(4), t, stats_cols=["id"]
-    )
-    keep, total = candidate_files(t, "v", 0, 1)  # no stats for v
-    assert len(keep) == total  # conservative: no stats -> no pruning
-
-
-def test_manifest_stats_empty_intersection_returns_empty(spark, tmp_path):
-    from workshoop2_etl_spark.sources.versioned import (
-        commit_with_stats,
-        read_version_pruned,
-    )
-
-    t = str(tmp_path / "tbl")
-    commit_with_stats(
-        _df(spark, 0, 50).repartitionByRange(4, "id"), t, stats_cols=["id"]
-    )
-    out = read_version_pruned(spark, t, "id", 1000, 2000)
-    assert out.count() == 0
-
-
 def test_commit_with_expectations_pass_and_fail_invisible(spark, tmp_path):
     from workshoop2_etl_spark.sources.versioned import (
         ExpectationViolation,
@@ -333,25 +281,6 @@ def test_history_and_revacuum_survive_truncation(spark, tmp_path):
     assert sorted(r.id for r in read_version(spark, t).collect()) == list(
         range(20)
     )
-
-
-def test_stats_commit_skips_non_json_columns(spark, tmp_path):
-    """Timestamp stats can't live in a JSON manifest — the column is
-    skipped (file conservatively unpruned), never a crash."""
-    from workshoop2_etl_spark.sources.versioned import (
-        candidate_files,
-        commit_with_stats,
-    )
-
-    t = str(tmp_path / "tbl")
-    df = spark.range(0, 100).selectExpr(
-        "id", "timestamp_micros(CAST(id * 1000000 AS LONG)) AS ts"
-    )
-    commit_with_stats(df.repartitionByRange(4, "id"), t, stats_cols=["id", "ts"])
-    keep, total = candidate_files(t, "ts", 0, 1)
-    assert len(keep) == total  # ts unpruned
-    keep_id, _ = candidate_files(t, "id", 0, 10)
-    assert len(keep_id) < total  # id still prunes
 
 
 def test_foreach_batch_upsert_merges_and_replays_noop(spark, tmp_path):

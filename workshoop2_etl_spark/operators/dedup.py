@@ -24,8 +24,6 @@ Everything is JVM-side built-ins: no Python runs per row.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -997,43 +995,6 @@ def corpus_diff(
         .otherwise(F.lit("changed"))
     )
     return j.select(F.col(id_col), status.alias("status"))
-
-
-def lsh_tuning(
-    threshold: float, num_hashes: int
-) -> tuple[int, int]:
-    """Pick the banding (bands, rows) for :func:`lsh_candidate_pairs`
-    from the target Jaccard ``threshold`` — the standard S-curve
-    analysis (Mining of Massive Datasets §3.4): with b bands of r
-    rows, P(candidate | similarity s) = 1 − (1 − sʳ)ᵇ, and the curve's
-    inflection sits near (1/b)^(1/r). Among the divisor pairs of
-    ``num_hashes``, minimize the total error integral
-
-        ∫₀ᵗ P(s) ds  (false positives drawn below the threshold)
-      + ∫ₜ¹ (1 − P(s)) ds  (false negatives missed above it)
-
-    evaluated numerically. Low thresholds want many narrow bands
-    (candidates easy), high thresholds want few wide bands. Returns
-    ``(bands, rows)`` with ``bands·rows == num_hashes``.
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError(f"threshold must be in (0,1), got {threshold}")
-    if num_hashes < 2:
-        raise ValueError(f"num_hashes must be >= 2, got {num_hashes}")
-    best = None
-    for bands in range(1, num_hashes + 1):
-        if num_hashes % bands:
-            continue
-        r = num_hashes // bands
-        err = 0.0
-        steps = 200
-        for i in range(steps):
-            s = (i + 0.5) / steps
-            p = 1.0 - (1.0 - s ** r) ** bands
-            err += (p if s < threshold else 1.0 - p) / steps
-        if best is None or err < best[0]:
-            best = (err, bands, r)
-    return best[1], best[2]
 
 
 # ---------------------------------------------------------------------------

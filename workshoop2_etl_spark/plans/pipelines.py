@@ -63,11 +63,16 @@ def merge_pipeline(
     """The merge stage of ``etl_spotify_grammys`` (reference
     dags/merge_to_dw.py:47-92): normalize keys → full outer join with
     indicator → optional parquet checkpoint (the reference's
-    ``merged_{ts}.parquet`` handoff, S6/S3)."""
+    ``merged_{ts}.parquet`` handoff, S6/S3). The checkpoint is read
+    back under the schema it was written with, so the read-back fires
+    no schema-inference job (file-source fields come back nullable
+    either way)."""
     merged = full_outer_with_indicator(left, right, on)
     if checkpoint_path is not None:
         merged.write.mode("overwrite").parquet(checkpoint_path)
-        merged = merged.sparkSession.read.parquet(checkpoint_path)
+        merged = merged.sparkSession.read.schema(merged.schema).parquet(
+            checkpoint_path
+        )
     return merged
 
 

@@ -709,50 +709,26 @@ def streaming_heavy_hitters_events(
     """Streaming Misra–Gries heavy hitters (streaming/events.py
     ``streaming_heavy_hitters``): items hash-sharded into 4
     bounded-memory summaries of ≤8 counters, folded incrementally per
-    micro-batch through a custom stateful operator (the Spark-4
-    transformWithStateInPandas / applyInPandasWithState ladder — both
-    real state machines, identical emissions). The events corpus has
+    micro-batch through a custom stateful operator
+    (``applyInPandasWithState``). The events corpus has
     5 event types, so every shard stays under capacity and the sketch
     is EXACT — the oracle is the plain GROUP BY twin, hash parity
     included; the over-capacity decrement path (where MG's n/(k+1)
     guarantee, not exactness, is the contract) is pytest-proven on a
-    planted skewed stream (tests/test_streaming_mg.py). Where a
-    protobuf runtime exists this runs the TWS path (RocksDB provider
-    set around the drain, restored after); elsewhere the apws path —
-    identical emissions either way, which the ladder-parity pytest
-    pins."""
+    planted skewed stream (tests/test_streaming_mg.py)."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from workshoop2_etl_spark.streaming.events import (
-        _tws_available,
-        streaming_heavy_hitters,
-    )
+    from workshoop2_etl_spark.streaming.events import streaming_heavy_hitters
 
     stream = stream_events(spark, f"{sf_dir}/events.parquet")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    if _tws_available():
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    try:
-        mg = streaming_heavy_hitters(
-            stream, "event_type", k=8, n_shards=4
-        )
-        out = run_available_now(
-            mg,
-            "q_stream_mg_hh",
-            output_mode="update",
-            shuffle_partitions=4,
-        )
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
+    mg = streaming_heavy_hitters(stream, "event_type", k=8, n_shards=4)
+    out = run_available_now(
+        mg,
+        "q_stream_mg_hh",
+        output_mode="update",
+        shuffle_partitions=4,
+    )
     last = (
         out.withColumn(
             "__r",

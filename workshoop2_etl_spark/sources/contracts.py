@@ -58,78 +58,3 @@ def validate_schema(
     if problems:
         raise SchemaContractError("; ".join(problems))
     return df
-
-
-#: Widenings a reader can apply losslessly — anything else is breaking.
-_SAFE_WIDENINGS = {
-    ("int", "bigint"),
-    ("smallint", "int"),
-    ("smallint", "bigint"),
-    ("tinyint", "smallint"),
-    ("tinyint", "int"),
-    ("tinyint", "bigint"),
-    ("float", "double"),
-    ("int", "double"),
-    ("bigint", "double"),
-    ("date", "timestamp"),
-}
-
-
-def schema_diff(old, new) -> dict:
-    """Compatibility report between two schema versions (StructTypes)
-    — the review artifact a contract change ships with, classifying
-    every field change as ADDITIVE (old readers keep working: new
-    nullable columns, safe type widenings, nullable→relaxed) or
-    BREAKING (removed columns, narrowings/type changes, new
-    NON-nullable columns — which old writers cannot produce,
-    nullable→required tightenings).
-
-    Pure metadata — no Spark job, no data read. Returns::
-
-        {"added": [...], "removed": [...],
-         "changed": [{"name", "old_type", "new_type", "breaking"}...],
-         "nullability": [{"name", "old_nullable", "new_nullable",
-                          "breaking"}...],
-         "breaking": bool}
-    """
-    o = {f.name: f for f in old.fields}
-    n = {f.name: f for f in new.fields}
-    added = sorted(set(n) - set(o))
-    removed = sorted(set(o) - set(n))
-    changed = []
-    nullability = []
-    breaking = bool(removed)
-    for name in added:
-        if not n[name].nullable:
-            breaking = True
-    for name in sorted(set(o) & set(n)):
-        ot, nt = o[name].dataType.simpleString(), n[name].dataType.simpleString()
-        if ot != nt:
-            is_breaking = (ot, nt) not in _SAFE_WIDENINGS
-            changed.append(
-                {
-                    "name": name,
-                    "old_type": ot,
-                    "new_type": nt,
-                    "breaking": is_breaking,
-                }
-            )
-            breaking = breaking or is_breaking
-        if o[name].nullable != n[name].nullable:
-            tightened = o[name].nullable and not n[name].nullable
-            nullability.append(
-                {
-                    "name": name,
-                    "old_nullable": o[name].nullable,
-                    "new_nullable": n[name].nullable,
-                    "breaking": tightened,
-                }
-            )
-            breaking = breaking or tightened
-    return {
-        "added": added,
-        "removed": removed,
-        "changed": changed,
-        "nullability": nullability,
-        "breaking": breaking,
-    }

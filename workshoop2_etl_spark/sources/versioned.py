@@ -548,144 +548,6 @@ def foreach_batch_versioned_upsert(table_dir: str, key_cols: list[str]):
     return _sink
 
 
-def _collect_file_stats(
-    table_dir: str, rel_paths: list[str], stats_cols: list[str]
-) -> dict:
-    """Per-file [min, max] for ``stats_cols``, read from the parquet
-    FOOTERS just written (local metadata reads — no Spark job, no data
-    pages). Values are stored JSON-native; non-scalar or absent stats
-    simply omit the column (pruning then keeps the file, which is
-    always safe)."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, dict] = {}
-    for rel in rel_paths:
-        f = pq.ParquetFile(os.path.join(table_dir, rel))
-        ranges: dict[str, list] = {}  # name -> [min, max]
-        broken: set[str] = set()  # any row group without min/max
-        for rg in range(f.metadata.num_row_groups):
-            meta = f.metadata.row_group(rg)
-            for ci in range(meta.num_columns):
-                col = meta.column(ci)
-                name = col.path_in_schema
-                if name not in stats_cols or name in broken:
-                    continue
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    broken.add(name)
-                    ranges.pop(name, None)
-                    continue
-                if not isinstance(st.min, (int, float, str)) or not isinstance(
-                    st.max, (int, float, str)
-                ):
-                    # timestamps/bytes don't survive the JSON manifest
-                    # — skip the column (conservative: file unpruned)
-                    broken.add(name)
-                    ranges.pop(name, None)
-                    continue
-                if name in ranges:
-                    ranges[name][0] = min(ranges[name][0], st.min)
-                    ranges[name][1] = max(ranges[name][1], st.max)
-                else:
-                    ranges[name] = [st.min, st.max]
-        if ranges:
-            out[rel] = ranges
-    return out
-
-
-def commit_with_stats(
-    df: DataFrame,
-    table_dir: str,
-    *,
-    stats_cols: list[str],
-    op: str = "create",
-) -> int:
-    """Create (or overwrite) publishing per-file column [min,max]
-    stats in the manifest — the Delta/Iceberg data-skipping index in
-    manifest form. Pair with a range/Z-order layout
-    (``writers.cluster_parquet``) upstream: stats only prune when the
-    layout makes per-file ranges tight."""
-    parent = current_version(table_dir)
-    if op == "create" and parent is not None:
-        raise VersionConflict(f"table already exists at {table_dir}")
-    files = _write_data(df, table_dir)
-    version = 0 if parent is None else parent + 1
-    _publish(
-        table_dir,
-        version,
-        {
-            "version": version,
-            "parent": parent,
-            "op": op,
-            "files": files,
-            "schema": df.schema.json(),
-            "file_stats": _collect_file_stats(table_dir, files, stats_cols),
-        },
-    )
-    return version
-
-
-def candidate_files(
-    table_dir: str,
-    col: str,
-    lo,
-    hi,
-    *,
-    version: int | None = None,
-) -> tuple[list[str], int]:
-    """Manifest-level data skipping: the version's files whose
-    [min,max] for ``col`` intersects [lo, hi] — files without stats
-    for the column are conservatively kept. Returns (survivors,
-    total) so callers can assert pruning actually engaged."""
-    if version is None:
-        version = current_version(table_dir)
-    manifest = _read_manifest(table_dir, version)
-    stats = manifest.get("file_stats", {})
-    keep = []
-    for rel in manifest["files"]:
-        s = stats.get(rel, {}).get(col)
-        if s is None or not (hi < s[0] or lo > s[1]):
-            keep.append(rel)
-    return keep, len(manifest["files"])
-
-
-def read_version_pruned(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    lo,
-    hi,
-    *,
-    version: int | None = None,
-) -> DataFrame:
-    """Range read that PLANS only the manifest-pruned file set, then
-    applies the real predicate — correct for any stats (pruning only
-    removes files that provably cannot match), and at 100 TB the
-    difference between opening every file and opening the few whose
-    footer ranges intersect the query."""
-    from pyspark.sql import functions as F
-
-    keep, _total = candidate_files(
-        table_dir, col, lo, hi, version=version
-    )
-    if not keep:
-        schema = read_version(spark, table_dir, version).schema
-        return spark.createDataFrame([], schema)
-    paths = [os.path.join(table_dir, p) for p in keep]
-    if version is None:
-        version = current_version(table_dir)
-    # plan with the version's recorded schema, like read_version —
-    # a pruned read of a mixed-generation file set must NULL-fill
-    # evolved columns the same way the full read does
-    schema = _schema_of_manifest(_read_manifest(table_dir, version))
-    reader = (
-        spark.read.schema(schema) if schema is not None else spark.read
-    )
-    return reader.parquet(*paths).filter(
-        (F.col(col) >= lo) & (F.col(col) <= hi)
-    )
-
-
 class ExpectationViolation(RuntimeError):
     """A CHECK-constrained commit found violating rows; nothing was
     published. ``counts`` maps expectation name → violating rows."""

@@ -125,15 +125,6 @@ def write_avro(
     )
 
 
-def timestamped_path(base: str, run_ts: str, *, ext: str = "parquet") -> str:
-    """Run-timestamped artifact path (reference
-    dags/merge_to_dw.py:113-114 ``merged_{ts}.parquet``,
-    merge_to_drive.py:60-61). ``run_ts`` is a job PARAMETER — the
-    engine never reads the wall clock, so reruns are reproducible."""
-    sep = "" if base.endswith("/") else "/"
-    return f"{base}{sep}run_{run_ts}.{ext}"
-
-
 def seed_table(
     df: DataFrame,
     table: str,
@@ -235,90 +226,6 @@ def drop_table(spark, table: str) -> None:
             shutil.rmtree(leftover)
 
 
-def seed_bucketed_table(
-    df: DataFrame,
-    table: str,
-    *,
-    buckets: int,
-    bucket_cols: list[str],
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed (hash-clustered) managed table — the co-located-join
-    primitive: two tables bucketed by the same key into the same
-    bucket count join with ZERO shuffle (each task reads matching
-    bucket files from both sides), and ``sort_cols`` additionally
-    skips the sort of a sort-merge join. At 100 TB this converts the
-    nightly fact×dim reconciliation from a full two-sided shuffle
-    into a scan — the write pays the partitioning cost ONCE instead
-    of every downstream join paying it.
-    """
-    writer = df.write.mode(mode).format("parquet").bucketBy(
-        buckets, *bucket_cols
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def upsert_parquet(
-    spark,
-    updates: DataFrame,
-    path: str,
-    key_cols: list[str],
-) -> None:
-    """Keyed upsert into a parquet directory: rows in ``updates``
-    replace existing rows with the same key; everything else is
-    retained. The merge is one anti-join (existing minus updated
-    keys) unioned with the updates, written to a staging directory
-    and swapped in via two renames. A crash during the merge or the
-    staging write leaves the original intact; a crash BETWEEN the two
-    renames leaves the base stranded at ``{path}__old`` — the next
-    call (or any call finding that state) renames it back before
-    proceeding, so the base survives any single crash. The swap is
-    two renames, not one atomic operation: a concurrent reader can
-    hit a brief ENOENT between them and should retry; single-writer
-    is assumed. True atomic cutover needs a versioned directory +
-    symlink or a table format (below).
-
-    This is the file-format ceiling: real table formats (Delta/
-    Iceberg/Hudi — public formats Spark writes natively when their
-    jars are present) do the same merge transactionally with row-
-    group-level pruning; the operator keeps their exact semantics so
-    swapping the sink is a one-line change. The reference hand-rolls
-    this per-row against MySQL (reference dags/merge_to_dw.py:153-191);
-    here the merge is set-based and parallel.
-    """
-    import os
-    import shutil
-
-    backup = f"{path}__old"
-    if not os.path.exists(path) and os.path.exists(backup):
-        # A previous run crashed between its two renames: the base
-        # dataset is stranded at the backup path. Recover it first —
-        # otherwise this call would see "no existing dataset" and
-        # write ONLY the updates, silently dropping the base.
-        os.rename(backup, path)
-    if not os.path.exists(path):
-        updates.write.parquet(path)
-        return
-    existing = spark.read.parquet(path)
-    missing = [c for c in existing.columns if c not in updates.columns]
-    if missing:
-        raise ValueError(f"updates lack columns of existing dataset: {missing}")
-    kept = existing.join(
-        updates.select(*key_cols).distinct(), key_cols, "left_anti"
-    )
-    merged = kept.unionByName(updates.select(*existing.columns))
-    staging = f"{path}__staging"
-    merged.write.mode("overwrite").parquet(staging)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
-
-
 def compact_parquet(
     spark,
     src_dir: str,
@@ -397,130 +304,6 @@ def cluster_parquet(
     n = n_files or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     out = df.repartitionByRange(n, *cluster_cols).sortWithinPartitions(
         *cluster_cols
-    )
-    w = out.write.mode("overwrite")
-    if rowgroup_bytes is not None:
-        w = w.option("parquet.block.size", int(rowgroup_bytes))
-    w.parquet(dst_dir)
-
-
-def write_parquet_bloom(
-    df,
-    dst_dir: str,
-    *,
-    bloom_cols: dict[str, int],
-    rowgroup_bytes: int | None = None,
-) -> None:
-    """Write parquet with column bloom filters — the point-lookup
-    complement to :func:`cluster_parquet`: range clustering prunes
-    range/time predicates via min/max footers, bloom filters prune
-    EQUALITY probes on high-cardinality, unsorted keys (user ids,
-    content digests), where min/max spans are useless by construction.
-
-    ``bloom_cols`` maps column → expected distinct values per file
-    (sizes the filter's bit array; parquet-mr targets ~1% false
-    positives). The reader side is automatic: Spark's parquet reader
-    tests pushed equality predicates against each row group's bloom
-    and skips groups that definitely lack the key — measured 36×
-    fewer scan rows on a scrambled 300k-key fixture
-    (tests/test_data_skipping.py).
-
-    Cost model: bloom bytes scale with NDV per ROW GROUP, so tiny
-    test-sized row groups exaggerate the overhead; at the production
-    128 MB default it is a sub-percent tax on file size. Spend it on
-    the handful of columns that actually serve point lookups.
-    """
-    if not bloom_cols:
-        raise ValueError("bloom_cols must name at least one column")
-    w = df.write.mode("overwrite")
-    for col, ndv in bloom_cols.items():
-        w = w.option(f"parquet.bloom.filter.enabled#{col}", "true")
-        w = w.option(f"parquet.bloom.filter.expected.ndv#{col}", str(int(ndv)))
-    if rowgroup_bytes is not None:
-        w = w.option("parquet.block.size", int(rowgroup_bytes))
-    w.parquet(dst_dir)
-
-
-def zorder_value(col_a, col_b, *, bits: int = 16):
-    """Interleave the low ``bits`` of two non-negative normalized
-    ints into one Morton (Z-order) key — built-in shift/or column
-    arithmetic, no UDF. Callers normalize each dimension into
-    ``[0, 2^bits)`` first (see :func:`zorder_parquet`)."""
-    from pyspark.sql import functions as F
-
-    a = col_a if not isinstance(col_a, str) else F.col(col_a)
-    b = col_b if not isinstance(col_b, str) else F.col(col_b)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        abit = F.shiftright(a, i).bitwiseAND(F.lit(1))
-        bbit = F.shiftright(b, i).bitwiseAND(F.lit(1))
-        z = z.bitwiseOR(F.shiftleft(abit, 2 * i)).bitwiseOR(
-            F.shiftleft(bbit, 2 * i + 1)
-        )
-    return z
-
-
-def zorder_parquet(
-    df,
-    dst_dir: str,
-    *,
-    cluster_cols: list[str],
-    bits: int = 16,
-    n_files: int | None = None,
-    rowgroup_bytes: int | None = None,
-) -> None:
-    """Two-dimensional Z-order clustering: range-cluster on the
-    Morton interleave of BOTH columns, so row-group min/max stats
-    tighten in both dimensions at once — a selective filter on EITHER
-    column prunes, where a plain sort helps only its leading key (the
-    Delta/Iceberg OPTIMIZE ZORDER layout, done with plain Spark).
-
-    Each dimension min/max-normalizes into ``[0, 2^bits)`` (one
-    two-scalar-per-column driver hop — bounded, like
-    cluster_parquet's pattern); the interleaved key drives ONE range
-    exchange + in-partition sort. The Z-curve's locality guarantee is
-    statistical, not per-group tight: expect order-of-magnitude
-    pruning on both dimensions, not the single-key layout's near-
-    perfect pruning on one (tests/test_data_skipping.py measures
-    both dimensions).
-    """
-    from pyspark.sql import functions as F
-
-    if len(cluster_cols) != 2:
-        raise ValueError(
-            f"zorder_parquet interleaves exactly 2 columns, got {cluster_cols}"
-        )
-    a, b = cluster_cols
-    stats = df.agg(
-        F.min(a).alias("la"), F.max(a).alias("ha"),
-        F.min(b).alias("lb"), F.max(b).alias("hb"),
-    ).collect()[0]
-    span = 2 ** bits - 1
-
-    def norm(col, lo, hi):
-        if hi <= lo:
-            return F.lit(0).cast("long")
-        scaled = (
-            (F.col(col).cast("double") - F.lit(float(lo)))
-            / F.lit(float(hi - lo))
-            * F.lit(float(span))
-        )
-        return F.least(
-            F.greatest(F.floor(scaled).cast("long"), F.lit(0)),
-            F.lit(span),
-        )
-
-    z = zorder_value(
-        norm(a, stats["la"], stats["ha"]),
-        norm(b, stats["lb"], stats["hb"]),
-        bits=bits,
-    )
-    n = n_files or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    out = (
-        df.withColumn("__z", z)
-        .repartitionByRange(n, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
     )
     w = out.write.mode("overwrite")
     if rowgroup_bytes is not None:

@@ -497,133 +497,13 @@ def run_available_now_to_parquet(
         await_activation(q, timeout_sec, f"to {out_dir!r}")
 
 
-def run_stream_upsert(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    *,
-    timeout_sec: int = 300,
-) -> None:
-    """Streaming UPSERT sink via ``foreachBatch``: each microbatch
-    merges into the keyed parquet dataset through
-    ``sources.writers.upsert_parquet`` (anti-join + union + atomic
-    staged swap) — the streaming twin of the reference's MERGE-to-DW
-    step (reference dags/merge_to_dw.py:153-170 replaces dims row-by-
-    row; here each batch is one set-wise merge).
-
-    foreachBatch is the escape hatch for sinks Spark lacks natively
-    (JDBC upsert, key-value stores, MERGE INTO targets): the batch
-    DataFrame is exactly-once PER EPOCH (the checkpoint records the
-    epoch; on recovery the same epoch re-runs) — so the sink must be
-    idempotent, which a keyed upsert is: replaying a batch rewrites
-    the same keys to the same values.
-    """
-    from workshoop2_etl_spark.sources.writers import upsert_parquet
-
-    def _merge(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # upsert_parquet requires ONE row per key; a batch carrying
-        # several versions of a key collapses to an arbitrary single
-        # row here — callers needing last-writer-wins semantics
-        # within a batch pre-reduce upstream (cf. apply_cdc's max-seq
-        # reduction).
-        spark = batch_df.sparkSession
-        dedup = batch_df.dropDuplicates(key_cols)
-        upsert_parquet(spark, dedup, path, key_cols)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_activation(q, timeout_sec, f"upsert to {path!r}")
-
-
-def _tws_available() -> bool:
-    """``transformWithStateInPandas`` (Spark 4's arbitrary-state API)
-    drives its driver-side worker over a protobuf channel; without the
-    ``protobuf`` package the runner crashes AFTER the query starts
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE), so availability
-    is probed up front instead of surfacing as a mid-activation
-    stream crash."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user RUNNING (n, total) via ``transformWithStateInPandas``
-    — Spark 4's successor to ``applyInPandasWithState`` (typed
-    ValueState/ListState/MapState handles, optional TTL and timers;
-    cf. :func:`sessionize` for the older API on the same corpus).
-
-    Each micro-batch folds its rows into a ValueState and emits the
-    cumulative row for every touched user, so whatever the batch
-    split, the LAST emission per user equals the global aggregate —
-    the invariant the batch-parity oracle checks. Requires the
-    RocksDB state-store provider (set per-session) and the protobuf
-    package in the Python env — the test environment supplies it via
-    the path-extension shim in ``vendor/pbshim`` (activated by
-    tests/conftest.py BEFORE the JVM starts, so the forked Python
-    workers inherit it; see vendor/README.md), so the batch-parity
-    test executes for real here. Raises a clear error when no
-    protobuf runtime is reachable.
-    """
-    if not _tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "in the Python environment (absent in this sandbox); use "
-            "sessionize()/applyInPandasWithState for the equivalent "
-            "stateful semantics here"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle):  # noqa: ANN001 — API contract
-            self._st = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-            n, tot = 0, 0.0
-            if self._st.exists():
-                prev = self._st.get()
-                n, tot = int(prev[0]), float(prev[1])
-            for pdf in rows:
-                n += len(pdf)
-                tot += float(pdf["value"].sum())
-            self._st.update((n, tot))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n": [n], "total": [tot]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("value").cast("double").alias("value"),
-    ).groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id long, n long, total double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def mg_fold(summary: dict, item: str, c: int, k: int) -> None:
     """One batched Misra–Gries update: absorb ``c`` occurrences of
     ``item`` into a ≤``k``-counter summary, in place. Equivalent to
     ``c`` unit MG steps: increment if present, insert while room,
     else subtract ``min(pending, min(counters))`` from every counter
-    and drop zeroed ones, repeating until absorbed. Shared by both
-    streaming state APIs and by the pure-Python test replay."""
+    and drop zeroed ones, repeating until absorbed. Shared by the
+    streaming operator and by the pure-Python test replay."""
     while c > 0:
         if item in summary:
             summary[item] += c
@@ -654,7 +534,6 @@ def streaming_heavy_hitters(
     *,
     k: int = 32,
     n_shards: int = 4,
-    api: str = "auto",
 ) -> DataFrame:
     """Streaming Misra–Gries heavy hitters — the classic
     bounded-memory frequency sketch as a custom stateful operator:
@@ -662,7 +541,7 @@ def streaming_heavy_hitters(
     state row ever sees the full stream) and each shard folds its
     micro-batches into AT MOST ``k`` counters held in ONE state
     struct (arrays — one state round trip per shard per batch, not
-    per item, which is why the summary is not a MapState).
+    per item).
 
     Guarantees, independent of arrival order: every item with true
     per-shard frequency > n/(k+1) holds a counter, and a counter
@@ -672,11 +551,8 @@ def streaming_heavy_hitters(
     pins (5 event types against k=8); the decrement path is
     pytest-proven on a planted skewed stream.
 
-    API ladder (the codec-ladder pattern): ``transformWithStateInPandas``
-    (Spark 4 arbitrary state; needs a protobuf runtime and the
-    RocksDB state provider) when available, else the same fold via
-    ``applyInPandasWithState`` — both are real incremental state
-    machines, and the emitted rows are identical under either.
+    The fold runs in ``applyInPandasWithState``, a real incremental
+    state machine on whichever state-store provider the session uses.
 
     Emits one row per (shard, micro-batch): ``shard, version, items,
     counts`` with ``version`` increasing — downstream takes the max
@@ -693,68 +569,6 @@ def streaming_heavy_hitters(
         .alias("shard"),
         F.col(item_col).cast("string").alias("mg_item"),
     )
-    # auto needs BOTH prerequisites: a protobuf runtime for the TWS
-    # Python worker AND the RocksDB state provider (TWS state lives in
-    # column families, which the default HDFS-backed store rejects at
-    # activation time). Explicit api="tws" trusts the caller.
-    rocksdb = "RocksDB" in (
-        events.sparkSession.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", ""
-        )
-        or ""
-    )
-    use_tws = api == "tws" or (
-        api == "auto" and _tws_available() and rocksdb
-    )
-    if api not in ("auto", "tws", "apws"):
-        raise ValueError(f"unknown api {api!r}")
-
-    if use_tws:
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-        )
-
-        class MGShard(StatefulProcessor):
-            def init(self, handle):  # noqa: ANN001 — API contract
-                self._st = handle.getValueState(
-                    "mg",
-                    "items array<string>, counts array<long>, "
-                    "version long",
-                )
-
-            def handleInputRows(self, key, rows, timer_values):  # noqa: ANN001
-                summary: dict[str, int] = {}
-                version = 0
-                if self._st.exists():
-                    prev = self._st.get()
-                    summary = dict(
-                        zip(list(prev[0]), [int(c) for c in prev[1]])
-                    )
-                    version = int(prev[2])
-                for pdf in rows:
-                    _mg_batch(summary, pdf["mg_item"], k)
-                version += 1
-                items = sorted(summary)
-                counts = [summary[i] for i in items]
-                self._st.update((items, counts, version))
-                yield pd.DataFrame(
-                    {
-                        "shard": [int(key[0])],
-                        "version": [version],
-                        "items": [items],
-                        "counts": [counts],
-                    }
-                )
-
-            def close(self) -> None:
-                pass
-
-        return shards.groupBy("shard").transformWithStateInPandas(
-            statefulProcessor=MGShard(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: Any
