@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 import pyarrow.parquet as pq
 import pytest
@@ -20,8 +19,8 @@ LO, HI = 100_000, 101_000  # 0.5% selectivity window on k
 
 
 @pytest.fixture(scope="module")
-def layouts(spark):
-    base = tempfile.mkdtemp(prefix="wsds_")
+def layouts(spark, tmp_path_factory):
+    base = str(tmp_path_factory.mktemp("wsds"))
     df = spark.range(N).select(
         F.col("id").alias("k"), (F.col("id") * 7 % 1000).alias("v")
     )

@@ -6,7 +6,6 @@ single ``applyInPandasWithState`` state path."""
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 import pandas as pd
@@ -75,10 +74,8 @@ def test_mg_guarantee_over_capacity():
         assert true[item] - est <= n / (k + 1) + 1
 
 
-def _write_planted(spark, n_heavy=500, n_tail=40) -> str:
-    path = os.path.join(
-        tempfile.gettempdir(), f"mg_stream_{uuid.uuid4().hex[:8]}"
-    )
+def _write_planted(spark, base, n_heavy=500, n_tail=40) -> str:
+    path = os.path.join(base, "mg_stream")
     rows = [("HEAVY",)] * n_heavy + [
         (f"tail{i % n_tail}",) for i in range(n_tail * 4)
     ]
@@ -103,11 +100,11 @@ def _drain_summary(spark, path: str, *, k: int) -> dict[str, int]:
     return dict(zip(r["items"], r["counts"]))
 
 
-def test_streaming_apws_matches_python_replay(spark):
+def test_streaming_apws_matches_python_replay(spark, tmp_path):
     """One shard, one bounded activation: the streamed summary equals
     the pure-Python fold of the same data (deterministic batch
     order), including decrements (44 distinct items vs k=8)."""
-    path = _write_planted(spark)
+    path = _write_planted(spark, str(tmp_path))
     got = _drain_summary(spark, path, k=8)
     pdf = spark.read.parquet(path).toPandas()
     expect: dict[str, int] = {}
@@ -116,12 +113,10 @@ def test_streaming_apws_matches_python_replay(spark):
     assert "HEAVY" in got  # the planted heavy hitter survived
 
 
-def test_streaming_mg_exact_under_capacity(spark):
+def test_streaming_mg_exact_under_capacity(spark, tmp_path):
     """Distinct items ≤ k: the sketch IS the exact count — the
     regime the oracle-backed registry entry pins."""
-    path = os.path.join(
-        tempfile.gettempdir(), f"mg_exact_{uuid.uuid4().hex[:8]}"
-    )
+    path = str(tmp_path / "mg_exact")
     rows = [(f"i{j % 5}",) for j in range(1000)]
     spark.createDataFrame(rows, "item string").coalesce(1).write.parquet(
         path

@@ -5,10 +5,6 @@ frame."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import functions as F
 
 from workshoop2_etl_spark.operators.dedup import (
@@ -27,10 +23,8 @@ def _docs(spark, n=48):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_multibatch_union_equals_batch_pairs(spark):
-    base = os.path.join(
-        tempfile.gettempdir(), f"ndoa_{uuid.uuid4().hex[:8]}"
-    )
+def test_multibatch_union_equals_batch_pairs(spark, tmp_path):
+    base = str(tmp_path / "ndoa")
     src = f"{base}/src"
     docs = _docs(spark)
     # four source files -> four micro-batches with maxFilesPerTrigger=1
@@ -76,13 +70,11 @@ def test_multibatch_union_equals_batch_pairs(spark):
     )
 
 
-def test_resume_from_checkpoint_continues_index(spark):
+def test_resume_from_checkpoint_continues_index(spark, tmp_path):
     """A second activation over new files resumes from the checkpoint:
     only the new files process, and their pairs land against the
     existing index (no re-emission of old pairs)."""
-    base = os.path.join(
-        tempfile.gettempdir(), f"ndoa2_{uuid.uuid4().hex[:8]}"
-    )
+    base = str(tmp_path / "ndoa2")
     src = f"{base}/src"
     docs = _docs(spark, n=40)
     first = docs.filter("doc_id < 32")
@@ -118,7 +110,7 @@ def test_resume_from_checkpoint_continues_index(spark):
     assert len(got) > n_pairs_1  # the second activation added pairs
 
 
-def test_first_activation_missing_index_dir_no_local_fs(spark):
+def test_first_activation_missing_index_dir_no_local_fs(spark, tmp_path):
     """Index discovery is a schema-pinned Spark read, not an os.path
     walk (r8 VERDICT: a driver-local isdir/listdir silently sees
     nothing on HDFS/S3). First activation against a MISSING index dir
@@ -132,9 +124,7 @@ def test_first_activation_missing_index_dir_no_local_fs(spark):
     src_text = inspect.getsource(nd)
     assert "import os" not in src_text  # no local-FS API available at all
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"ndoa_nofs_{uuid.uuid4().hex[:8]}"
-    )
+    base = str(tmp_path / "ndoa_nofs")
     src = f"{base}/src"
     docs = _docs(spark, n=16)
     docs.coalesce(1).write.parquet(src)
@@ -169,7 +159,7 @@ def test_first_activation_missing_index_dir_no_local_fs(spark):
     ).count()
 
 
-def test_crawl_ingest_multibatch_union_equals_batch(spark):
+def test_crawl_ingest_multibatch_union_equals_batch(spark, tmp_path):
     """r9 VERDICT task 7 — the composed production ingest shape: a
     stream of WARC file blobs (one gzip, three plain) drains batch by
     batch through frame-walk -> charset decode -> HTML extract ->
@@ -185,9 +175,7 @@ def test_crawl_ingest_multibatch_union_equals_batch(spark):
         crawl_to_docs,
     )
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"crawlnd_{uuid.uuid4().hex[:8]}"
-    )
+    base = str(tmp_path / "crawlnd")
     src = f"{base}/src"
     docs = _docs(spark, n=32)
     pages = {

@@ -247,9 +247,7 @@ def test_fuzzy_join_unbroadcast_path(spark):
     right = spark.createDataFrame([("sitting",), ("mitten",)], "b string")
     got = sorted(
         (r.a, r.b)
-        for r in fuzzy_join(
-            left, right, "a", "b", max_distance=2, broadcast_right=False
-        ).collect()
+        for r in fuzzy_join(left, right, "a", "b", max_distance=2).collect()
     )
     # kitten↔sitting is distance 3 and must NOT match at bound 2
     assert got == [("kitten", "mitten"), ("sittin", "mitten"),

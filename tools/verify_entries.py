@@ -8,6 +8,7 @@ Usage: python tools/verify_entries.py name1 name2 ...  [--sf DIR]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
@@ -56,7 +57,9 @@ def main():
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     import __spark_entry__ as e
 
     qs, oracles = e.queries(), e.oracle_sql()

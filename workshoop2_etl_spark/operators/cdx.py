@@ -28,12 +28,12 @@ Reference has no crawl surface; §2.9 extension (X202).
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from workshoop2_etl_spark.operators.rows import flat_map_rows
 
 
 def synthesize_cdxj_line(
@@ -96,10 +96,16 @@ def parse_cdxj(
     offset, length``. Pure Arrow-batched map — the same
     embarrassingly-parallel shape as the WARC record kernel; a 100 TB
     crawl's index is itself just files of lines."""
-    ids = id_cols or [c for c in df.columns if c != line_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
+
+    def parse(line):
+        parsed = parse_cdxj_line(line)
+        return () if parsed is None else (parsed,)
+
+    return flat_map_rows(
+        df,
+        [line_col],
+        parse,
+        [
             T.StructField("surt", T.StringType()),
             T.StructField("ts", T.StringType()),
             T.StructField("url", T.StringType()),
@@ -109,31 +115,9 @@ def parse_cdxj(
             T.StructField("warc_filename", T.StringType()),
             T.StructField("offset", T.LongType()),
             T.StructField("length", T.LongType()),
-        ]
+        ],
+        keep=id_cols,
     )
-    cols = [
-        "surt",
-        "ts",
-        "url",
-        "status",
-        "mime",
-        "digest",
-        "warc_filename",
-        "offset",
-        "length",
-    ]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                parsed = parse_cdxj_line(r[line_col])
-                if parsed is None:
-                    continue
-                rows.append(tuple(r[c] for c in ids) + parsed)
-            yield pd.DataFrame(rows, columns=ids + cols)
-
-    return df.mapInPandas(batches, schema)
 
 
 def fetch_plan(
@@ -184,6 +168,7 @@ def fetch_records_by_index(
     A range that doesn't decode (stale index, truncated member)
     yields no row — tolerance, never an exception."""
     from workshoop2_etl_spark.operators.warc import (
+        WARC_RECORD_FIELDS,
         parse_warc_record,
         split_warc_gz,
     )
@@ -204,41 +189,21 @@ def fetch_records_by_index(
         "inner",
     ).select(files[filename_col], files[blob_col], "__ranges")
 
-    schema = T.StructType(
-        [
-            T.StructField(filename_col, T.StringType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("warc_type", T.StringType()),
-            T.StructField("target_uri", T.StringType()),
-            T.StructField("http_status", T.IntegerType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("location", T.StringType()),
-            T.StructField("record_id", T.StringType()),
-            T.StructField("refers_to", T.StringType()),
-            T.StructField("payload_digest", T.StringType()),
-            T.StructField("etag", T.StringType()),
-            T.StructField("last_modified", T.StringType()),
-            T.StructField("encoding_stub", T.StringType()),
-        ]
+    def fetch(blob, ranges):
+        blob = blob or b""
+        for rng in ranges:
+            o, ln = int(rng["o"]), int(rng["l"])
+            if o < 0 or ln <= 0 or o + ln > len(blob):
+                continue  # stale index entry: skip, not raise
+            for rec in split_warc_gz(blob[o : o + ln]):
+                parsed = parse_warc_record(rec)
+                if parsed is not None:
+                    yield (o,) + parsed
+
+    return flat_map_rows(
+        joined,
+        [blob_col, "__ranges"],
+        fetch,
+        [T.StructField("offset", T.LongType())] + WARC_RECORD_FIELDS,
+        keep=[filename_col],
     )
-    cols = [f.name for f in schema.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = r[blob_col] or b""
-                for rng in r["__ranges"]:
-                    o, ln = int(rng["o"]), int(rng["l"])
-                    if o < 0 or ln <= 0 or o + ln > len(blob):
-                        continue  # stale index entry: skip, not raise
-                    for rec in split_warc_gz(blob[o : o + ln]):
-                        parsed = parse_warc_record(rec)
-                        if parsed is not None:
-                            rows.append(
-                                (r[filename_col], o) + parsed
-                            )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return joined.mapInPandas(batches, schema)

@@ -27,12 +27,11 @@ bakes). One Arrow-batched stdlib-codecs kernel, pure map.
 from __future__ import annotations
 
 import codecs
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from workshoop2_etl_spark.operators.rows import map_rows
 
 
 def sniff_decode(b: bytes) -> tuple[str | None, str | None]:
@@ -68,21 +67,13 @@ def decode_bytes(
 ) -> DataFrame:
     """Per-row charset-sniffed decode: ``out_col`` (string) +
     ``encoding_col`` (the ladder rung that fired). Pure map."""
-    ids = id_cols or [c for c in df.columns if c != bytes_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
+    return map_rows(
+        df,
+        [bytes_col],
+        sniff_decode,
+        [
             T.StructField(out_col, T.StringType()),
             T.StructField(encoding_col, T.StringType()),
-        ]
+        ],
+        keep=id_cols,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            decoded = [sniff_decode(b) for b in pdf[bytes_col]]
-            out = pdf[ids].copy()
-            out[out_col] = [d[0] for d in decoded]
-            out[encoding_col] = [d[1] for d in decoded]
-            yield out
-
-    return df.mapInPandas(batches, schema)

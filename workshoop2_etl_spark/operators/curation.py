@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.operators.dedup import tokens_expr
+
 __all__ = [
     "hashed_ngram_buckets",
     "hashed_char_ngram_buckets",
@@ -55,15 +57,6 @@ __all__ = [
 _TWO32 = 4294967296.0
 
 
-def _tokens(text_col: str) -> Column:
-    """Whitespace tokens of the lowercased text — the repo-wide
-    convention (`textstats.py`), reproduced in DuckDB as
-    ``list_filter(string_split_regex(lower(text),'\\s+'), t->t!='')``."""
-    return F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
-
-
 def hashed_ngram_buckets(
     text_col: str, *, n_buckets: int = 512, bigrams: bool = True
 ) -> Column:
@@ -75,7 +68,7 @@ def hashed_ngram_buckets(
     ``CAST(concat('0x', substr(md5(g),1,8)) AS BIGINT) % n_buckets``
     bit-for-bit (same trade as :func:`..operators.sampling.hash_bucket`).
     """
-    toks = _tokens(text_col)
+    toks = tokens_expr(text_col)
     tail = F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0)))
     head = F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0)))
     feats = F.concat(

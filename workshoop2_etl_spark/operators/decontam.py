@@ -64,17 +64,14 @@ def decontaminate(
     ngram: int = 13,
     mode: str = "filter",
     out_col: str = "contaminated",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Drop (``mode='filter'``) or flag (``mode='flag'``) corpus
     documents sharing any word ``ngram``-gram with ``benchmark``.
 
     ``benchmark`` may be raw documents (same ``text_col``) or an
     already-shingled frame from :func:`benchmark_shingles` (detected
-    by its single ``__shingle`` column). ``broadcast_benchmark=False``
-    falls back to a shuffle semi-join for pathological benchmark
-    sizes; the corpus explode then shuffles on the digest — avoid
-    unless the broadcast genuinely does not fit.
+    by its single ``__shingle`` column). The benchmark shingle set is
+    broadcast, so the corpus explode never shuffles on the digest.
     """
     if mode not in ("filter", "flag"):
         raise ValueError(f"mode must be 'filter' or 'flag', got {mode!r}")
@@ -82,8 +79,7 @@ def decontaminate(
         bench = benchmark
     else:
         bench = benchmark_shingles(benchmark, text_col, ngram=ngram)
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
+    bench = F.broadcast(bench)
     doc_shingles = corpus.select(
         F.col(id_col),
         F.explode(_hashed_shingles(text_col, ngram)).alias("__shingle"),

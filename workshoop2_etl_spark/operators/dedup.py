@@ -171,7 +171,9 @@ def line_dedup(
 # ---------------------------------------------------------------------------
 
 def tokens_expr(text_col: str) -> Column:
-    """Lower-cased whitespace tokens, empties removed."""
+    """Lower-cased whitespace tokens, empties removed — the repo-wide
+    convention, reproduced in DuckDB as
+    ``list_filter(string_split_regex(lower(text),'\\s+'), t->t!='')``."""
     return F.filter(
         F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
     )

@@ -33,12 +33,12 @@ surface beside the media codecs (SURVEY.md §2.9).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from workshoop2_etl_spark.operators.rows import flat_map_rows, map_rows
 
 #: Containers whose CONTENTS are boilerplate/non-text — dropped whole.
 DEFAULT_DROP_TAGS = frozenset(
@@ -181,30 +181,23 @@ def html_to_text(
     parse. Scales as a pure map — no shuffle, no driver
     involvement; the markup column prunes away for any downstream
     query that only touches the extracted columns."""
-    ids = id_cols or [c for c in df.columns if c != html_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
+
+    def extract(html):
+        title, text, n_links = extract_text(html, drop_tags)
+        return title, text, n_links, len(text)
+
+    return map_rows(
+        df,
+        [html_col],
+        extract,
+        [
             T.StructField("title", T.StringType()),
             T.StructField("text", T.StringType()),
             T.StructField("n_links", T.IntegerType()),
             T.StructField("text_chars", T.IntegerType()),
-        ]
+        ],
+        keep=id_cols,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            parsed = [
-                extract_text(h, drop_tags) for h in pdf[html_col]
-            ]
-            out = pdf[ids].copy()
-            out["title"] = [p[0] for p in parsed]
-            out["text"] = [p[1] for p in parsed]
-            out["n_links"] = [p[2] for p in parsed]
-            out["text_chars"] = [len(p[1]) for p in parsed]
-            yield out
-
-    return df.mapInPandas(batches, schema)
 
 
 def synthesize_html(
@@ -225,10 +218,6 @@ def synthesize_html(
     from (doc_id, text) alone."""
     import html as _html
 
-    schema = T.StructType(
-        list(df.schema) + [T.StructField(out_col, T.StringType())]
-    )
-
     def _page(doc_id: int, text: str) -> str:
         body = _html.escape(text or "")
         return (
@@ -245,16 +234,13 @@ def synthesize_html(
             "</body></html>"
         ).format(i=doc_id, b=body)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            out[out_col] = [
-                _page(int(i), t)
-                for i, t in zip(pdf[id_col], pdf[text_col])
-            ]
-            yield out
-
-    return df.mapInPandas(batches, schema)
+    return map_rows(
+        df,
+        [id_col, text_col],
+        lambda i, t: (_page(int(i), t),),
+        [T.StructField(out_col, T.StringType())],
+        keep=df.columns,
+    )
 
 
 def extract_page_links(
@@ -334,28 +320,16 @@ def extract_links(
     the edge list is then ordinary relational data for
     :mod:`operators.graph`'s PageRank / communities, completing
     crawl chapter → graph chapter."""
-    ids = id_cols or [c for c in df.columns if c != html_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
+    return flat_map_rows(
+        df,
+        [html_col],
+        lambda html: extract_page_links(html, drop_tags),
+        [
             T.StructField("href", T.StringType()),
             T.StructField("anchor_text", T.StringType()),
-        ]
+        ],
+        keep=id_cols,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                for href, text in extract_page_links(
-                    r[html_col], drop_tags
-                ):
-                    rows.append(tuple(r[c] for c in ids) + (href, text))
-            yield pd.DataFrame(
-                rows, columns=ids + ["href", "anchor_text"]
-            )
-
-    return df.mapInPandas(batches, schema)
 
 
 #: <script type="application/ld+json"> block bodies, group 1 — the

@@ -56,15 +56,14 @@ def join_agg_state(
     keys: list[str],
     value_cols: list[str],
     *,
-    broadcast_dim: bool = True,
     how: str = "inner",
 ) -> DataFrame:
     """Mergeable state of a fact ⋈ dim aggregate — the incremental
     pattern users actually need at 100 TB: a dashboard grouped by DIM
     attributes (segment, region, category) over FACT measures. Each
     refresh enriches ONLY the delta's fact rows with the dim
-    (broadcast by default — the dim is small by definition of being a
-    grouping dimension) and partial-aggregates; the state merge then
+    (broadcast — the dim is small by definition of being a grouping
+    dimension) and partial-aggregates; the state merge then
     costs O(groups).
 
     The identity state(base⋈dim) ⊕ state(delta⋈dim) == state((base ∪
@@ -74,9 +73,7 @@ def join_agg_state(
     those groups from the fact partition (or keep the dim SCD2 and
     join as-of the load time). ``keys`` may mix fact and dim columns.
     """
-    enriched = fact.join(
-        F.broadcast(dim) if broadcast_dim else dim, on, how
-    )
+    enriched = fact.join(F.broadcast(dim), on, how)
     return aggregate_state(enriched, keys, value_cols)
 
 

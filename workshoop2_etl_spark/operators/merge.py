@@ -278,7 +278,6 @@ def fuzzy_join(
     right_col: str,
     *,
     max_distance: int = 1,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Approximate string join: pairs whose edit distance is within
     ``max_distance`` — entity resolution for misspelled dimension
@@ -289,15 +288,14 @@ def fuzzy_join(
     with the threshold short-circuit arg since 3.5 — it abandons a
     pair as soon as the running distance exceeds the bound).
 
-    The pair space is |L|×|R|: keep the right side a broadcastable
-    dimension (the default asserts the intent with an explicit
-    ``broadcast()`` hint). For corpus-scale BOTH-sides-big fuzzy
+    The pair space is |L|×|R|: the right side is a broadcast
+    dimension (an explicit ``broadcast()`` hint asserts the intent). For corpus-scale BOTH-sides-big fuzzy
     joins, block first (length bucket or first-char or an n-gram
     sketch, cf. the SimHash/MinHash operators) — an unblocked
     big-big fuzzy join is a deliberate non-feature here, not an
     oversight.
     """
-    r = F.broadcast(right) if broadcast_right else right
+    r = F.broadcast(right)
     dist = F.levenshtein(
         F.col(left_col), F.col(right_col), max_distance
     )

@@ -29,12 +29,12 @@ grow (binary artifacts beside tabular data).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from workshoop2_etl_spark.operators.rows import flat_map_rows, map_rows
 
 #: Media payload struct: opaque bytes + queryable metadata.
 MEDIA_SCHEMA = T.StructType(
@@ -940,6 +940,18 @@ class _JpegBitReader:
             v = (v << 1) | self.bit()
         return v
 
+    def read_symbol(self, table) -> int:
+        """Decode one Huffman symbol; ``table`` maps (length, code)
+        to the symbol."""
+        code, ln = 0, 0
+        while ln < 16:
+            code = (code << 1) | self.bit()
+            ln += 1
+            sym = table.get((ln, code))
+            if sym is not None:
+                return sym
+        raise _JpegMarker
+
     def align_to_marker(self) -> int:
         """Drop partial bits, skip to and consume the next marker;
         returns the marker byte (for RST checking)."""
@@ -1129,17 +1141,6 @@ def _jpeg_scan(b, pos, sof, scan, qt, huff, dri):
              huff[(0, td)], huff[(1, ta)])
         )
     br = _JpegBitReader(b, pos)
-
-    def read_symbol(table) -> int:
-        code, ln = 0, 0
-        while ln < 16:
-            code = (code << 1) | br.bit()
-            ln += 1
-            sym = table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise _JpegMarker
-
     pred = [0] * len(scan)
     zz_np = np.array(_JPEG_ZIGZAG, dtype=np.int64)
     try:
@@ -1154,7 +1155,7 @@ def _jpeg_scan(b, pos, sof, scan, qt, huff, dri):
                 for ci, (hc, vc, q, dcm, acm) in enumerate(meta):
                     for byy in range(vc):
                         for bxx in range(hc):
-                            s = read_symbol(dcm)
+                            s = br.read_symbol(dcm)
                             diff = (
                                 _jpeg_extend(br.bits(s), s) if s else 0
                             )
@@ -1163,7 +1164,7 @@ def _jpeg_scan(b, pos, sof, scan, qt, huff, dri):
                             coefs[0] = pred[ci]
                             k = 1
                             while k < 64:
-                                sym = read_symbol(acm)
+                                sym = br.read_symbol(acm)
                                 r, s = sym >> 4, sym & 15
                                 if s == 0:
                                     if r == 15:
@@ -1225,17 +1226,6 @@ def _jpeg_prog_scan(
     mcux = -(-ww // (8 * hmax))
     mcuy = -(-hh // (8 * vmax))
     br = _JpegBitReader(b, pos)
-
-    def read_symbol(table) -> int:
-        code, ln = 0, 0
-        while ln < 16:
-            code = (code << 1) | br.bit()
-            ln += 1
-            sym = table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise _JpegMarker
-
     try:
         if ss == 0:  # ---- DC scan ----
             if se != 0:
@@ -1286,7 +1276,7 @@ def _jpeg_prog_scan(
                             return None
                         pred = [0] * len(scan)
                     for si, ci, r, c in mcu:
-                        s = read_symbol(dcm[si])
+                        s = br.read_symbol(dcm[si])
                         diff = _jpeg_extend(br.bits(s), s) if s else 0
                         pred[si] += diff
                         prog["coef"][ci][r, c, 0] = pred[si] << al
@@ -1330,7 +1320,7 @@ def _jpeg_prog_scan(
                             continue
                         k = ss
                         while k <= se:
-                            sym = read_symbol(acm)
+                            sym = br.read_symbol(acm)
                             r, s = sym >> 4, sym & 15
                             if s == 0:
                                 if r != 15:
@@ -1349,7 +1339,7 @@ def _jpeg_prog_scan(
                         k = ss
                         if eobrun == 0:
                             while k <= se:
-                                sym = read_symbol(acm)
+                                sym = br.read_symbol(acm)
                                 r, s = sym >> 4, sym & 15
                                 newval = 0
                                 if s:
@@ -3149,20 +3139,13 @@ def synthesize_media_payload(
     if fmt not in makers:
         raise ValueError(f"unsupported synthetic media format {fmt!r}")
     make = makers[fmt]
-    schema = T.StructType(
-        list(df.schema) + [T.StructField(out_col, T.BinaryType())]
+    return map_rows(
+        df,
+        [id_col, text_col],
+        lambda i, t: (make(int(i), t),),
+        [T.StructField(out_col, T.BinaryType())],
+        keep=df.columns,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            out[out_col] = [
-                make(int(i), t)
-                for i, t in zip(pdf[id_col], pdf[text_col])
-            ]
-            yield out
-
-    return df.mapInPandas(batches, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3338,15 +3321,6 @@ def decode_image_metadata(
     Batch shape, schema, and partitioning are the real plumbing on
     every path.
     """
-    ids = id_cols or [c for c in df.columns if c != media_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("mode", T.StringType()),
-        ]
-    )
     try:  # pragma: no cover - PIL absent in this container
         from PIL import Image  # noqa: F401
 
@@ -3354,47 +3328,39 @@ def decode_image_metadata(
     except ImportError:
         have_pil = False
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
+    def decode(m):
+        b = m["payload"] or b""
+        for parse in (
+            _parse_bmp, _parse_png, _parse_jpeg, _parse_gif, _parse_tiff
+        ):
+            dims = parse(b)
+            if dims is not None:
+                return dims
+        if have_pil:  # pragma: no cover
+            import io
 
-        def _decode(b: bytes):
-            b = b or b""
-            bmp = _parse_bmp(b)
-            if bmp is not None:
-                return bmp
-            png = _parse_png(b)
-            if png is not None:
-                return png
-            jpg = _parse_jpeg(b)
-            if jpg is not None:
-                return jpg
-            gif = _parse_gif(b)
-            if gif is not None:
-                return gif
-            tif = _parse_tiff(b)
-            if tif is not None:
-                return tif
-            if have_pil:  # pragma: no cover
-                from PIL import Image
+            from PIL import Image
 
-                img = Image.open(io.BytesIO(b))
-                return img.size[0], img.size[1], img.mode
-            w, h = _fake_dims(b)
-            # named refusal for recognized-but-undecoded containers
-            # (WebP/AVIF/HEIC) — the codec-ladder boundary is
-            # visible per row, never an anonymous stub (round 13)
-            fmt = sniff_image_format(b)
-            return w, h, f"STUB:{fmt}" if fmt else "STUB"
+            img = Image.open(io.BytesIO(b))
+            return img.size[0], img.size[1], img.mode
+        w, h = _fake_dims(b)
+        # named refusal for recognized-but-undecoded containers
+        # (WebP/AVIF/HEIC) — the codec-ladder boundary is visible per
+        # row, never an anonymous stub (round 13)
+        fmt = sniff_image_format(b)
+        return w, h, f"STUB:{fmt}" if fmt else "STUB"
 
-        for pdf in it:
-            decoded = [_decode(m["payload"]) for m in pdf[media_col]]
-            out = pdf[ids].copy()
-            out["width"] = [d[0] for d in decoded]
-            out["height"] = [d[1] for d in decoded]
-            out["mode"] = [d[2] for d in decoded]
-            yield out
-
-    return df.mapInPandas(batches, schema)
+    return map_rows(
+        df,
+        [media_col],
+        decode,
+        [
+            T.StructField("width", T.IntegerType()),
+            T.StructField("height", T.IntegerType()),
+            T.StructField("mode", T.StringType()),
+        ],
+        keep=id_cols,
+    )
 
 
 def resize_images(
@@ -3417,13 +3383,13 @@ def resize_images(
     else the labeled
     byte-truncate/pad STUB (format restamped ``'stub'`` so the fake is
     visible per row). Output replaces the payload inside the struct
-    and restamps ``n_bytes``/``content_md5``; runs as an Arrow-batched
-    ``mapInPandas`` with no driver involvement."""
+    and restamps ``n_bytes``/``content_md5`` (the struct column comes
+    last); runs as an Arrow-batched ``mapInPandas`` with no driver
+    involvement."""
     w, h = target
     if w < 1 or h < 1:
         raise ValueError(f"target must be >= 1x1, got {target}")
     fake_len = w * h  # stand-in for an encoded thumbnail's size
-    out_schema = df.schema
     try:  # pragma: no cover - PIL absent in this container
         from PIL import Image  # noqa: F401
 
@@ -3431,89 +3397,88 @@ def resize_images(
     except ImportError:
         have_pil = False
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
+    def resize(m):
+        b = m["payload"] or b""
+        arr = _decode_bmp_pixels(b)
+        png_arr = None if arr is not None else _decode_png_pixels(b)
+        jpg_arr = (
+            None
+            if arr is not None or png_arr is not None
+            else _decode_jpeg_pixels(b)
+        )
+        gif_arr = (
+            None
+            if arr is not None
+            or png_arr is not None
+            or jpg_arr is not None
+            else _decode_gif_pixels(b)
+        )
+        tif_arr = (
+            None
+            if arr is not None
+            or png_arr is not None
+            or jpg_arr is not None
+            or gif_arr is not None
+            else _decode_tiff_pixels(b)
+        )
+        if arr is not None:
+            out = _encode_bmp(_resize_nearest(arr, w, h))
+            fmt = m["format"]
+        elif png_arr is not None:
+            # the compressed-format real path: zlib inflate →
+            # unfilter → resample → deflate re-encode
+            out = _encode_png(_resize_nearest(png_arr, w, h))
+            fmt = m["format"]
+        elif jpg_arr is not None:
+            # DCT-family real path (round 9): full baseline
+            # JPEG decode → resample → LOSSLESS PNG re-encode.
+            # Thumbnails re-encode PNG deliberately: a lossy
+            # re-encode would perturb every probe pixel, and
+            # PNG thumbnails of JPEG sources are standard
+            # practice anyway (format restamped below).
+            out = _encode_png(_resize_nearest(jpg_arr, w, h))
+            fmt = "png"
+        elif gif_arr is not None:
+            # LZW real path (round 12): full GIF decode →
+            # resample → lossless PNG re-encode (a thumbnail
+            # may exceed 256 colors after resampling foreign
+            # inputs, so the palette format isn't guaranteed
+            # round-trippable; PNG always is).
+            out = _encode_png(_resize_nearest(gif_arr, w, h))
+            fmt = "png"
+        elif tif_arr is not None:
+            # strip-TIFF real path (round 14): IFD walk +
+            # none/LZW/PackBits strip decode + predictor →
+            # resample → lossless PNG re-encode (same
+            # reasoning as the GIF/JPEG thumbnails).
+            out = _encode_png(_resize_nearest(tif_arr, w, h))
+            fmt = "png"
+        elif have_pil:  # pragma: no cover
+            import io
 
-        for pdf in it:
-            def _resize(m):
-                b = m["payload"] or b""
-                arr = _decode_bmp_pixels(b)
-                png_arr = None if arr is not None else _decode_png_pixels(b)
-                jpg_arr = (
-                    None
-                    if arr is not None or png_arr is not None
-                    else _decode_jpeg_pixels(b)
-                )
-                gif_arr = (
-                    None
-                    if arr is not None
-                    or png_arr is not None
-                    or jpg_arr is not None
-                    else _decode_gif_pixels(b)
-                )
-                tif_arr = (
-                    None
-                    if arr is not None
-                    or png_arr is not None
-                    or jpg_arr is not None
-                    or gif_arr is not None
-                    else _decode_tiff_pixels(b)
-                )
-                if arr is not None:
-                    out = _encode_bmp(_resize_nearest(arr, w, h))
-                    fmt = m["format"]
-                elif png_arr is not None:
-                    # the compressed-format real path: zlib inflate →
-                    # unfilter → resample → deflate re-encode
-                    out = _encode_png(_resize_nearest(png_arr, w, h))
-                    fmt = m["format"]
-                elif jpg_arr is not None:
-                    # DCT-family real path (round 9): full baseline
-                    # JPEG decode → resample → LOSSLESS PNG re-encode.
-                    # Thumbnails re-encode PNG deliberately: a lossy
-                    # re-encode would perturb every probe pixel, and
-                    # PNG thumbnails of JPEG sources are standard
-                    # practice anyway (format restamped below).
-                    out = _encode_png(_resize_nearest(jpg_arr, w, h))
-                    fmt = "png"
-                elif gif_arr is not None:
-                    # LZW real path (round 12): full GIF decode →
-                    # resample → lossless PNG re-encode (a thumbnail
-                    # may exceed 256 colors after resampling foreign
-                    # inputs, so the palette format isn't guaranteed
-                    # round-trippable; PNG always is).
-                    out = _encode_png(_resize_nearest(gif_arr, w, h))
-                    fmt = "png"
-                elif tif_arr is not None:
-                    # strip-TIFF real path (round 14): IFD walk +
-                    # none/LZW/PackBits strip decode + predictor →
-                    # resample → lossless PNG re-encode (same
-                    # reasoning as the GIF/JPEG thumbnails).
-                    out = _encode_png(_resize_nearest(tif_arr, w, h))
-                    fmt = "png"
-                elif have_pil:  # pragma: no cover
-                    from PIL import Image
+            from PIL import Image
 
-                    img = Image.open(io.BytesIO(b)).resize((w, h))
-                    buf = io.BytesIO()
-                    img.save(buf, format="PNG")
-                    out, fmt = buf.getvalue(), "png"
-                else:
-                    out = b[:fake_len].ljust(fake_len, b"\0")
-                    fmt = "stub"
-                return {
-                    "payload": out,
-                    "media_type": m["media_type"],
-                    "format": fmt,
-                    "n_bytes": len(out),
-                    "content_md5": hashlib.md5(out).hexdigest(),
-                }
+            img = Image.open(io.BytesIO(b)).resize((w, h))
+            buf = io.BytesIO()
+            img.save(buf, format="PNG")
+            out, fmt = buf.getvalue(), "png"
+        else:
+            out = b[:fake_len].ljust(fake_len, b"\0")
+            fmt = "stub"
+        return {
+            "payload": out,
+            "media_type": m["media_type"],
+            "format": fmt,
+            "n_bytes": len(out),
+            "content_md5": hashlib.md5(out).hexdigest(),
+        }
 
-            pdf = pdf.copy()
-            pdf[media_col] = pdf[media_col].map(_resize)
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
+    return map_rows(
+        df,
+        [media_col],
+        lambda m: (resize(m),),
+        [df.schema[media_col]],
+    )
 
 
 def probe_image_pixels(
@@ -3531,40 +3496,32 @@ def probe_image_pixels(
     them, but the DECODED pixel at a known coordinate has a closed
     form the oracle can compute. Points are (y, x) on the top-down
     grid; out-of-bounds or undecodable payloads yield NULL."""
-    ids = id_cols or [c for c in df.columns if c != media_col]
-    cols = [f"px_y{y}x{x}" for y, x in points]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [T.StructField(c, T.StringType()) for c in cols]
+
+    def probe(m):
+        b = (m["payload"] if m is not None else b"") or b""
+        arr = _decode_bmp_pixels(b)
+        if arr is None:
+            arr = _decode_png_pixels(b)
+        if arr is None:
+            arr = _decode_jpeg_pixels(b)
+        if arr is None:
+            arr = _decode_gif_pixels(b)
+        if arr is None:
+            arr = _decode_tiff_pixels(b)
+        return tuple(
+            None
+            if arr is None or y >= arr.shape[0] or x >= arr.shape[1]
+            else bytes(arr[y, x]).hex()
+            for y, x in points
+        )
+
+    return map_rows(
+        df,
+        [media_col],
+        probe,
+        [T.StructField(f"px_y{y}x{x}", T.StringType()) for y, x in points],
+        keep=id_cols,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def _probe(m):
-            b = (m["payload"] if m is not None else b"") or b""
-            arr = _decode_bmp_pixels(b)
-            if arr is None:
-                arr = _decode_png_pixels(b)
-            if arr is None:
-                arr = _decode_jpeg_pixels(b)
-            if arr is None:
-                arr = _decode_gif_pixels(b)
-            if arr is None:
-                arr = _decode_tiff_pixels(b)
-            vals = []
-            for y, x in points:
-                if arr is None or y >= arr.shape[0] or x >= arr.shape[1]:
-                    vals.append(None)
-                else:
-                    vals.append(bytes(arr[y, x]).hex())
-            return vals
-        for pdf in it:
-            probed = [_probe(m) for m in pdf[media_col]]
-            out = pdf[ids].copy()
-            for i, c in enumerate(cols):
-                out[c] = [p[i] for p in probed]
-            yield out
-
-    return df.mapInPandas(batches, schema)
 
 
 def extract_embedding(
@@ -3582,32 +3539,27 @@ def extract_embedding(
     hash-seeded pseudo-random unit vector — deterministic per content,
     so downstream ANN tests are reproducible.
     """
-    ids = id_cols or [c for c in df.columns if c != media_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [T.StructField(out_col, T.ArrayType(T.FloatType()))]
+
+    def embed(m):
+        seed = hashlib.md5(m["payload"] or b"").digest()
+        # xorshift over the hash bytes — cheap, deterministic
+        vals = []
+        state = int.from_bytes(seed[:8], "big") or 1
+        for _ in range(dim):
+            state ^= (state << 13) & 0xFFFFFFFFFFFFFFFF
+            state ^= state >> 7
+            state ^= (state << 17) & 0xFFFFFFFFFFFFFFFF
+            vals.append((state % 2_000_001) / 1_000_000.0 - 1.0)
+        norm = sum(v * v for v in vals) ** 0.5 or 1.0
+        return ([float(v / norm) for v in vals],)
+
+    return map_rows(
+        df,
+        [media_col],
+        embed,
+        [T.StructField(out_col, T.ArrayType(T.FloatType()))],
+        keep=id_cols,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            def _embed(m):
-                seed = hashlib.md5(m["payload"] or b"").digest()
-                # xorshift over the hash bytes — cheap, deterministic
-                vals = []
-                state = int.from_bytes(seed[:8], "big") or 1
-                for _ in range(dim):
-                    state ^= (state << 13) & 0xFFFFFFFFFFFFFFFF
-                    state ^= state >> 7
-                    state ^= (state << 17) & 0xFFFFFFFFFFFFFFFF
-                    vals.append((state % 2_000_001) / 1_000_000.0 - 1.0)
-                norm = sum(v * v for v in vals) ** 0.5 or 1.0
-                return [float(v / norm) for v in vals]
-
-            out = pdf[ids].copy()
-            out[out_col] = pdf[media_col].map(_embed)
-            yield out
-
-    return df.mapInPandas(batches, schema)
 
 
 def extract_audio_features(
@@ -3629,66 +3581,54 @@ def extract_audio_features(
     ``duration_sec`` (double) + ``rms_profile`` (array<double>, one
     value per ``chunk_bytes``-byte chunk, ≤16 chunks).
     """
-    ids = id_cols or [c for c in df.columns if c != media_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
+    import numpy as np
+
+    def chunk_rms(x: "np.ndarray", per: int) -> list[float]:
+        if len(x) == 0:
+            return []
+        x = x[: per * 16].astype(np.float64)
+        x *= x
+        starts = np.arange(0, len(x), per)
+        lens = np.diff(np.append(starts, len(x)))
+        return [
+            float(v) for v in np.sqrt(np.add.reduceat(x, starts) / lens)
+        ]
+
+    def features(m):
+        b = m["payload"] or b""
+        wav = _parse_wav(b)
+        if wav is None and b[:4] == _FLAC_MAGIC:
+            # the lossless-compression rung (round 13): in-scope
+            # streams decode for real; out-of-scope shapes
+            # (stereo/LPC/…) raise by name in the parser and fall to
+            # the visible byte proxy — never a silently wrong decode
+            try:
+                wav = _parse_flac(b)
+            except ValueError:
+                wav = None
+        if wav is not None:
+            rate, channels, _bits, samples = wav
+            frames = len(samples) // max(channels, 1)
+            # chunk over samples: chunk_bytes of 16-bit PCM
+            return (
+                frames / float(rate),
+                chunk_rms(samples, max(chunk_bytes // 2, 1)),
+            )
+        # byte-proxy fallback: 16-bit mono 16 kHz duration estimate,
+        # RMS of raw bytes per chunk
+        head = np.frombuffer(b[: chunk_bytes * 16], dtype=np.uint8)
+        return len(b) / (2.0 * 16000.0), chunk_rms(head, chunk_bytes)
+
+    return map_rows(
+        df,
+        [media_col],
+        features,
+        [
             T.StructField("duration_sec", T.DoubleType()),
             T.StructField("rms_profile", T.ArrayType(T.DoubleType())),
-        ]
+        ],
+        keep=id_cols,
     )
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        def _chunk_rms(x: "np.ndarray", per: int) -> list[float]:
-            if len(x) == 0:
-                return []
-            x = x[: per * 16].astype(np.float64)
-            x *= x
-            starts = np.arange(0, len(x), per)
-            lens = np.diff(np.append(starts, len(x)))
-            return [
-                float(v)
-                for v in np.sqrt(np.add.reduceat(x, starts) / lens)
-            ]
-
-        for pdf in it:
-            durs, profiles = [], []
-            for m in pdf[media_col]:
-                b = m["payload"] or b""
-                wav = _parse_wav(b)
-                if wav is None and b[:4] == _FLAC_MAGIC:
-                    # the lossless-compression rung (round 13):
-                    # in-scope streams decode for real; out-of-scope
-                    # shapes (stereo/LPC/…) raise by name in the
-                    # parser and fall to the visible byte proxy —
-                    # never a silently wrong decode
-                    try:
-                        wav = _parse_flac(b)
-                    except ValueError:
-                        wav = None
-                if wav is not None:
-                    rate, channels, _bits, samples = wav
-                    frames = len(samples) // max(channels, 1)
-                    durs.append(frames / float(rate))
-                    # chunk over samples: chunk_bytes of 16-bit PCM
-                    profiles.append(
-                        _chunk_rms(samples, max(chunk_bytes // 2, 1))
-                    )
-                else:
-                    # byte-proxy fallback: 16-bit mono 16 kHz duration
-                    # estimate, RMS of raw bytes per chunk
-                    durs.append(len(b) / (2.0 * 16000.0))
-                    head = np.frombuffer(
-                        b[: chunk_bytes * 16], dtype=np.uint8
-                    )
-                    profiles.append(_chunk_rms(head, chunk_bytes))
-            out = pdf[ids].copy()
-            out["duration_sec"] = [float(d) for d in durs]
-            out["rms_profile"] = profiles
-            yield out
-
-    return df.mapInPandas(batches, schema)
 
 
 def sample_frames(
@@ -3712,67 +3652,34 @@ def sample_frames(
     keyed by (id, frame_no), the shape a caption/label pipeline
     consumes; ``frame_no`` is the frame's index IN THE SOURCE (stride
     sampling preserves provenance)."""
-    ids = id_cols or [c for c in df.columns if c != media_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
+
+    def frames_of(m):
+        p = m["payload"] or b""
+        frames = _demux_video(p)
+        if frames is not None:
+            stride = max(-(-len(frames) // max_frames), 1)
+            for i in list(range(0, len(frames), stride))[:max_frames]:
+                bmp = _parse_bmp(frames[i])
+                w, h = (bmp[0], bmp[1]) if bmp else (None, None)
+                yield i, hashlib.md5(frames[i]).hexdigest(), w, h
+            return
+        n = min(max(len(p) // every_n_bytes, 1), max_frames)
+        for i in range(n):
+            chunk = p[i * every_n_bytes : (i + 1) * every_n_bytes]
+            yield i, hashlib.md5(chunk).hexdigest(), None, None
+
+    return flat_map_rows(
+        df,
+        [media_col],
+        frames_of,
+        [
             T.StructField("frame_no", T.IntegerType()),
             T.StructField("frame_md5", T.StringType()),
             T.StructField("frame_w", T.IntegerType()),
             T.StructField("frame_h", T.IntegerType()),
-        ]
+        ],
+        keep=id_cols,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            # Column-wise explode: compute per-row frame lists, then
-            # replicate the id columns with one positional take — the
-            # only per-frame Python is the md5/header parse itself
-            # (which a real ``av`` keyframe decode would be anyway).
-            payloads = [m["payload"] or b"" for m in pdf[media_col]]
-            per_row: list[list[tuple[int, str, int | None, int | None]]] = []
-            for p in payloads:
-                frames = _demux_video(p)
-                if frames is not None:
-                    stride = max(-(-len(frames) // max_frames), 1)
-                    rows = []
-                    for i in list(range(0, len(frames), stride))[:max_frames]:
-                        bmp = _parse_bmp(frames[i])
-                        w, h = (bmp[0], bmp[1]) if bmp else (None, None)
-                        rows.append(
-                            (i, hashlib.md5(frames[i]).hexdigest(), w, h)
-                        )
-                else:
-                    n = int(
-                        np.clip(len(p) // every_n_bytes, 1, max_frames)
-                    )
-                    rows = [
-                        (
-                            i,
-                            hashlib.md5(
-                                p[i * every_n_bytes : (i + 1) * every_n_bytes]
-                            ).hexdigest(),
-                            None,
-                            None,
-                        )
-                        for i in range(n)
-                    ]
-                per_row.append(rows)
-            counts = np.array([len(r) for r in per_row], dtype=np.int64)
-            row_idx = np.repeat(np.arange(len(per_row)), counts)
-            flat = [f for rows in per_row for f in rows]
-            out = pdf[ids].iloc[row_idx].reset_index(drop=True)
-            out["frame_no"] = pd.array(
-                [f[0] for f in flat], dtype="int32"
-            )
-            out["frame_md5"] = [f[1] for f in flat]
-            out["frame_w"] = pd.array([f[2] for f in flat], dtype="Int32")
-            out["frame_h"] = pd.array([f[3] for f in flat], dtype="Int32")
-            yield out
-
-    return df.mapInPandas(batches, schema)
 
 
 def _gray_cells(b: bytes, rows: int, cols: int):
@@ -3807,6 +3714,26 @@ def _gray_cells(b: bytes, rows: int, cols: int):
             block = gray[y0:y1, x0:x1]
             cells[i * cols + j] = int(block.sum()) // block.size
     return cells
+
+
+def _hash_bits(bits) -> tuple[str, int, int]:
+    """The output encoding shared by the perceptual hashes, from a
+    row-major 0/1 int array: (hex of every bit, MSB first per
+    nibble; bits 0..62 packed into a non-negative long, bit j at
+    position j; the number of set bits)."""
+    hex_chars = []
+    for nib in range(len(bits) // 4):
+        v = (
+            bits[4 * nib] * 8
+            + bits[4 * nib + 1] * 4
+            + bits[4 * nib + 2] * 2
+            + bits[4 * nib + 3]
+        )
+        hex_chars.append("0123456789abcdef"[int(v)])
+    packed = 0
+    for j in range(63):
+        packed |= int(bits[j]) << j
+    return "".join(hex_chars), packed, int(bits.sum())
 
 
 def perceptual_hash_images(
@@ -3850,53 +3777,25 @@ def perceptual_hash_images(
             f"grid must be even and >= 8 (63-bit packing + whole-nibble"
             f" hex), got {grid}"
         )
-    ids = id_cols or [c for c in df.columns if c != payload_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
-            T.StructField("ahash_hex", T.StringType()),
-            T.StructField("ahash", T.LongType()),
-            T.StructField("n_set", T.IntegerType()),
-        ]
-    )
 
-    def _hash_one(b: bytes):
-        import numpy as np
-
+    def ahash(b):
         cells = _gray_cells(b, grid, grid)
         if cells is None:
             return None, None, None
         mean = int(cells.sum()) // (grid * grid)
-        bits = (cells > mean).astype(np.int64)
-        n = grid * grid
-        hex_chars = []
-        for nib in range(n // 4):
-            v = (
-                bits[4 * nib] * 8
-                + bits[4 * nib + 1] * 4
-                + bits[4 * nib + 2] * 2
-                + bits[4 * nib + 3]
-            )
-            hex_chars.append("0123456789abcdef"[int(v)])
-        packed = 0
-        for j in range(63):
-            packed |= int(bits[j]) << j
-        return "".join(hex_chars), packed, int(bits.sum())
+        return _hash_bits((cells > mean).astype("int64"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf[ids].copy()
-            hashed = [_hash_one(b) for b in pdf[payload_col]]
-            out["ahash_hex"] = [t[0] for t in hashed]
-            out["ahash"] = pd.array(
-                [t[1] for t in hashed], dtype="Int64"
-            )
-            out["n_set"] = pd.array(
-                [t[2] for t in hashed], dtype="Int32"
-            )
-            yield out
-
-    return df.mapInPandas(batches, schema)
+    return map_rows(
+        df,
+        [payload_col],
+        ahash,
+        [
+            T.StructField("ahash_hex", T.StringType()),
+            T.StructField("ahash", T.LongType()),
+            T.StructField("n_set", T.IntegerType()),
+        ],
+        keep=id_cols,
+    )
 
 
 def dhash_images(
@@ -3928,49 +3827,27 @@ def dhash_images(
             f"grid must be even and >= 8 (63-bit packing + whole-nibble"
             f" hex), got {grid}"
         )
-    ids = id_cols or [c for c in df.columns if c != payload_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
-            T.StructField("dhash_hex", T.StringType()),
-            T.StructField("dhash", T.LongType()),
-            T.StructField("n_set", T.IntegerType()),
-        ]
-    )
 
-    def _hash_one(b: bytes):
-        import numpy as np
-
+    def dhash(b):
         cells = _gray_cells(b, grid, grid + 1)
         if cells is None:
             return None, None, None
         grid2 = cells.reshape(grid, grid + 1)
-        bits = (grid2[:, 1:] > grid2[:, :-1]).astype(np.int64).ravel()
-        n = grid * grid
-        hex_chars = []
-        for nib in range(n // 4):
-            v = (
-                bits[4 * nib] * 8
-                + bits[4 * nib + 1] * 4
-                + bits[4 * nib + 2] * 2
-                + bits[4 * nib + 3]
-            )
-            hex_chars.append("0123456789abcdef"[int(v)])
-        packed = 0
-        for j in range(63):
-            packed |= int(bits[j]) << j
-        return "".join(hex_chars), packed, int(bits.sum())
+        return _hash_bits(
+            (grid2[:, 1:] > grid2[:, :-1]).astype("int64").ravel()
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf[ids].copy()
-            hashed = [_hash_one(b) for b in pdf[payload_col]]
-            out["dhash_hex"] = [t[0] for t in hashed]
-            out["dhash"] = pd.array([t[1] for t in hashed], dtype="Int64")
-            out["n_set"] = pd.array([t[2] for t in hashed], dtype="Int32")
-            yield out
-
-    return df.mapInPandas(batches, schema)
+    return map_rows(
+        df,
+        [payload_col],
+        dhash,
+        [
+            T.StructField("dhash_hex", T.StringType()),
+            T.StructField("dhash", T.LongType()),
+            T.StructField("n_set", T.IntegerType()),
+        ],
+        keep=id_cols,
+    )
 
 
 def synth_block_bmp(

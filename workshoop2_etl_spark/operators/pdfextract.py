@@ -64,11 +64,11 @@ from __future__ import annotations
 import hashlib
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from workshoop2_etl_spark.operators.rows import map_rows
 
 __all__ = [
     "build_pdf",
@@ -981,6 +981,16 @@ def _glyph_to_char(name: str) -> str:
     return "�"
 
 
+def _table_decoder(table: dict[int, str]):
+    """Byte-string decoder: each code through ``table``, WinAnsi for
+    codes the table does not map."""
+
+    def dec(bs: bytes) -> str:
+        return "".join(table.get(b, _winansi(bytes([b]))) for b in bs)
+
+    return dec
+
+
 def _differences_decoder(pdf: _Pdf, enc: dict):
     """§9.6.5 /Encoding dictionary: /BaseEncoding overlaid with the
     /Differences array's (code, glyph-name…) runs."""
@@ -994,13 +1004,7 @@ def _differences_decoder(pdf: _Pdf, enc: dict):
         elif isinstance(item, _Name):
             table[code] = _glyph_to_char(str(item))
             code += 1
-
-    def dec(bs: bytes) -> str:
-        return "".join(
-            table.get(b, _winansi(bytes([b]))) for b in bs
-        )
-
-    return dec
+    return _table_decoder(table)
 
 
 def _font_decoder(pdf: _Pdf, font: dict):
@@ -1011,12 +1015,7 @@ def _font_decoder(pdf: _Pdf, font: dict):
         )
     tu = pdf.resolve(font.get("ToUnicode"))
     if isinstance(tu, _Stream):
-        table = _parse_tounicode(pdf.stream_bytes(tu))
-
-        def dec(bs: bytes) -> str:
-            return "".join(table.get(b, _winansi(bytes([b]))) for b in bs)
-
-        return dec
+        return _table_decoder(_parse_tounicode(pdf.stream_bytes(tu)))
     enc = pdf.resolve(font.get("Encoding"))
     if isinstance(enc, dict) and "Differences" in enc:
         return _differences_decoder(pdf, enc)
@@ -1356,28 +1355,24 @@ def pdf_synthesize(
     layout (xref stream + /ObjStm), ``'table'`` the classic one;
     ``encrypt='rc4-40'|'rc4-128'`` the standard-security-handler
     empty-password encrypted class."""
-    schema = T.StructType(
-        [df.schema[id_col], T.StructField(out_col, T.BinaryType())]
+
+    def build(text):
+        return (
+            build_pdf(
+                text if isinstance(text, str) else "",
+                lines_per_page=lines_per_page,
+                xref_mode=xref_mode,
+                encrypt=encrypt,
+            ),
+        )
+
+    return map_rows(
+        df,
+        [text_col],
+        build,
+        [T.StructField(out_col, T.BinaryType())],
+        keep=[id_col],
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_ in it:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf_[id_col],
-                    out_col: [
-                        build_pdf(
-                            t if isinstance(t, str) else "",
-                            lines_per_page=lines_per_page,
-                            xref_mode=xref_mode,
-                            encrypt=encrypt,
-                        )
-                        for t in pdf_[text_col]
-                    ],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(batches, schema)
 
 
 def pdf_extract(
@@ -1390,31 +1385,25 @@ def pdf_extract(
     """(id, pdf binary) → (id, extracted text); parse errors surface
     as NULL text with the error in ``pdf_error`` (a corrupt crawl
     blob must not kill the batch — the WARC-chapter convention)."""
-    schema = T.StructType(
+
+    def extract(blob):
+        # EVERY parse failure maps to NULL text + pdf_error — fuzzed
+        # crawl blobs raise far beyond ValueError (AttributeError from
+        # /Root resolving to a non-dict, TypeError, KeyError,
+        # RecursionError from deep object cycles), and one bad blob
+        # must not kill the task.
+        try:
+            return extract_pdf_text(bytes(blob)), None
+        except Exception as exc:  # noqa: BLE001 — see above
+            return None, f"{type(exc).__name__}: {exc}"
+
+    return map_rows(
+        df,
+        [blob_col],
+        extract,
         [
-            df.schema[id_col],
             T.StructField(out_col, T.StringType()),
             T.StructField("pdf_error", T.StringType()),
-        ]
+        ],
+        keep=[id_col],
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_ in it:
-            texts, errs = [], []
-            for blob in pdf_[blob_col]:
-                # EVERY parse failure maps to NULL text + pdf_error —
-                # fuzzed crawl blobs raise far beyond ValueError
-                # (AttributeError from /Root resolving to a non-dict,
-                # TypeError, KeyError, RecursionError from deep object
-                # cycles), and one bad blob must not kill the task.
-                try:
-                    texts.append(extract_pdf_text(bytes(blob)))
-                    errs.append(None)
-                except Exception as exc:  # noqa: BLE001 — see above
-                    texts.append(None)
-                    errs.append(f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame(
-                {id_col: pdf_[id_col], out_col: texts, "pdf_error": errs}
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(batches, schema)

@@ -36,12 +36,12 @@ documented most-specific-wins convention.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from workshoop2_etl_spark.operators.rows import flat_map_rows, map_rows
 
 
 def rule_to_regex(path: str) -> str | None:
@@ -161,30 +161,22 @@ def parse_robots(
     compiled wildcard pattern, NULL for plain prefix rules). Pure
     map; EACH robots file is KB-sized; whether the union of rules
     broadcasts is :func:`robots_filter`'s size-gated decision."""
-    ids = key_cols or [c for c in df.columns if c != text_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
+
+    def rules(text):
+        for path, allow in parse_robots_text(text, agent):
+            yield path, allow, rule_to_regex(path)
+
+    return flat_map_rows(
+        df,
+        [text_col],
+        rules,
+        [
             T.StructField("rule_path", T.StringType()),
             T.StructField("allow", T.BooleanType()),
             T.StructField("rule_regex", T.StringType()),
-        ]
+        ],
+        keep=key_cols,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                for path, allow in parse_robots_text(r[text_col], agent):
-                    rows.append(
-                        tuple(r[c] for c in ids)
-                        + (path, allow, rule_to_regex(path))
-                    )
-            yield pd.DataFrame(
-                rows, columns=ids + ["rule_path", "allow", "rule_regex"]
-            )
-
-    return df.mapInPandas(batches, schema)
 
 
 def parse_crawl_delays(
@@ -200,21 +192,13 @@ def parse_crawl_delays(
     frontier_waves` turns into a per-domain wave cap, closing the
     robots → frontier edge (r10 verdict item 4). Pure map, same
     at-scale shape as :func:`parse_robots`."""
-    ids = key_cols or [c for c in df.columns if c != text_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [T.StructField("crawl_delay", T.DoubleType())]
+    return map_rows(
+        df,
+        [text_col],
+        lambda text: (crawl_delay_text(text, agent),),
+        [T.StructField("crawl_delay", T.DoubleType())],
+        keep=key_cols,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf[ids].copy()
-            out["crawl_delay"] = [
-                crawl_delay_text(t, agent) for t in pdf[text_col]
-            ]
-            yield out
-
-    return df.mapInPandas(batches, schema)
 
 
 def should_broadcast(rel: DataFrame) -> bool:

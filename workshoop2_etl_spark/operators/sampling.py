@@ -14,13 +14,12 @@ Operators:
 - :func:`hash_split` — train/val/test assignment by bucket threshold
   (pure projection: scan-speed, no shuffle, resolution 1/buckets);
 - :func:`stratified_sample` — exact per-stratum fraction via
-  hash-ranked ``row_number`` (one shuffle on the strata key), or the
-  shuffle-free approximate hash-threshold path for 100 TB runs;
+  hash-ranked ``row_number`` (one shuffle on the strata key);
 - :func:`token_budget_sample` — greedy budget fill per group in hash
   order (running-sum window), e.g. "2 B tokens per language".
 
-Scale notes: ``hash_split`` and the approximate sampler are narrow
-projections that run at scan speed at any size. The exact sampler and
+Scale notes: ``hash_split`` is a narrow projection that runs at
+scan speed at any size. The stratified sampler and
 the budget sampler shuffle once on the group key and sort within
 groups — the per-group sort is distributed (range-partitioned window),
 but a single giant stratum degenerates to one partition's sort, the
@@ -98,32 +97,23 @@ def stratified_sample(
     fraction: float,
     id_col: str,
     salt: str = "",
-    exact: bool = True,
 ) -> DataFrame:
     """Sample ``fraction`` of each stratum, deterministically.
 
-    ``exact=True`` ranks rows within each stratum by (md5(id), id)
-    and keeps ``row_number <= ceil(fraction * stratum_size)`` — the
-    sample size per stratum is exact, at the cost of one shuffle on
-    ``strata_cols`` and a per-stratum sort.
-
-    ``exact=False`` keeps rows whose hash bucket clears the fraction
-    threshold — zero shuffle, scan-speed, sample size binomial around
-    the target (the right trade at 100 TB where ±0.1% is noise).
-    Both paths are id-stable: a kept document stays kept on reruns.
+    Ranks rows within each stratum by (md5(id), id) and keeps
+    ``row_number <= ceil(fraction * stratum_size)`` — the sample size
+    per stratum is exact, at the cost of one shuffle on
+    ``strata_cols`` and a per-stratum sort. Id-stable: a kept
+    document stays kept on reruns.
     """
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    if exact and not strata_cols:
+    if not strata_cols:
         raise ValueError(
-            "exact stratified_sample without strata_cols sorts the "
-            "entire dataset in ONE partition; pass strata_cols or use "
-            "exact=False (hash-threshold, shuffle-free)"
+            "stratified_sample without strata_cols sorts the entire "
+            "dataset in ONE partition; pass strata_cols, or hash_split "
+            "for a shuffle-free unstratified sample"
         )
-    if not exact:
-        buckets = 1_000_000
-        bucket = hash_bucket(id_col, buckets=buckets, salt=salt)
-        return df.filter(bucket < int(round(fraction * buckets)))
     h = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
     w = Window.partitionBy(*strata_cols)
     order = w.orderBy(h.asc(), F.col(id_col).asc())
@@ -165,7 +155,7 @@ def mixture_sample(
     then one shuffle of the kept groups on ``group_col`` for the
     per-group hash-order ``row_number``. Quota ranking concentrates
     each group in one partition's sort — fine for real source counts
-    (dozens), same caveat as :func:`stratified_sample` ``exact=True``.
+    (dozens), same caveat as :func:`stratified_sample`.
     """
     if not weights:
         raise ValueError("weights must name at least one group")

@@ -31,11 +31,11 @@ The reference has no crawl handling; §2.9 extension surface (X193).
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from workshoop2_etl_spark.operators.rows import flat_map_rows
 
 
 def _local(tag: str) -> str:
@@ -98,31 +98,19 @@ def parse_sitemaps(
     is_index``. Pure Arrow-batched map — the fan-out happens inside
     the task, no shuffle, no driver involvement (the WARC record
     kernel's shape, ``operators/warc.py``)."""
-    ids = key_cols or [c for c in df.columns if c != xml_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
+    return flat_map_rows(
+        df,
+        [xml_col],
+        parse_sitemap_xml,
+        [
             T.StructField("loc", T.StringType()),
             T.StructField("lastmod", T.StringType()),
             T.StructField("changefreq", T.StringType()),
             T.StructField("priority", T.DoubleType()),
             T.StructField("is_index", T.BooleanType()),
-        ]
+        ],
+        keep=key_cols,
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                for parsed in parse_sitemap_xml(r[xml_col]):
-                    rows.append(tuple(r[c] for c in ids) + parsed)
-            yield pd.DataFrame(
-                rows,
-                columns=ids
-                + ["loc", "lastmod", "changefreq", "priority", "is_index"],
-            )
-
-    return df.mapInPandas(batches, schema)
 
 
 def sitemap_urls_from_robots(text: str) -> list[str]:

@@ -201,8 +201,6 @@ def apply_cdc(
     *,
     op_col: str = "op",
     seq_col: str = "seq",
-    broadcast_changes: bool = True,
-    validate_ops: bool = True,
 ) -> DataFrame:
     """Apply a change-data-capture feed (insert/update/delete) to a
     snapshot, set-wise — the missing third verb of :func:`upsert_dim`
@@ -219,41 +217,32 @@ def apply_cdc(
     the key), then the snapshot anti-joins every changed key (touched
     rows leave) and the non-delete survivors union back in. The base
     table shuffles once; at 100 TB base >> changes, so the anti-join's
-    change side is broadcastable.
+    change side is broadcast — the reduced change-key set ships to
+    executors and the base table never shuffles for eviction.
 
-    ``broadcast_changes`` (default True) matches the base >> changes
-    case — the reduced change-key set ships to executors and the base
-    table never shuffles for eviction. A bulk backfill where the feed
-    itself is huge would OOM the driver on that broadcast: pass False
-    and the anti-join plans a regular shuffled join instead.
-
-    ``validate_ops`` (default True) enforces ``op_col`` ∈ {I,U,D} at
-    execution time, per row, executor-side (``assert_true`` — no extra
-    scan, no driver hop): an unknown or NULL verb fails the job with
-    the offending value in the message. Without validation a NULL op
-    would silently delete (``__op != 'D'`` is NULL-false) and a typo'd
-    verb would silently upsert. Pass False only when the feed is
-    already contract-checked upstream.
+    ``op_col`` ∈ {I,U,D} is enforced at execution time, per row,
+    executor-side (``assert_true`` — no extra scan, no driver hop): an
+    unknown or NULL verb fails the job with the offending value in the
+    message. Without the check a NULL op would silently delete
+    (``__op != 'D'`` is NULL-false) and a typo'd verb would silently
+    upsert.
     """
     data_cols = [c for c in base.columns]
     missing = [c for c in data_cols if c not in changes.columns]
     if missing:
         raise ValueError(f"changes lack base columns: {missing}")
-    if validate_ops:
-        ok = F.coalesce(
-            F.col(op_col).isin("I", "U", "D"), F.lit(False)
-        )
-        checked = F.when(
-            F.assert_true(
-                ok,
-                F.concat(
-                    F.lit("apply_cdc: op must be one of I/U/D, got "),
-                    F.coalesce(F.col(op_col), F.lit("NULL")),
-                ),
-            ).isNull(),
-            F.col(op_col),
-        )
-        changes = changes.withColumn(op_col, checked)
+    ok = F.coalesce(F.col(op_col).isin("I", "U", "D"), F.lit(False))
+    checked = F.when(
+        F.assert_true(
+            ok,
+            F.concat(
+                F.lit("apply_cdc: op must be one of I/U/D, got "),
+                F.coalesce(F.col(op_col), F.lit("NULL")),
+            ),
+        ).isNull(),
+        F.col(op_col),
+    )
+    changes = changes.withColumn(op_col, checked)
     latest = (
         changes.groupBy(*key_cols)
         .agg(
@@ -270,9 +259,7 @@ def apply_cdc(
             if c not in key_cols
         ])
     )
-    changed_keys = latest.select(*key_cols)
-    if broadcast_changes:
-        changed_keys = F.broadcast(changed_keys)
+    changed_keys = F.broadcast(latest.select(*key_cols))
     untouched = base.join(changed_keys, key_cols, "left_anti")
     survivors = latest.filter(F.col("__op") != F.lit("D")).select(
         *key_cols,

@@ -31,11 +31,12 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from workshoop2_etl_spark.operators.rows import flat_map_rows, map_rows
 
 _CRLF2 = b"\r\n\r\n"
 
@@ -458,6 +459,23 @@ def parse_warc_record(rec: bytes):
     )
 
 
+#: The record columns :func:`parse_warc_record` returns, in order.
+WARC_RECORD_FIELDS = [
+    T.StructField("warc_type", T.StringType()),
+    T.StructField("target_uri", T.StringType()),
+    T.StructField("http_status", T.IntegerType()),
+    T.StructField("content_type", T.StringType()),
+    T.StructField("payload", T.BinaryType()),
+    T.StructField("location", T.StringType()),
+    T.StructField("record_id", T.StringType()),
+    T.StructField("refers_to", T.StringType()),
+    T.StructField("payload_digest", T.StringType()),
+    T.StructField("etag", T.StringType()),
+    T.StructField("last_modified", T.StringType()),
+    T.StructField("encoding_stub", T.StringType()),
+]
+
+
 def parse_warc_blobs(
     df: DataFrame,
     blob_col: str = "content",
@@ -477,70 +495,28 @@ def parse_warc_blobs(
     their bytes under a non-NULL ``encoding_stub``). Pure map —
     records fan out inside the task, no shuffle, no driver
     involvement."""
-    ids = id_cols or [c for c in df.columns if c != blob_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
-            T.StructField("warc_type", T.StringType()),
-            T.StructField("target_uri", T.StringType()),
-            T.StructField("http_status", T.IntegerType()),
-            T.StructField("content_type", T.StringType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("location", T.StringType()),
-            T.StructField("record_id", T.StringType()),
-            T.StructField("refers_to", T.StringType()),
-            T.StructField("payload_digest", T.StringType()),
-            T.StructField("etag", T.StringType()),
-            T.StructField("last_modified", T.StringType()),
-            T.StructField("encoding_stub", T.StringType()),
-        ]
+
+    def records(blob):
+        blob = blob or b""
+        if blob.startswith(b"\x1f\x8b"):
+            recs_iter = split_warc_gz(blob)
+        elif blob.startswith(ZSTD_MAGIC):
+            # .warc.zst (round 14): concatenated independent zstd
+            # frames decode in ONE pyarrow streaming read, then frame
+            # through the plain walk; a corrupt blob yields zero
+            # records, not a crash
+            plain = _arrow_decompress(blob, "zstd", cap=_MAX_DECODED_FILE)
+            recs_iter = split_warc(plain) if plain else []
+        else:
+            recs_iter = split_warc(blob)
+        for rec in recs_iter:
+            parsed = parse_warc_record(rec)
+            if parsed is not None:
+                yield parsed
+
+    return flat_map_rows(
+        df, [blob_col], records, WARC_RECORD_FIELDS, keep=id_cols
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = r[blob_col] or b""
-                if blob.startswith(b"\x1f\x8b"):
-                    recs_iter = split_warc_gz(blob)
-                elif blob.startswith(ZSTD_MAGIC):
-                    # .warc.zst (round 14): concatenated independent
-                    # zstd frames decode in ONE pyarrow streaming
-                    # read, then frame through the plain walk; a
-                    # corrupt blob yields zero records, not a crash
-                    plain = _arrow_decompress(
-                        blob, "zstd", cap=_MAX_DECODED_FILE
-                    )
-                    recs_iter = split_warc(plain) if plain else []
-                else:
-                    recs_iter = split_warc(blob)
-                for rec in recs_iter:
-                    parsed = parse_warc_record(rec)
-                    if parsed is None:
-                        continue
-                    rows.append(
-                        tuple(r[c] for c in ids) + parsed
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=ids
-                + [
-                    "warc_type",
-                    "target_uri",
-                    "http_status",
-                    "content_type",
-                    "payload",
-                    "location",
-                    "record_id",
-                    "refers_to",
-                    "payload_digest",
-                    "etag",
-                    "last_modified",
-                    "encoding_stub",
-                ],
-            )
-
-    return df.mapInPandas(batches, schema)
 
 
 def resolve_redirects(
@@ -570,8 +546,6 @@ def resolve_redirects(
     to filter). Duplicate fetches of one URI collapse to the first.
     (r10 verdict item 7 — engine extension; reference has no crawl
     surface.)"""
-    from pyspark.sql import functions as F
-
     from workshoop2_etl_spark.functions.urls import resolve_href
 
     if max_hops < 0:
@@ -669,8 +643,6 @@ def materialize_revisits(parsed: DataFrame) -> DataFrame:
     100 TB: re-fetched duplicates cost header rows, not content
     copies. Revisits whose referent is outside the parsed set drop
     (their content genuinely isn't here)."""
-    from pyspark.sql import functions as F
-
     responses = parsed.where(F.col("warc_type") == "response")
     revisits = parsed.where(F.col("warc_type") == "revisit").select(
         F.col("target_uri").alias("revisit_uri"),
@@ -742,34 +714,23 @@ def export_wet(
     record (the id set is the contract)."""
     if per_file < 1:
         raise ValueError(f"per_file must be >= 1, got {per_file}")
-    ids_needed = [id_col, text_col] + ([uri_col] if uri_col else [])
-    rec_schema = T.StructType(
+
+    def to_record(i, text, *uri):
+        rec = synthesize_wet_record(
+            int(i), text, host=host, uri=str(uri[0]) if uri else None
+        )
+        return int(i), gzip_warc_record(rec) if gzip_members else rec
+
+    recs = map_rows(
+        df,
+        [id_col, text_col] + ([uri_col] if uri_col else []),
+        to_record,
         [
             T.StructField("__id", T.LongType()),
             T.StructField("__rec", T.BinaryType()),
-        ]
+        ],
+        keep=[],
     )
-
-    def to_records(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            recs = []
-            for _, r in pdf.iterrows():
-                rec = synthesize_wet_record(
-                    int(r[id_col]),
-                    r[text_col],
-                    host=host,
-                    uri=str(r[uri_col]) if uri_col else None,
-                )
-                if gzip_members:
-                    rec = gzip_warc_record(rec)
-                recs.append(rec)
-            yield pd.DataFrame(
-                {"__id": pdf[id_col].astype("int64"), "__rec": recs}
-            )
-
-    from pyspark.sql import functions as F
-
-    recs = df.select(*ids_needed).mapInPandas(to_records, rec_schema)
     head = gzip_warc_record(WET_WARCINFO) if gzip_members else WET_WARCINFO
     return (
         recs.groupBy(

@@ -45,12 +45,12 @@ from __future__ import annotations
 
 import bz2
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from workshoop2_etl_spark.operators.rows import flat_map_rows
 
 #: Fixed template-removal passes: K passes strip K nesting levels of
 #: ``{{…}}``. Real dumps rarely nest deeper than 3; deeper leftovers
@@ -109,6 +109,16 @@ def _unescape_xml(b: bytes) -> str:
     )
 
 
+#: The page columns :func:`parse_wiki_pages` returns, in order.
+PAGE_FIELDS = [
+    T.StructField("page_id", T.LongType()),
+    T.StructField("ns", T.IntegerType()),
+    T.StructField("title", T.StringType()),
+    T.StructField("is_redirect", T.BooleanType()),
+    T.StructField("text_wiki", T.StringType()),
+]
+
+
 def parse_wiki_pages(xml: bytes) -> list[tuple]:
     """All ``<page>`` elements of one decompressed stream →
     [(page_id, ns, title, is_redirect, text_wiki)]. Pages missing an
@@ -149,37 +159,16 @@ def parse_wikidump_blobs(
     Pure Arrow map — pages fan out inside the task, no shuffle, no
     driver involvement. Plain (non-bz2) XML blobs parse too (the
     decompressed and raw paths share the page walk)."""
-    ids = id_cols or [c for c in df.columns if c != blob_col]
-    schema = T.StructType(
-        [df.schema[c] for c in ids]
-        + [
-            T.StructField("page_id", T.LongType()),
-            T.StructField("ns", T.IntegerType()),
-            T.StructField("title", T.StringType()),
-            T.StructField("is_redirect", T.BooleanType()),
-            T.StructField("text_wiki", T.StringType()),
-        ]
-    )
-    out_cols = ids + ["page_id", "ns", "title", "is_redirect", "text_wiki"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = r[blob_col] or b""
-                streams = (
-                    split_bz2_streams(blob)
-                    if blob.startswith(b"BZh")
-                    else [blob]
-                )
-                for xml in streams:
-                    for page in parse_wiki_pages(xml):
-                        if page[3] and not keep_redirects:
-                            continue
-                        rows.append(tuple(r[c] for c in ids) + page)
-            yield pd.DataFrame(rows, columns=out_cols)
+    def pages(blob):
+        blob = blob or b""
+        bz = blob.startswith(b"BZh")
+        for xml in split_bz2_streams(blob) if bz else [blob]:
+            for page in parse_wiki_pages(xml):
+                if keep_redirects or not page[3]:
+                    yield page
 
-    return df.mapInPandas(batches, schema)
+    return flat_map_rows(df, [blob_col], pages, PAGE_FIELDS, keep=id_cols)
 
 
 #: The wikitext→plain rule chain, ONE source of truth for both
@@ -352,39 +341,28 @@ def fetch_wiki_streams_by_index(
         "inner",
     ).select(files[filename_col], files[blob_col], "__offsets")
 
-    schema = T.StructType(
-        [
-            T.StructField(filename_col, T.StringType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("page_id", T.LongType()),
-            T.StructField("ns", T.IntegerType()),
-            T.StructField("title", T.StringType()),
-            T.StructField("is_redirect", T.BooleanType()),
-            T.StructField("text_wiki", T.StringType()),
-        ]
+    def pages(blob, offsets):
+        blob = blob or b""
+        for off in offsets:
+            off = int(off)
+            if off < 0 or off >= len(blob):
+                continue  # stale index entry: skip, not raise
+            if not blob.startswith(b"BZh", off):
+                continue
+            dec = bz2.BZ2Decompressor()
+            try:
+                xml = dec.decompress(blob[off:])
+            except OSError:
+                continue
+            if not dec.eof:
+                continue
+            for page in parse_wiki_pages(xml):
+                yield (off,) + page
+
+    return flat_map_rows(
+        joined,
+        [blob_col, "__offsets"],
+        pages,
+        [T.StructField("offset", T.LongType())] + PAGE_FIELDS,
+        keep=[filename_col],
     )
-    cols = [f.name for f in schema.fields]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = r[blob_col] or b""
-                for off in r["__offsets"]:
-                    off = int(off)
-                    if off < 0 or off >= len(blob):
-                        continue  # stale index entry: skip, not raise
-                    if not blob.startswith(b"BZh", off):
-                        continue
-                    dec = bz2.BZ2Decompressor()
-                    try:
-                        xml = dec.decompress(blob[off:])
-                    except OSError:
-                        continue
-                    if not dec.eof:
-                        continue
-                    for page in parse_wiki_pages(xml):
-                        rows.append((r[filename_col], off) + page)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return joined.mapInPandas(batches, schema)

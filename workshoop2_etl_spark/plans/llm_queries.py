@@ -47,6 +47,7 @@ from workshoop2_etl_spark.operators.textstats import (
     token_stats,
     word_frequencies,
 )
+from workshoop2_etl_spark.operators.rows import flat_map_rows, map_rows
 from workshoop2_etl_spark.plans.reference_queries import _register, _t
 from workshoop2_etl_spark.sources.readers import (
     ensure_parallelism,
@@ -3539,33 +3540,20 @@ def _warc_file_blobs(
         zstd_warc_record,
     )
 
-    rec_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("rec", T.BinaryType()),
-        ]
-    )
+    def to_record(i, v):
+        r = make_record(int(i), v)
+        if gzip_when is not None and gzip_when(int(i) // per_file):
+            r = gzip_warc_record(r)
+        elif zstd_when is not None and zstd_when(int(i) // per_file):
+            r = zstd_warc_record(r)
+        return (r,)
 
-    def to_records(it):
-        for pdf in it:
-            out = pdf[["doc_id"]].copy()
-            recs = []
-            for i, v in zip(pdf["doc_id"], pdf[value_col]):
-                r = make_record(int(i), v)
-                if gzip_when is not None and gzip_when(
-                    int(i) // per_file
-                ):
-                    r = gzip_warc_record(r)
-                elif zstd_when is not None and zstd_when(
-                    int(i) // per_file
-                ):
-                    r = zstd_warc_record(r)
-                recs.append(r)
-            out["rec"] = recs
-            yield out
-
-    recs = df.select("doc_id", value_col).mapInPandas(
-        to_records, rec_schema
+    recs = map_rows(
+        df,
+        ["doc_id", value_col],
+        to_record,
+        [T.StructField("rec", T.BinaryType())],
+        keep=["doc_id"],
     )
     # ``spread=True``: spread_groups before the blob fold — the
     # ~1-2 MB record shuffle AQE-coalesces to ONE post-shuffle
@@ -4300,18 +4288,14 @@ def fix_mojibake_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
 
-    def corrupt(it):
-        for pdf in it:
-            out = pdf.copy()
-            out["text"] = [
-                t.encode("utf-8").decode("latin-1")
-                if t is not None
-                else None
-                for t in pdf["text"]
-            ]
-            yield out
-
-    mangled = docs.mapInPandas(corrupt, docs.schema)
+    mangled = map_rows(
+        docs,
+        ["text"],
+        lambda t: (
+            None if t is None else t.encode("utf-8").decode("latin-1"),
+        ),
+        [docs.schema["text"]],
+    )
     repaired = fix_mojibake(mangled, "text", flag_col="was_fixed")
     return repaired.select(
         "doc_id",
@@ -6162,27 +6146,17 @@ def cdx_range_fetch_documents(
     docs = _tp(spark, sf_dir, "documents").select("doc_id", "text")
     pages = synthesize_html(docs).select("doc_id", "html")
 
-    member_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("member", T.BinaryType()),
-        ]
-    )
-
-    def to_members(it):
-        for pdf in it:
-            out = pdf[["doc_id"]].copy()
-            out["member"] = [
-                gzip_warc_record(
-                    synthesize_warc_record(
-                        int(i), h, host="www.site.com"
-                    )
-                )
-                for i, h in zip(pdf["doc_id"], pdf["html"])
-            ]
-            yield out
-
-    members = pages.mapInPandas(to_members, member_schema).select(
+    members = map_rows(
+        pages,
+        ["doc_id", "html"],
+        lambda i, h: (
+            gzip_warc_record(
+                synthesize_warc_record(int(i), h, host="www.site.com")
+            ),
+        ),
+        [T.StructField("member", T.BinaryType())],
+        keep=["doc_id"],
+    ).select(
         "doc_id",
         F.concat(
             F.lit("crawl-"),
@@ -6276,6 +6250,25 @@ ORDER BY doc_id
 )
 
 
+def _block_bmps(
+    df: DataFrame, text_col: str, cols: int | None = None
+) -> DataFrame:
+    """``doc_id`` + ``payload``: the image-hash fixture BMP of each
+    row's ``text_col`` (:func:`operators.multimodal.synth_block_bmp`,
+    ``cols`` blocks per row)."""
+    from pyspark.sql import types as T
+
+    from workshoop2_etl_spark.operators.multimodal import synth_block_bmp
+
+    return map_rows(
+        df,
+        ["doc_id", text_col],
+        lambda i, t: (synth_block_bmp(int(i), t, cols=cols),),
+        [T.StructField("payload", T.BinaryType())],
+        keep=["doc_id"],
+    )
+
+
 @_register("image_ahash_documents", _AHASH_SQL)
 def image_ahash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image hashing over REAL decoded pixels
@@ -6288,31 +6281,12 @@ def image_ahash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the popcount). Every arithmetic step is integer, which is
     what makes a lossy-looking perceptual sketch exactly
     cross-engine-checkable. Pure Arrow map, no shuffle."""
-    from pyspark.sql import types as T
-
     from workshoop2_etl_spark.operators.multimodal import (
         perceptual_hash_images,
-        synth_block_bmp,
     )
 
     docs = _tp(spark, sf_dir, "documents").select("doc_id", "text")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def to_bmps(it):
-        for pdf in it:
-            out = pdf[["doc_id"]].copy()
-            out["payload"] = [
-                synth_block_bmp(int(i), t)
-                for i, t in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield out
-
-    bmps = docs.mapInPandas(to_bmps, schema)
+    bmps = _block_bmps(docs, "text")
     return perceptual_hash_images(
         bmps, "payload", id_cols=["doc_id"]
     ).orderBy("doc_id")
@@ -6372,31 +6346,10 @@ def image_dhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     long, popcount — from ``md5(text)`` alone. Pure Arrow map, no
     shuffle; the packed long drops into the same Manku pair search
     as aHash."""
-    from pyspark.sql import types as T
-
-    from workshoop2_etl_spark.operators.multimodal import (
-        dhash_images,
-        synth_block_bmp,
-    )
+    from workshoop2_etl_spark.operators.multimodal import dhash_images
 
     docs = _tp(spark, sf_dir, "documents").select("doc_id", "text")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def to_bmps(it):
-        for pdf in it:
-            out = pdf[["doc_id"]].copy()
-            out["payload"] = [
-                synth_block_bmp(int(i), t, cols=9)
-                for i, t in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield out
-
-    bmps = docs.mapInPandas(to_bmps, schema)
+    bmps = _block_bmps(docs, "text", cols=9)
     return dhash_images(bmps, "payload", id_cols=["doc_id"]).orderBy(
         "doc_id"
     )
@@ -6452,12 +6405,9 @@ def image_ahash_pairs_documents(
     and self-joins with ``bit_count(xor(...))``, so accidental
     cross-pair collisions (if any) are demanded too, and a missed
     planted twin breaks the count."""
-    from pyspark.sql import types as T
-
     from workshoop2_etl_spark.operators.dedup import simhash_neardup_pairs
     from workshoop2_etl_spark.operators.multimodal import (
         perceptual_hash_images,
-        synth_block_bmp,
     )
 
     docs = _tp(spark, sf_dir, "documents").select("doc_id", "text")
@@ -6468,23 +6418,7 @@ def image_ahash_pairs_documents(
         "doc_id",
         (F.col("doc_id") - F.col("doc_id") % 2).alias("anchor_id"),
     ).join(anchors, "anchor_id")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-
-    def to_bmps(it):
-        for pdf in it:
-            out = pdf[["doc_id"]].copy()
-            out["payload"] = [
-                synth_block_bmp(int(i), t)
-                for i, t in zip(pdf["doc_id"], pdf["atext"])
-            ]
-            yield out
-
-    bmps = paired.select("doc_id", "atext").mapInPandas(to_bmps, schema)
+    bmps = _block_bmps(paired, "atext")
     hashes = perceptual_hash_images(
         bmps, "payload", id_cols=["doc_id"]
     ).select("doc_id", "ahash")
@@ -6609,27 +6543,13 @@ def sitemap_ingest_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("robots_txt"),
     )
 
-    def extract_directive(it):
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                for u in sitemap_urls_from_robots(r["robots_txt"]):
-                    rows.append((int(r["dom_no"]), r["index_xml"], u))
-            yield pd.DataFrame(
-                rows, columns=["dom_no", "index_xml", "sitemap_url"]
-            )
-
     from pyspark.sql import types as T
 
-    discovered = robots.mapInPandas(
-        extract_directive,
-        T.StructType(
-            [
-                T.StructField("dom_no", T.IntegerType()),
-                T.StructField("index_xml", T.StringType()),
-                T.StructField("sitemap_url", T.StringType()),
-            ]
-        ),
+    discovered = flat_map_rows(
+        robots,
+        ["robots_txt"],
+        lambda t: ((u,) for u in sitemap_urls_from_robots(t)),
+        [T.StructField("sitemap_url", T.StringType())],
     )
 
     # level 1: parse the discovered index -> child sitemap locs
@@ -6973,37 +6893,26 @@ def charset_decode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
 
-    def encode(it):
-        import codecs
+    import codecs
 
-        for pdf in it:
-            out = pdf[["doc_id"]].copy()
-            payloads = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                branch = int(i) % 4
-                if branch == 0:
-                    payloads.append(t.encode("utf-8"))
-                elif branch == 1:
-                    payloads.append(codecs.BOM_UTF8 + t.encode("utf-8"))
-                elif branch == 2:
-                    payloads.append(
-                        codecs.BOM_UTF16_LE + t.encode("utf-16-le")
-                    )
-                else:
-                    payloads.append(t.encode("cp1252"))
-            out["payload"] = payloads
-            yield out
+    from pyspark.sql import types as T
 
-    import pyspark.sql.types as T2
+    def encode(i, t):
+        branch = int(i) % 4
+        if branch == 0:
+            return (t.encode("utf-8"),)
+        if branch == 1:
+            return (codecs.BOM_UTF8 + t.encode("utf-8"),)
+        if branch == 2:
+            return (codecs.BOM_UTF16_LE + t.encode("utf-16-le"),)
+        return (t.encode("cp1252"),)
 
-    raw = docs.mapInPandas(
+    raw = map_rows(
+        docs,
+        ["doc_id", "text"],
         encode,
-        T2.StructType(
-            [
-                T2.StructField("doc_id", T2.LongType()),
-                T2.StructField("payload", T2.BinaryType()),
-            ]
-        ),
+        [T.StructField("payload", T.BinaryType())],
+        keep=["doc_id"],
     )
     return (
         decode_bytes(raw, "payload", id_cols=["doc_id"])
@@ -7077,20 +6986,19 @@ def crawl_prep_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _tp(spark, sf_dir, "documents").select("doc_id", "text")
     pages = synthesize_html(docs).select("doc_id", "html")
 
-    rec_schema = "doc_id long, rec binary"
+    from pyspark.sql import types as T
 
-    def to_records(it):
-        for pdf in it:
-            out = pdf[["doc_id"]].copy()
-            out["rec"] = [
-                synthesize_warc_record(
-                    int(i), h, host=f"www.site{int(i) % 7}.com"
-                )
-                for i, h in zip(pdf["doc_id"], pdf["html"])
-            ]
-            yield out
-
-    recs = pages.mapInPandas(to_records, rec_schema)
+    recs = map_rows(
+        pages,
+        ["doc_id", "html"],
+        lambda i, h: (
+            synthesize_warc_record(
+                int(i), h, host=f"www.site{int(i) % 7}.com"
+            ),
+        ),
+        [T.StructField("rec", T.BinaryType())],
+        keep=["doc_id"],
+    )
     # heavy parse+decode+extract chain downstream of the fold: keep
     # the kernels off a single AQE-coalesced task (see
     # _warc_file_blobs spread note; r14 opt).
@@ -7239,36 +7147,24 @@ def pdf_encrypted_extract_documents(
         build_pdf as _build,
     )
     from pyspark.sql import types as T
-    import pandas as pd
-    from collections.abc import Iterator
 
     docs = _tp(spark, sf_dir, "documents").select(
         "doc_id",
         F.regexp_replace(F.col("text"), r"[^ -~\n]", "").alias("t"),
     )
-    schema = T.StructType(
-        [docs.schema["doc_id"], T.StructField("pdf", T.BinaryType())]
+    pdfs = map_rows(
+        docs,
+        ["doc_id", "t"],
+        lambda i, t: (
+            _build(
+                t if isinstance(t, str) else "",
+                lines_per_page=25,
+                encrypt="rc4-128" if i % 2 else "rc4-40",
+            ),
+        ),
+        [T.StructField("pdf", T.BinaryType())],
+        keep=["doc_id"],
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_ in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf_["doc_id"],
-                    "pdf": [
-                        _build(
-                            t if isinstance(t, str) else "",
-                            lines_per_page=25,
-                            encrypt=(
-                                "rc4-128" if i % 2 else "rc4-40"
-                            ),
-                        )
-                        for i, t in zip(pdf_["doc_id"], pdf_["t"])
-                    ],
-                }
-            )
-
-    pdfs = docs.mapInPandas(batches, schema)
     return (
         pdf_extract(pdfs, "doc_id", "pdf")
         .select(
