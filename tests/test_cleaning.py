@@ -47,6 +47,35 @@ def test_first_is_by_explicit_order(spark):
     assert out[0]["name"] == "first"
 
 
+def test_mode_float_edge_cases(spark):
+    nan = float("nan")
+    df = spark.createDataFrame(
+        [
+            # -0.0 and 0.0 are one value: 3 of them beat two 7.0s
+            ("a", 0.0, 1), ("a", -0.0, 2), ("a", 7.0, 3), ("a", 7.0, 4),
+            ("a", -0.0, 5),
+            # NaN counts as a value and wins on count ...
+            ("b", nan, 1), ("b", nan, 2), ("b", 1.0, 3),
+            # ... but sorts above every number on a tie
+            ("c", nan, 1), ("c", 2.0, 2),
+            ("d", None, 1), ("d", None, 2),  # all-null group
+            (None, 3.0, 1), (None, 3.0, 2),  # null key: mode stays null
+        ],
+        "k string, v double, seq int",
+    )
+    got = {
+        r["k"]: (repr(r["v"]), r["seq"])
+        for r in mode_or_first_dedup(df, "k", "v", ["seq"]).collect()
+    }
+    assert got == {
+        "a": ("0.0", 1),
+        "b": ("nan", 1),
+        "c": ("2.0", 1),
+        "d": ("None", 1),
+        None: ("None", 1),
+    }
+
+
 def test_recode_with_defaults(spark):
     # P4: mapped value → (genero, subgenero); unmapped → ('Otro', original)
     # (reference dags/limpiezaSpotify.py:84-89).

@@ -5,6 +5,8 @@ degrades the plan fails CI rather than the 100 TB run."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -49,13 +51,13 @@ def test_star_resolution_broadcasts_all_dims(spark):
 
 
 def test_mode_or_first_reuses_partitioning(spark):
-    # Both window branches hash-partition on the same key and the
-    # join-back is co-partitioned: bounded exchange count, partitioned
-    # windows only (no global Window.orderBy single-partition funnel).
+    # One hash exchange on the key feeds both aggregates: one scan, no
+    # window, no join-back.
     plan = _physical(q("mode_or_first_lineitem")(spark, SF))
-    assert "Window" in plan
-    assert plan.count("Exchange") <= 4
-    assert "partitionBy" not in plan or "SinglePartition" not in plan
+    assert "Window" not in plan and "Join" not in plan
+    assert plan.count("Exchange") == 1
+    assert "Exchange hashpartitioning(l_orderkey" in plan
+    assert plan.count("FileScan") == 1
 
 
 def test_summary_stats_single_aggregate(spark):
@@ -551,3 +553,110 @@ def test_prefix_family_exchange_counts(spark, caller):
     assert final.count("Exchange") == exchanges, final
     if reused:
         assert "ReusedExchange" in final, final
+
+
+# Driver-built frames are Arrow LocalRelations (sources/readers.py:
+# from_records), never a LogicalRDD over a pickled Python RDD, whose
+# every execution starts a Python worker.
+
+
+def _jvm_local(df) -> bool:
+    plan = _optimized(df)
+    return "LocalRelation" in plan and "LogicalRDD" not in plan
+
+
+def test_recode_and_records_lookup_are_jvm_local(spark):
+    assert _jvm_local(q("recode_event_types")(spark, SF))
+    assert _jvm_local(q("from_records_lookup_join")(spark, SF))
+
+
+def test_driver_side_graph_results_are_jvm_local(spark):
+    from workshoop2_etl_spark.operators.dedup import duplicate_clusters
+
+    # pagerank_fixed_point's small-graph branch at sf0.001
+    assert _jvm_local(q("pagerank_fixed_point_copurchase")(spark, SF))
+    pairs = spark.range(6).where("id % 3 != 2").select(
+        F.col("id").alias("doc_id_a"), (F.col("id") + 1).alias("doc_id_b")
+    )
+    clusters = duplicate_clusters(pairs, "doc_id")  # the collect branch
+    assert _jvm_local(clusters)
+    assert sorted(map(tuple, clusters.collect())) == [
+        (0, 0), (1, 0), (2, 0), (3, 3), (4, 3), (5, 3)
+    ]
+
+
+# Spark physical nodes that run Python: the eval nodes of Python and
+# Arrow UDFs/UDTFs and the map/group/co-group/window pandas and Arrow
+# kernels.
+_PYTHON_NODE = re.compile(
+    r"EvalPython|InPandas|InArrow|PythonUDTF|FlatMapGroupsInArrow"
+)
+
+
+def test_paper_etl_load_runs_no_python(spark, tmp_path):
+    """A warehouse load shaped like the paper's (clean with recode and
+    mode-or-first → outer merge with a parquet checkpoint → star →
+    writes) executes only JVM plans: no Python RDD scan and no node
+    that evaluates Python, in any plan the load runs."""
+    from workshoop2_etl_spark.plans.pipelines import (
+        DimSpec,
+        clean_pipeline,
+        merge_pipeline,
+        star_pipeline,
+    )
+    from workshoop2_etl_spark.sources.readers import read_parquet
+    from workshoop2_etl_spark.sources.writers import write_parquet
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        runs = store.executionsList()  # the retained ones, a bounded list
+        return [runs.apply(i) for i in range(runs.size())]
+
+    before = max((x.executionId() for x in executions()), default=-1)
+
+    lineitem = read_parquet(spark, f"{SF}/lineitem.parquet")
+    orders = read_parquet(spark, f"{SF}/orders.parquet")
+    cleaned = clean_pipeline(
+        lineitem.select(
+            "l_orderkey", "l_partkey", "l_linenumber", "l_quantity",
+            "l_returnflag",
+        ),
+        required=["l_orderkey", "l_returnflag", "l_quantity"],
+        recode_col="l_returnflag",
+        recode_map={"A": ("Accepted", "accepted"), "R": ("Returned", "returned")},
+        recode_out=["flag_group", "flag_sub"],
+        recode_defaults=[F.lit("Otro"), F.col("l_returnflag")],
+        dedup_key="l_orderkey",
+        mode_col="l_quantity",
+        order_cols=["l_linenumber", "l_partkey", "l_quantity"],
+    )
+    merged = merge_pipeline(
+        cleaned.withColumnRenamed("l_orderkey", "orderkey"),
+        orders.withColumnRenamed("o_orderkey", "orderkey"),
+        ["orderkey"],
+        checkpoint_path=str(tmp_path / "merged"),
+    )
+    dims, fact = star_pipeline(
+        merged,
+        [
+            DimSpec("dim_status", ["o_orderstatus"], "status_id"),
+            DimSpec("dim_flag", ["flag_group", "flag_sub"], "flag_id"),
+        ],
+        ["orderkey", "l_quantity", "o_totalprice", "_merge"],
+    )
+    for name, df in (*dims.items(), ("fact_orders", fact)):
+        write_parquet(df, str(tmp_path / name))
+
+    plans = [
+        x.physicalPlanDescription()
+        for x in executions()
+        if x.executionId() > before
+    ]
+    assert len(plans) >= 4  # the checkpoint write and three table writes
+    assert any("LocalTableScan" in p for p in plans)  # the recode lookup
+    for plan in plans:
+        assert "ExistingRDD" not in plan
+        assert not _PYTHON_NODE.search(plan), _PYTHON_NODE.search(plan)

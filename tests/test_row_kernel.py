@@ -132,3 +132,23 @@ def test_explicit_keep_and_empty_output(df):
     assert sorted(tuple(r) for r in kept_in.collect()) == sorted(
         (r.k, r.k + 1) for r in df.collect()
     )
+
+
+def test_kept_long_above_2_53_next_to_null_is_exact(spark):
+    # one partition, so the big long and the null share an Arrow batch
+    df = spark.createDataFrame(
+        [(2**53 + 1, "a"), (None, "b")], "k long, s string"
+    ).coalesce(1)
+    want = [(2**53 + 1, "a", "A"), (None, "b", "B")]
+    up = [T.StructField("u", T.StringType())]
+    got = map_rows(df, ["s"], lambda s: (s.upper(),), up, keep=["k", "s"])
+    assert [tuple(r) for r in got.collect()] == want
+    twice = flat_map_rows(df, ["s"], lambda s: [(s.upper(),)] * 2, up)
+    assert [tuple(r) for r in twice.collect()] == [
+        (k, u) for k, _, u in want for _ in range(2)
+    ]
+    # fn still sees a null integer input as NaN, a big one exactly
+    seen = map_rows(
+        df, ["k"], lambda k: (repr(k),), [T.StructField("r", T.StringType())]
+    )
+    assert [r.r for r in seen.collect()] == [repr(2**53 + 1), "nan"]

@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.sources.readers import from_records
+
 
 def value_counts(df: DataFrame, col: str, *, count_col: str = "n") -> DataFrame:
     """Frequency table, most frequent first, value asc on ties —
@@ -183,8 +185,8 @@ def quantiles_ranked(
     )
     ranked = assign_global_ids(vals, "__v", id_name="__gid")
     n = vals.agg(F.count(F.lit(1)).alias("__n"))
-    probs_df = spark.createDataFrame(
-        [(float(p),) for p in probs], "p double"
+    probs_df = from_records(
+        spark, [(float(p),) for p in probs], "p double"
     )
     needs = (
         probs_df.crossJoin(F.broadcast(n))

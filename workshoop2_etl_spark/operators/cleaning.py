@@ -8,17 +8,20 @@ Parity targets (reference SURVEY.md §2.2/§2.5):
 - A2: full-row dedup (reference dags/limpiezaSpotify.py:101).
 - P6: coercing numeric cast (reference eda notebook cells 9-11).
 
-Scale notes: the recode map broadcasts (tiny); mode-or-first is two
-hash-partitioned window passes over the *same* key, so Catalyst reuses
-one shuffle exchange; no Python executes per row anywhere.
+Scale notes: the recode map broadcasts (tiny, a JVM-local frame);
+mode-or-first is two aggregates over one hash exchange on the key; no
+Python executes anywhere.
 """
 
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from workshoop2_etl_spark.sources.readers import from_records
 
 
 def recode_with_default(
@@ -55,10 +58,13 @@ def recode_with_default(
         return df.withColumns(defaults_cols)
     if any(len(v) != len(out_cols) for v in mapping.values()):
         raise ValueError("out_cols/defaults arity must match mapping values")
-    spark = df.sparkSession
     lookup_rows = [(k, *v) for k, v in mapping.items()]
     lookup_cols = ["__recode_key", *[f"__recode_{c}" for c in out_cols]]
-    lookup = spark.createDataFrame(lookup_rows, lookup_cols)
+    lookup = from_records(
+        df.sparkSession,
+        lookup_rows,
+        T.StructType([T.StructField(c, T.StringType()) for c in lookup_cols]),
+    )
 
     joined = df.join(F.broadcast(lookup), df[src_col] == lookup["__recode_key"], "left")
     assignments: dict[str, Column] = {}
@@ -122,40 +128,46 @@ def mode_or_first_dedup(
     ``Series.mode()`` returns the most-frequent values **sorted
     ascending**, and the reference takes ``.iloc[0]`` — i.e. the
     *smallest most-frequent non-null value*. Spark's ``F.mode`` breaks
-    ties arbitrarily, so the engine computes it as
-    ``row_number() over (partition by key order by count desc, value asc)``
-    (SURVEY.md §2.5 A1). Nulls never win the mode (pandas drops NaN);
-    a key whose values are all null yields null.
+    ties arbitrarily, so the engine orders by count descending, then
+    value ascending (SURVEY.md §2.5 A1). Nulls never win the mode
+    (pandas drops NaN); a key whose values are all null yields null.
 
     pandas ``first`` is positional, so "first" is only meaningful
     under an explicit ordering — ``order_cols`` is required (at scan
     time the caller can add a sequence column to encode file order;
     SURVEY.md §7 risk (e)).
 
-    Physical shape: both branches hash-partition on ``key`` — one
-    shuffle each, no Python. The join back is on the grouping key and
-    is co-partitioned.
+    Physical shape: one hash exchange on ``key`` and one scan, no
+    window and no join. Two aggregates share the exchange: per
+    ``(key, mode_col)`` the row count and the smallest
+    ``struct(order_cols…, other cols…)`` (the group's first row; a tie
+    on ``order_cols`` goes to the smallest other columns), then per
+    ``key`` the smallest of those firsts and the smallest
+    ``struct(-count, value)`` over non-null values (most frequent,
+    then smallest). Grouping puts ``-0.0`` with ``0.0`` and NaN with
+    NaN, and NaN counts as a value. The null-key row keeps a null
+    mode. No Python.
     """
     other_cols = [c for c in df.columns if c not in (key, mode_col)]
-
-    w_first = Window.partitionBy(key).orderBy(*[F.col(c) for c in order_cols])
-    firsts = (
-        df.withColumn("__rn", F.row_number().over(w_first))
-        .filter(F.col("__rn") == 1)
-        .select(key, *other_cols)
+    first = F.struct(
+        *[F.col(c).alias(f"__o{i}") for i, c in enumerate(order_cols)],
+        *[F.col(c) for c in other_cols],
     )
-
-    counts = (
-        df.filter(F.col(mode_col).isNotNull())
+    per_value = (
+        df.repartition(key)
         .groupBy(key, mode_col)
-        .agg(F.count(F.lit(1)).alias("__cnt"))
+        .agg(F.count(F.lit(1)).alias("__cnt"), F.min(first).alias("__first"))
     )
-    w_mode = Window.partitionBy(key).orderBy(F.desc("__cnt"), F.asc(mode_col))
-    modes = (
-        counts.withColumn("__rn", F.row_number().over(w_mode))
-        .filter(F.col("__rn") == 1)
-        .select(key, mode_col)
+    mode = F.when(
+        F.col(mode_col).isNotNull(),
+        F.struct((-F.col("__cnt")).alias("n"), F.col(mode_col).alias("v")),
     )
-
-    out = firsts.join(modes, key, "left")
-    return out.select(*[c for c in df.columns])
+    per_key = per_value.groupBy(key).agg(
+        F.min("__first").alias("__first"), F.min(mode).alias("__mode")
+    )
+    picked = {
+        key: F.col(key),
+        mode_col: F.when(F.col(key).isNotNull(), F.col("__mode").getField("v")),
+        **{c: F.col("__first").getField(c) for c in other_cols},
+    }
+    return per_key.select(*[picked[c].alias(c) for c in df.columns])

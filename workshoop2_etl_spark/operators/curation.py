@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from workshoop2_etl_spark.operators.dedup import tokens_expr
+from workshoop2_etl_spark.sources.readers import from_records
 
 __all__ = [
     "hashed_ngram_buckets",
@@ -407,8 +408,8 @@ def train_text_classifier(
     pairs = [
         (int(b), float(wq[b])) for b in range(n_buckets) if wq[b] != 0.0
     ]
-    weights = df.sparkSession.createDataFrame(
-        pairs or [(0, 0.0)], "bucket int, weight double"
+    weights = from_records(
+        df.sparkSession, pairs or [(0, 0.0)], "bucket int, weight double"
     )
     return weights, bias
 
@@ -617,7 +618,8 @@ def train_language_classifier(
         for b in range(n_buckets)
         if wq[k, b] != 0.0
     ]
-    weights = df.sparkSession.createDataFrame(
+    weights = from_records(
+        df.sparkSession,
         pairs or [(classes[0], 0, 0.0)],
         "lang string, bucket int, weight double",
     )
@@ -697,8 +699,8 @@ def language_classify(
     )
     langs = sorted(biases)
     bias_rows = [(lg, float(biases[lg])) for lg in langs]
-    bias_df = df.sparkSession.createDataFrame(
-        bias_rows, "lang string, bias double"
+    bias_df = from_records(
+        df.sparkSession, bias_rows, "lang string, bias double"
     )
     # matched-bucket micro sums per (doc, lang); docs with no matched
     # bucket for some lang still get a row via the bias cross join

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from workshoop2_etl_spark.operators.pairs import bucket_pairs
+from workshoop2_etl_spark.sources.readers import from_records
 
 
 # ---------------------------------------------------------------------------
@@ -637,8 +638,8 @@ def duplicate_clusters(
         schema = pairs.select(F.col(a).alias(id_col)).schema
         id_type = schema[id_col].dataType.simpleString()
         pairs.unpersist()  # result is local — the cache is done
-        return spark.createDataFrame(
-            out_rows, f"{id_col} {id_type}, cluster_id {id_type}"
+        return from_records(
+            spark, out_rows, f"{id_col} {id_type}, cluster_id {id_type}"
         )
     edges = (
         pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from workshoop2_etl_spark.operators.pairs import both_orientations
+from workshoop2_etl_spark.sources.readers import from_records
 
 
 def pagerank(
@@ -187,7 +188,7 @@ def _pagerank_local(swd: DataFrame, *, damping: float, iterations: int) -> DataF
     ids = sorted({r.s for r in rows} | {r.d for r in rows})
     n = len(ids)
     if n == 0:
-        return spark.createDataFrame([], out_schema)
+        return from_records(spark, [], out_schema)
     idx = {v: i for i, v in enumerate(ids)}
     src = np.fromiter((idx[r.s] for r in rows), dtype=np.int64, count=len(rows))
     dst = np.fromiter((idx[r.d] for r in rows), dtype=np.int64, count=len(rows))
@@ -204,8 +205,8 @@ def _pagerank_local(swd: DataFrame, *, damping: float, iterations: int) -> DataF
         np.add.at(contrib, dst, r[src] * tw)
         dangling = r[dangle_mask].sum()
         r = (1.0 - damping) / n + damping * (contrib + dangling / n)
-    return spark.createDataFrame(
-        [(v, float(r[idx[v]])) for v in ids], out_schema
+    return from_records(
+        spark, [(v, float(r[idx[v]])) for v in ids], out_schema
     )
 
 
@@ -319,8 +320,8 @@ def pagerank_fixed_point(
                     T.StructField("rank", T.LongType()),
                 ]
             )
-            return spark.createDataFrame(
-                [(u, r[u]) for u in node_list], out_schema
+            return from_records(
+                spark, [(u, r[u]) for u in node_list], out_schema
             )
     # Anchor frame for every superstep: re-deriving ranks from
     # contrib alone would drop nodes with zero in-edges (source-only

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.sources.readers import from_records
 from workshoop2_etl_spark.sources.versioned import (
     commit_overwrite,
     create_table,
@@ -88,7 +89,8 @@ def save_classifier(
         F.col("weight").cast("double"),
         F.lit(float(bias)).alias("bias"),
     )
-    carrier = spark.createDataFrame(
+    carrier = from_records(
+        spark,
         [(None, None, float(bias))], "bucket int, weight double, bias double"
     )
     if rows.limit(1).count() == 0:
@@ -119,7 +121,8 @@ def save_langid(
     zero surviving weights keep one NULL-bucket carrier row so the
     bias is never lost)."""
     spark = weights.sparkSession
-    bias_df = spark.createDataFrame(
+    bias_df = from_records(
+        spark,
         [(lg, float(b)) for lg, b in sorted(biases.items())],
         "lang string, bias double",
     )
@@ -157,8 +160,10 @@ def save_bpe(
     """Persist X104 merge rules; rank (= list position) is the
     model."""
     rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    df = spark.createDataFrame(
-        rows or [(None, None, None)], "rank int, left string, right string"
+    df = from_records(
+        spark,
+        rows or [(None, None, None)],
+        "rank int, left string, right string",
     )
     return _publish(df, table_dir)
 
@@ -176,8 +181,8 @@ def save_unigram(
 ) -> int:
     """Persist X223 unigram pieces (logprobs are micro-exact doubles,
     so parquet round-trips them bit-identically)."""
-    df = spark.createDataFrame(
-        sorted(pieces.items()), "piece string, logprob double"
+    df = from_records(
+        spark, sorted(pieces.items()), "piece string, logprob double"
     )
     return _publish(df, table_dir)
 
@@ -204,8 +209,8 @@ def save_ivf(spark: SparkSession, centroids, table_dir: str) -> int:
 
     c = np.asarray(centroids, dtype=np.float64)
     rows = [(i, [float(v) for v in c[i]]) for i in range(len(c))]
-    df = spark.createDataFrame(
-        rows, "cluster int, centroid array<double>"
+    df = from_records(
+        spark, rows, "cluster int, centroid array<double>"
     )
     return _publish(df, table_dir)
 
@@ -236,8 +241,8 @@ def save_pq(spark: SparkSession, codebooks, table_dir: str) -> int:
         for j in range(b.shape[0])
         for c in range(b.shape[1])
     ]
-    df = spark.createDataFrame(
-        rows, "subspace int, code int, centroid array<double>"
+    df = from_records(
+        spark, rows, "subspace int, code int, centroid array<double>"
     )
     return _publish(df, table_dir)
 

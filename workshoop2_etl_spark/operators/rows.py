@@ -1,5 +1,5 @@
 """The per-row Arrow kernel shell behind the crawl, media and PDF
-operators: one ``mapInPandas`` batch loop that calls a plain Python
+operators: one ``mapInArrow`` batch loop that calls a plain Python
 function per row.
 
 - :func:`map_rows` — exactly one output row per input row;
@@ -10,28 +10,40 @@ emits (``out_fields``) and the columns carried through unchanged
 (``keep``, default every column not in ``in_cols``, in ``df`` order).
 The output schema is the kept fields followed by ``out_fields``.
 
-Kept columns travel column-wise — copied for ``map_rows``, replicated
-with one positional take for ``flat_map_rows`` — so their values never
-pass through a per-row Python object (a row-wise copy coerces mixed
-int/float rows to float and loses longs above 2**53). The one loss left
-is Spark's own: an integer column holding a null in a batch reaches
-pandas as float64, so such a column's values above 2**53 are not exact.
-``fn`` sees each input value as a Python object: ``None`` for a null
-string, binary or struct, ``NaN`` for a null numeric. New values go to
-Arrow from object columns, so Python ints convert exactly. Null
-handling, per-task setup and error capture belong to ``fn`` and its
-closure.
+Kept columns stay Arrow arrays from input to output — passed through
+for ``map_rows``, replicated with one positional ``take`` for
+``flat_map_rows`` — so their values are never converted at all: a
+long above 2**53 next to a null comes back exact. ``fn`` sees each
+input value as a Python object: ``None`` for a null string, binary,
+boolean, array or struct, ``NaN`` for a null integer or floating
+value, a ``dict`` for a struct and a ``list`` for an array. New values
+go to Arrow under the declared field types, with a ``NaN`` in a
+floating field stored as null. Null handling, per-task setup and
+error capture belong to ``fn`` and its closure.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 __all__ = ["flat_map_rows", "map_rows"]
+
+
+def _values(col: pa.Array) -> list:
+    """``col`` as Python objects, a null integer or floating value as
+    ``NaN``."""
+    vals = col.to_pylist()
+    if col.null_count and (
+        pa.types.is_integer(col.type) or pa.types.is_floating(col.type)
+    ):
+        nan = float("nan")
+        vals = [nan if v is None else v for v in vals]
+    return vals
 
 
 def _row_kernel(
@@ -44,12 +56,14 @@ def _row_kernel(
 ) -> DataFrame:
     if keep is None:
         keep = [c for c in df.columns if c not in in_cols]
-    names = [f.name for f in out_fields]
+    names = keep + [f.name for f in out_fields]
+    out_types = [to_arrow_type(f.dataType) for f in out_fields]
     schema = T.StructType([df.schema[c] for c in keep] + list(out_fields))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            args = zip(*(pdf[c].tolist() for c in in_cols))
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            args = zip(*(_values(batch.column(c)) for c in in_cols))
+            kept = [batch.column(c) for c in keep]
             if flat:
                 take: list[int] = []
                 rows: list[tuple] = []
@@ -57,15 +71,19 @@ def _row_kernel(
                     for row in fn(*vals):
                         take.append(i)
                         rows.append(row)
-                kept = pdf[keep].iloc[take]
+                idx = pa.array(take, pa.int64())
+                kept = [col.take(idx) for col in kept]
             else:
                 rows = [fn(*vals) for vals in args]
-                kept = pdf[keep]
-            new = pd.DataFrame(rows, columns=names, dtype=object)
-            yield pd.concat([kept.reset_index(drop=True), new], axis=1)
+            new_cols = list(zip(*rows, strict=True)) or [()] * len(out_types)
+            new = [
+                pa.array(vals, type=t, from_pandas=True)
+                for vals, t in zip(new_cols, out_types, strict=True)
+            ]
+            yield pa.RecordBatch.from_arrays(kept + new, names=names)
 
     needed = keep + [c for c in in_cols if c not in keep]
-    return df.select(*needed).mapInPandas(batches, schema)
+    return df.select(*needed).mapInArrow(batches, schema)
 
 
 def map_rows(

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.sources.readers import from_records
+
 
 def hash_bucket(
     id_col: Column | str, *, buckets: int = 10_000, salt: str = ""
@@ -182,7 +184,7 @@ def mixture_sample(
     # for bit.
     quotas = [(g, int(w * total)) for g, w in norm.items()]
     quota_df = F.broadcast(
-        spark.createDataFrame(quotas, [group_col, "__quota"])
+        from_records(spark, quotas, f"`{group_col}` string, __quota long")
     )
     h = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
     w_grp = Window.partitionBy(group_col).orderBy(h.asc(), F.col(id_col).asc())

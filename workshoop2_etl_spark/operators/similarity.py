@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from workshoop2_etl_spark.operators.pairs import bucket_pairs
+from workshoop2_etl_spark.sources.readers import from_records
 
 
 def _as_double(col: Column | str) -> Column:
@@ -409,7 +410,8 @@ def semantic_dedup(
         )
     c = np.asarray(centroids, dtype=np.float64)
     spark = df.sparkSession
-    cent = spark.createDataFrame(
+    cent = from_records(
+        spark,
         [(i, [float(x) for x in c[i]]) for i in range(len(c))],
         "__cluster int, __cvec array<double>",
     )

@@ -51,6 +51,7 @@ from workshoop2_etl_spark.operators.rows import flat_map_rows, map_rows
 from workshoop2_etl_spark.plans.reference_queries import _register, _t
 from workshoop2_etl_spark.sources.readers import (
     ensure_parallelism,
+    from_records,
     spread_groups,
 )
 
@@ -4863,7 +4864,8 @@ def web_curation_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id"),
         ).alias("url"),
     )
-    blocklist = spark.createDataFrame(
+    blocklist = from_records(
+        spark,
         [
             ("site2.com", "domain", "ads"),
             (" MEDIA.site5.com ", "domain", "tracker"),
@@ -5194,7 +5196,8 @@ def url_blocklist_filter_documents(
             F.col("doc_id"),
         ).alias("url"),
     )
-    blocklist = spark.createDataFrame(
+    blocklist = from_records(
+        spark,
         [
             ("site2.com", "domain", "ads"),
             (" MEDIA.site5.com ", "domain", "tracker"),
@@ -5342,7 +5345,8 @@ def frontier_crawl_delay_documents(
         "User-agent: otherbot\nCrawl-delay: 2\n\n"
         "User-agent: *\nDisallow: /x\n",
     ]
-    robots = spark.createDataFrame(
+    robots = from_records(
+        spark,
         [(f"site{d}.com", bodies[d]) for d in range(7)],
         "domain string, robots_txt string",
     )
@@ -7870,7 +7874,8 @@ def web_curation_directives_documents(
     admitted = directives.where(~F.col("robots_noindex")).select(
         "doc_id", "n_chars", "url"
     )
-    blocklist = spark.createDataFrame(
+    blocklist = from_records(
+        spark,
         [
             ("site2.com", "domain", "ads"),
             (" MEDIA.site5.com ", "domain", "tracker"),

@@ -8,7 +8,7 @@ slices and forces a full pre-scan at 100 TB).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Mapping
+from collections.abc import Callable, Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -509,17 +509,50 @@ def read_jdbc(
 
 def from_records(
     spark: SparkSession,
-    records: Iterable[Mapping],
+    records: Iterable[Mapping | Sequence],
     schema: T.StructType | str,
 ) -> DataFrame:
     """DataFrame from a records batch (reference dags/merge_to_dw.py:116-117, S4).
 
-    The reference ships whole datasets between Airflow tasks as
-    ``list[dict]`` via XCom; in the engine this exists only for tiny
-    literal inputs (lookup tables, tests) — real data stays in lazy
-    scans and never round-trips through the driver.
+    The engine's only way to turn driver-side rows into a DataFrame.
+    Records are tuples (positional) or mappings (by field name, a
+    missing key is null); ``schema`` is a ``StructType`` or a DDL
+    string. Each record goes through Spark's own schema verifier, so a
+    value that does not fit its field raises exactly as Spark's list
+    path (``spark.createDataFrame`` over a Python list) does, and the
+    columns, types, nullability and rows equal that path's. One
+    difference: a string field takes only ``str``, where the list path
+    stores the JVM's ``toString`` of any other value.
+
+    The rows travel as one ``pyarrow.Table``, so the plan holds a JVM
+    ``LocalRelation`` (``LocalTableScan``): executing it starts no
+    Python worker, where the list path's pickled RDD starts one per
+    task on every execution. The driver holds every row, so the size
+    bound is each caller's documented bound on its driver collect;
+    real data stays in lazy scans and never round-trips through the
+    driver (the reference ships whole datasets between Airflow tasks
+    as ``list[dict]`` via XCom).
     """
-    return spark.createDataFrame(list(records), schema=schema)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    names = schema.fieldNames()
+    columns: list[list] = [[] for _ in names]
+    for rec in records:
+        verify(rec)
+        values = [rec.get(n) for n in names] if isinstance(rec, Mapping) else rec
+        for col, v in zip(columns, values):
+            col.append(v)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(

@@ -53,7 +53,10 @@ def fold_docs_into_index(
         lsh_index_refresh,
         minhash_signatures,
     )
-    from workshoop2_etl_spark.sources.readers import ensure_parallelism
+    from workshoop2_etl_spark.sources.readers import (
+        ensure_parallelism,
+        from_records,
+    )
 
     spark = docs_df.sparkSession
     # A micro-batch often arrives as ONE scan partition (one file per
@@ -80,7 +83,7 @@ def fold_docs_into_index(
             index_dir
         )
     except AnalysisException:
-        banded_base = spark.createDataFrame([], banded_delta.schema)
+        banded_base = from_records(spark, [], banded_delta.schema)
     _, new_pairs = lsh_index_refresh(banded_base, banded_delta, id_col)
     new_pairs.write.mode("append").parquet(pairs_dir)
     banded_delta.write.mode("append").parquet(index_dir)
