@@ -349,3 +349,41 @@ def test_trained_langid_featureless_tiebreak(spark):
     ).collect()[0]
     assert out["n_feats"] == 0
     assert out["lang_pred"] == "en"
+
+
+def test_per_domain_cap_orders_nulls_as_spark_does(spark):
+    """Nulls sort first under an ascending order and last under a
+    descending one, as in a SQL window."""
+    from workshoop2_etl_spark.operators.curation import per_domain_cap
+
+    rows = [
+        (10, "http://a.com/10", None),
+        (11, "http://a.com/11", 5),
+        (12, "http://a.com/12", 7),
+        (13, "http://b.com/13", 3),
+        (14, "http://b.com/14", None),
+    ]
+    df = spark.createDataFrame(rows, "id long, url string, v long").coalesce(1)
+
+    def kept(ascending):
+        out = per_domain_cap(
+            df, url_col="url", order_by=[("v", ascending)], k=1
+        )
+        return sorted(r["id"] for r in out.collect())
+
+    assert kept(True) == [10, 14]
+    assert kept(False) == [12, 13]
+
+
+def test_per_domain_cap_keeps_longs_exact_next_to_nulls(spark):
+    """A kept long above 2**53 next to a null in the same column comes
+    back exact (no float round trip)."""
+    from workshoop2_etl_spark.operators.curation import per_domain_cap
+
+    big = 2**53 + 1
+    df = spark.createDataFrame(
+        [(1, "http://a.com/1", big), (2, "http://b.com/2", None)],
+        "id long, url string, n long",
+    ).coalesce(1)
+    out = per_domain_cap(df, url_col="url", order_by=[("id", True)], k=1)
+    assert {r["id"]: r["n"] for r in out.collect()} == {1: big, 2: None}

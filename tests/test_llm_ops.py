@@ -1407,48 +1407,25 @@ def test_allpairs_jaccard_guards(spark):
 
 
 def test_unicode_normalize_forms(spark):
-    """UAX #15 forms via the Arrow-batched kernel: NFC composes, NFD
-    decomposes, NFKC folds compatibility forms; NULLs pass through;
-    unknown forms refuse."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from workshoop2_etl_spark.operators.redaction import unicode_normalize
+    """NFC via the Arrow row kernel: composes decomposed sequences,
+    leaves compatibility forms (ligatures, full-width) alone, passes
+    NULLs through and keeps the other columns in place."""
+    from workshoop2_etl_spark.operators.textstats import nfc_normalize
 
     rows = [
-        (0, "caf" + "é"),       # decomposed acute
-        (1, "ﬁle"),               # fi ligature (NFKC folds)
-        (2, "ＡBC"),               # full-width A (NFKC folds)
-        (3, None),
+        (0, "caf" + "e\u0301", 10),  # decomposed acute
+        (1, "\ufb01le", 11),  # fi ligature (NFC keeps it)
+        (2, "\uff21BC", 12),  # full-width A (NFC keeps it)
+        (3, None, 13),
     ]
-    df = spark.createDataFrame(rows, "i long, t string")
-    nfc = {
-        r["i"]: r["t"]
-        for r in unicode_normalize(df, "t", form="NFC").collect()
-    }
-    assert nfc[0] == "café"
-    assert nfc[1] == "ﬁle"  # NFC leaves compatibility forms
-    assert nfc[3] is None
-    nfkc = {
-        r["i"]: r["t"]
-        for r in unicode_normalize(df, "t", form="NFKC").collect()
-    }
-    assert nfkc[1] == "file" and nfkc[2] == "ABC"
-    nfd = {
-        r["i"]: r["t"]
-        for r in unicode_normalize(df, "t", form="NFD").collect()
-    }
-    assert nfd[0] == "café"
-    # NFC(NFD(x)) == NFC(x): round-trip idempotence
-    back = {
-        r["i"]: r["t"]
-        for r in unicode_normalize(
-            unicode_normalize(df, "t", form="NFD"), "t", form="NFC"
-        ).collect()
-    }
-    assert back[0] == "café"
-    with _pytest.raises(ValueError, match="unknown normalization"):
-        unicode_normalize(df, "t", form="NFX")
+    df = spark.createDataFrame(rows, "i long, t string, n long")
+    out = nfc_normalize(df, "t")
+    assert out.columns == ["i", "t", "n"]
+    nfc = {r["i"]: (r["t"], r["n"]) for r in out.collect()}
+    assert nfc[0] == ("caf\u00e9", 10)
+    assert nfc[1] == ("\ufb01le", 11)
+    assert nfc[2] == ("\uff21BC", 12)
+    assert nfc[3] == (None, 13)
 
 
 def test_script_profile_counts_and_tiebreak(spark):

@@ -660,3 +660,44 @@ def test_paper_etl_load_runs_no_python(spark, tmp_path):
     for plan in plans:
         assert "ExistingRDD" not in plan
         assert not _PYTHON_NODE.search(plan), _PYTHON_NODE.search(plan)
+
+
+# Per-group top-k: Spark plans ``row_number() <= k`` as a partial
+# WindowGroupLimit below the hash exchange (each partition keeps its
+# local top-k per group, so only those rows shuffle) and a final one
+# above it. Nothing else belongs under the exchange.
+
+
+@pytest.mark.parametrize("caller", ["top_k_per_group", "per_domain_cap"])
+def test_top_k_per_group_limits_each_partition_before_the_exchange(
+    spark, caller
+):
+    from workshoop2_etl_spark.operators.analytics import top_k_per_group
+    from workshoop2_etl_spark.operators.curation import per_domain_cap
+
+    df = spark.range(2000).select(
+        (F.col("id") % 7).alias("g"),
+        F.concat(
+            F.lit("http://s"), (F.col("id") % 7).cast("string"),
+            F.lit(".com/p"), F.col("id").cast("string"),
+        ).alias("url"),
+        "id",
+    ).repartition(4)
+    if caller == "top_k_per_group":
+        out = top_k_per_group(df, ["g"], [F.col("id").desc()], 3)
+    else:
+        out = per_domain_cap(df, url_col="url", order_by=[("id", False)], k=3)
+    above, below = _final(out).split("Exchange hashpartitioning(", 1)
+    assert "WindowGroupLimit" in above and ", Final" in above
+    partial = below.splitlines()[1]
+    assert "WindowGroupLimit" in partial and partial.endswith(", Partial")
+    assert not _PYTHON_NODE.search(below), _PYTHON_NODE.search(below)
+
+
+@pytest.mark.parametrize(
+    "name", ["topk_pergroup_partial_lineitem", "domain_cap_documents"]
+)
+def test_per_group_topk_entries_run_no_python(spark, name):
+    final = _final(q(name)(spark, SF))
+    assert "WindowGroupLimit" in final
+    assert not _PYTHON_NODE.search(final), _PYTHON_NODE.search(final)

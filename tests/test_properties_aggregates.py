@@ -97,12 +97,13 @@ def test_islands_vs_bruteforce(spark, ticks):
     parts=st.integers(min_value=1, max_value=4),
 )
 def test_partial_topk_vs_python(spark, rows, k, parts):
-    """The map-side prune composition must equal a trivial Python
-    sort for any data, k, and partitioning — the order key (v desc,
-    uid asc) is total because uid is unique."""
-    from workshoop2_etl_spark.operators.analytics import (
-        top_k_per_group_partial,
-    )
+    """The per-group top-k, which Spark prunes per partition before
+    the exchange, must equal a trivial Python sort for any data, k,
+    and partitioning — the order key (v desc, uid asc) is total
+    because uid is unique."""
+    from pyspark.sql import functions as F
+
+    from workshoop2_etl_spark.operators.analytics import top_k_per_group
 
     uniq = [(g, v, i) for i, (g, v, _) in enumerate(rows)]
     df = spark.createDataFrame(
@@ -110,8 +111,8 @@ def test_partial_topk_vs_python(spark, rows, k, parts):
     ).repartition(parts)
     got = sorted(
         (r["g"], r["v"], r["uid"], r["rank"])
-        for r in top_k_per_group_partial(
-            df, ["g"], [("v", False), ("uid", True)], k
+        for r in top_k_per_group(
+            df, ["g"], [F.col("v").desc(), F.col("uid").asc()], k
         ).collect()
     )
     want = []

@@ -1,18 +1,20 @@
-"""Map-side partial top-k: exactness vs the plain window on skewed
-data, and the survivor bound that makes it the 100 TB path."""
+"""Per-group top-k (``analytics.top_k_per_group``, which Spark plans
+with a partial ``WindowGroupLimit`` per partition before the
+exchange): exactness on skewed multi-partition data, groups smaller
+than k, and k validation."""
 
 from __future__ import annotations
+
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
-from workshoop2_etl_spark.operators.analytics import (
-    partial_prune_topk,
-    top_k_per_group,
-    top_k_per_group_partial,
-)
+import workshoop2_etl_spark
+from workshoop2_etl_spark.operators.analytics import top_k_per_group
 
-ORDER = [("v", False), ("id", True)]
+def _order():
+    return [F.col("v").desc(), F.col("id").asc()]
 
 
 def _df(spark, n=20_000, groups=10, parts=8):
@@ -29,35 +31,55 @@ def _df(spark, n=20_000, groups=10, parts=8):
 
 
 def test_exact_vs_plain_window(spark):
+    """The per-partition limit Spark adds under the plain window is
+    lossless: the answer equals a Python sort of the whole input."""
     df = _df(spark)
-    part = top_k_per_group_partial(df, ["g"], ORDER, 5)
-    plain = top_k_per_group(
-        df, ["g"], [F.col("v").desc(), F.col("id").asc()], 5
+    out = top_k_per_group(df, ["g"], _order(), 5)
+    got = sorted(map(tuple, out.select("g", "id", "v", "rank").collect()))
+    by_g: dict[int, list] = {}
+    for r in df.collect():
+        by_g.setdefault(r["g"], []).append((-r["v"], r["id"]))
+    want = sorted(
+        (g, i, -nv, rank)
+        for g, items in by_g.items()
+        for rank, (nv, i) in enumerate(sorted(items)[:5], start=1)
     )
-    a = sorted(map(tuple, part.select("g", "id", "v", "rank").collect()))
-    b = sorted(map(tuple, plain.select("g", "id", "v", "rank").collect()))
-    assert a == b
-    assert len(a) == 10 * 5
-
-
-def test_survivor_bound(spark):
-    parts, groups, k = 8, 10, 5
-    df = _df(spark, parts=parts, groups=groups)
-    survivors = partial_prune_topk(df, ["g"], ORDER, k).count()
-    assert survivors <= parts * groups * k
-    # and the prune genuinely prunes (not a pass-through)
-    assert survivors < df.count() / 10
+    assert got == want
+    assert len(got) == 10 * 5
 
 
 def test_groups_smaller_than_k(spark):
     df = spark.createDataFrame(
         [("a", 1, 1), ("a", 2, 2), ("b", 3, 3)], "g string, id long, v long"
     )
-    got = top_k_per_group_partial(df, ["g"], ORDER, 10).collect()
+    got = top_k_per_group(df, ["g"], _order(), 10).collect()
     assert len(got) == 3  # every row survives when group < k
 
 
 def test_k_validation(spark):
     df = spark.createDataFrame([("a", 1, 1)], "g string, id long, v long")
     with pytest.raises(ValueError, match="k must be"):
-        top_k_per_group_partial(df, ["g"], ORDER, 0)
+        top_k_per_group(df, ["g"], _order(), 0)
+
+
+def test_top_k_per_group_is_the_only_per_group_top_k():
+    """The Python map-side prune stays deleted, and the similarity
+    operators rank through top_k_per_group, not pasted windows."""
+    pkg = pathlib.Path(workshoop2_etl_spark.__file__).parent
+    repo = pkg.parent
+    sources = [
+        *pkg.rglob("*.py"),
+        *(repo / "tools").rglob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
+        repo / "bench.py",
+    ]
+    gone = ("top_k_per_group_partial", "partial_prune_topk")
+    hits = [
+        f"{path.relative_to(repo)}: {name}"
+        for path in sources
+        for name in gone
+        if name in path.read_text()
+    ]
+    assert hits == []
+    similarity = (pkg / "operators" / "similarity.py").read_text()
+    assert "row_number(" not in similarity

@@ -302,90 +302,25 @@ def top_k_per_group(
     *,
     rank_col: str = "rank",
 ) -> DataFrame:
-    """Top-k within each group via ``row_number`` window — the scale
-    path for 'ranking per category' dashboards."""
+    """Top-k within each group via a ``row_number`` window — the
+    package's one per-group top-k (the distributed form of the
+    reference's eager ``nlargest``, EDA notebook cell 11).
+
+    Spark plans the filter as ``WindowGroupLimit``: a partial limit
+    per group below the exchange, so only the local top-k of each
+    group shuffles, and a final one above it (``k`` up to
+    ``spark.sql.optimizer.windowGroupLimitThreshold``, default 1000).
+    ``rank_col`` is the 1-based int rank; make ``order`` a total order
+    (append a unique id) for deterministic ties."""
     from pyspark.sql import Window
 
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
         df.withColumn(rank_col, F.row_number().over(w))
         .filter(F.col(rank_col) <= k)
     )
-
-
-def top_k_per_group_partial(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[tuple[str, bool]],
-    k: int,
-    *,
-    rank_col: str = "rank",
-) -> DataFrame:
-    """EXACT per-group top-k with a map-side partial prune — the
-    shuffle-bounded twin of :func:`top_k_per_group`.
-
-    The plain window shuffles the ENTIRE table on the group key just
-    to discard all but k rows per group — at 100 TB that's the whole
-    fact table through the exchange. But a row in the global top-k of
-    its group is necessarily in the top-k of its group within its own
-    partition, so a per-partition prune to the local per-group top-k
-    first is lossless; the exchange then carries at most
-    ``partitions × groups_per_partition × k`` rows, and the final
-    window re-ranks the survivors exactly.
-
-    The partial runs in ``mapInPandas`` with bounded state: a running
-    ≤ groups×k frame folded batch-by-batch (concat → sort → head),
-    never the whole partition. ``order_by`` is (column, ascending)
-    pairs and MUST be a total order (append a unique id column) —
-    under ties the boundary row kept by the partial is arbitrary,
-    same as ``row_number`` itself, but exactness of the composition
-    is only guaranteed when ties cannot straddle the k boundary.
-
-    Generalizes the reference's eager ``nlargest`` idiom (EDA
-    notebook cell 11) to the distributed exact form.
-    """
-    gcols = list(keys)
-    pruned = partial_prune_topk(df, gcols, order_by, k)
-    order = [
-        (F.col(c).asc() if a else F.col(c).desc()) for c, a in order_by
-    ]
-    return top_k_per_group(pruned, gcols, order, k, rank_col=rank_col)
-
-
-def partial_prune_topk(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[tuple[str, bool]],
-    k: int,
-) -> DataFrame:
-    """The lossless map-side stage of :func:`top_k_per_group_partial`:
-    per partition, fold batches into a running ≤ groups×k frame
-    (concat → sort → head) and emit only the local per-group top-k.
-    Exposed separately so the survivor bound is directly testable."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    gcols = list(keys)
-    cols = [c for c, _ in order_by]
-    asc = [a for _, a in order_by]
-    schema = df.schema
-
-    def prune(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        run = None
-        for pdf in batches:
-            cat = pdf if run is None else pd.concat([run, pdf])
-            run = (
-                cat.sort_values(cols, ascending=asc, kind="mergesort")
-                .groupby(gcols, sort=False)
-                .head(k)
-            )
-        if run is not None and len(run):
-            yield run
-
-    return df.mapInPandas(prune, schema=schema)
 
 
 def crosstab_counts(df: DataFrame, row_key: str, col_key: str) -> DataFrame:

@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.operators.dedup import tokens_expr
+
 #: End-of-word sentinel appended to each pre-tokenized word so merges
 #: can distinguish word-final from word-internal contexts (the ACL'16
 #: formulation).
@@ -61,9 +63,7 @@ def bpe_train(
     word-freq dict in pure Python — the textbook algorithm, exact,
     deterministic (count desc, pair lexicographic asc).
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens_expr(text_col)
     wf_rows = (
         df.limit(max_train_docs)
         .select(F.explode(toks).alias("w"))

@@ -428,27 +428,24 @@ def per_domain_cap(
     mega-sites cannot dominate the training mix: keep at most ``k``
     documents per REGISTRABLE domain (subdomains share one budget —
     ``www.x.com`` and ``blog.x.com`` draw from the same ``k``),
-    best-first by ``order_by`` ((column, ascending) pairs; append a
-    unique id for a total order, same contract as
-    :func:`operators.analytics.top_k_per_group_partial`).
+    best-first by ``order_by`` ((column, ascending) pairs, Spark's
+    null placement: first ascending, last descending; append a unique
+    id for a total order).
 
     Scale shape: the domain key is a pure column
-    (:func:`functions.urls.registrable_domain`), and selection is the
-    shuffle-bounded EXACT top-k — a lossless map-side per-group prune
-    caps the exchange at ``partitions × domains_per_partition × k``
-    rows before the final window re-ranks, so the Zipf-head domain
-    (the exact thing this operator exists to cap) costs window time
-    over ≤ partitions·k survivor rows, never the whole fact table
-    through one hot partition. (SURVEY §2.9 X209.)"""
+    (:func:`functions.urls.registrable_domain`), and selection is
+    :func:`operators.analytics.top_k_per_group`, which Spark plans
+    as a partial ``WindowGroupLimit`` below the exchange — only each
+    partition's local top-k per domain shuffles, so the Zipf-head
+    domain (the exact thing this operator exists to cap) never sends
+    the whole fact table through one hot partition. (SURVEY §2.9
+    X209.)"""
     from workshoop2_etl_spark.functions.urls import registrable_domain
-    from workshoop2_etl_spark.operators.analytics import (
-        top_k_per_group_partial,
-    )
+    from workshoop2_etl_spark.operators.analytics import top_k_per_group
 
     work = df.withColumn(domain_col, registrable_domain(F.col(url_col)))
-    return top_k_per_group_partial(
-        work, [domain_col], order_by, k, rank_col=rank_col
-    )
+    order = [F.col(c).asc() if a else F.col(c).desc() for c, a in order_by]
+    return top_k_per_group(work, [domain_col], order, k, rank_col=rank_col)
 
 
 def hashed_char_ngram_buckets(

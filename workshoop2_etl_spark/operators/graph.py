@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from workshoop2_etl_spark.operators.dedup import tokens_expr
 from workshoop2_etl_spark.operators.pairs import both_orientations
 from workshoop2_etl_spark.sources.readers import from_records
 
@@ -391,9 +392,7 @@ def textrank_keywords(
     Ties break on ascending token after a 8-dp round so float noise
     cannot reorder equal-rank words.
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens_expr(text_col)
     pairs = df.select(toks.alias("__t")).select(
         F.posexplode("__t").alias("__i", "src"),
         F.col("__t"),

@@ -6,8 +6,8 @@ Design (the codec-ladder pattern from ``multimodal.py``, applied to
 markup):
 
 - The kernel is a REAL parse — stdlib ``html.parser.HTMLParser``
-  (tolerant by construction: malformed markup never raises), run as
-  an Arrow-batched ``mapInPandas``. No lxml/bs4/trafilatura
+  (tolerant by construction: malformed markup never raises), run on
+  the Arrow row shell (``operators/rows.py``). No lxml/bs4/trafilatura
   dependency; swapping a heavier extractor in touches one function.
 - Boilerplate removal is structural: configurable container tags
   (``script``/``style``/``nav``/``footer``/…) are dropped WITH their

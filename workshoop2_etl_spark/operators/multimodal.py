@@ -8,10 +8,11 @@ Design (the 100 TB pattern):
   stay opaque to Catalyst — filters/joins run on the cheap metadata
   columns, and column pruning means a query that never touches
   ``payload`` never reads those bytes from parquet.
-- Decode / resize / feature-extract / frame-sample run as
-  ``mapInPandas`` Pandas UDFs — Arrow ships columnar batches to
-  Python, the UDF vectorizes over the batch, and the operation
-  parallelizes per partition with no driver involvement.
+- Decode / resize / feature-extract / frame-sample run on the Arrow
+  row shell (:mod:`operators.rows`, ``mapInArrow``) — Arrow ships
+  columnar batches to Python, the kernel runs per row, kept columns
+  pass through as Arrow arrays, and the operation parallelizes per
+  partition with no driver involvement.
 - **Codec stubs**: the real decoders (PIL / librosa / av) are not in
   this container. Each operator tries the real import and otherwise
   uses a clearly-marked deterministic fake derived from the payload
@@ -3121,7 +3122,7 @@ def synthesize_media_payload(
     out_col: str = "payload",
 ) -> DataFrame:
     """Emit a REAL ``fmt`` ∈ {bmp, wav, video} file per row
-    (mapInPandas, Arrow-batched) with parameters closed-form in
+    (``map_rows``, Arrow-batched) with parameters closed-form in
     (id, text length) — the fixture side of the real-decode round
     trip. ``video`` is the indexed BMP-frame container (VID0)."""
     makers = {
@@ -3384,7 +3385,7 @@ def resize_images(
     byte-truncate/pad STUB (format restamped ``'stub'`` so the fake is
     visible per row). Output replaces the payload inside the struct
     and restamps ``n_bytes``/``content_md5`` (the struct column comes
-    last); runs as an Arrow-batched ``mapInPandas`` with no driver
+    last); runs on the Arrow row shell ``map_rows`` with no driver
     involvement."""
     w, h = target
     if w < 1 or h < 1:

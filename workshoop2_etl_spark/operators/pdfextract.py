@@ -52,8 +52,8 @@ CID-keyed composite fonts (``/Type0``), and image-codec filters
 extraction against a DuckDB oracle: filtered text → PDF → extracted
 text is an identity, and the oracle computes the same filter in SQL.
 
-Spark shape: both directions run inside ``mapInPandas`` Arrow
-kernels — blobs are built and parsed where the scan task runs and
+Spark shape: both directions run on the Arrow row shell
+(``operators/rows.py:map_rows``, ``mapInArrow``) — blobs are built and parsed where the scan task runs and
 never shuffle (the 100 TB-safe layout the WARC/wikidump chapters
 use).  Reference analog: none (extension gap; the reference ingests
 CSV/SQL only — ``SURVEY.md §2.9``).

@@ -100,47 +100,6 @@ def normalize_text(
     return df.withColumn(out, c)
 
 
-def unicode_normalize(
-    df: DataFrame,
-    text_col: str,
-    *,
-    form: str = "NFC",
-    out_col: str | None = None,
-) -> DataFrame:
-    """Unicode normalization-form canonicalization (UAX #15) — the
-    step :func:`normalize_text` deliberately does not do: visually
-    identical strings with different codepoint sequences (composed
-    ``é`` vs ``e`` + combining acute) hash differently, split
-    differently under BPE, and defeat exact dedup, so corpus prep
-    canonicalizes to one form (NFC for storage/dedup, NFKC when
-    compatibility folding — ligatures, full-width forms — is wanted).
-
-    One Arrow-batched kernel over stdlib ``unicodedata`` (no codec or
-    ICU dependency); Spark has no builtin normalization, and the
-    vectorized pandas path is the engine's sanctioned shape for that
-    (cf. the multimodal kernels). Oracle pairing: DuckDB's
-    ``nfc_normalize`` implements the same UAX #15 NFC, so the
-    registered entry hash-checks the canonicalization end-to-end.
-    """
-    if form not in ("NFC", "NFKC", "NFD", "NFKD"):
-        raise ValueError(f"unknown normalization form {form!r}")
-    out = out_col or text_col
-
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
-        import unicodedata
-
-        return s.map(
-            lambda t: unicodedata.normalize(form, t)
-            if t is not None
-            else None
-        )
-
-    return df.withColumn(out, _norm(F.col(text_col)))
-
-
 def _sloppy_cp1252_errors(exc):
     """cp1252 encode fallback, PER CHARACTER (ftfy's
     sloppy-windows-1252): any C1 codepoint (U+0080–U+009F) cp1252

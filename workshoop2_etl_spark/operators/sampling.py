@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.operators.analytics import top_k_per_group
 from workshoop2_etl_spark.sources.readers import from_records
 
 
@@ -271,13 +272,11 @@ def weighted_sample(
 
     Rows with weight ≤ 0 never win (key = +∞ via a guard), matching
     the ES convention. One shuffle on ``group_cols`` for the
-    per-group top-k window; bounded-k heap semantics come free from
-    ``row_number + filter`` (Spark plans a per-partition partial
-    sort). A global draw (``group_cols=None``) funnels the sort into
-    one partition — same guard as the other samplers.
+    per-group top-k (:func:`operators.analytics.top_k_per_group`,
+    which Spark plans with a per-partition ``WindowGroupLimit`` before
+    the exchange). A global draw (``group_cols=None``) funnels the
+    sort into one partition — same guard as the other samplers.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
     if not group_cols and not allow_global:
         raise ValueError(
             "weighted_sample without group_cols ranks the entire "
@@ -290,15 +289,10 @@ def weighted_sample(
     )
     wcol = F.col(weight_col).cast("double")
     key = F.when(wcol > 0, -F.log(u) / wcol).otherwise(F.lit(float("inf")))
-    order = (
-        Window.partitionBy(*(group_cols or []))
-        .orderBy(key.asc(), F.col(id_col).asc())
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(order))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return top_k_per_group(
+        df, group_cols or [], [key.asc(), F.col(id_col).asc()], k,
+        rank_col="__rn",
+    ).drop("__rn")
 
 
 def kfold_assign(

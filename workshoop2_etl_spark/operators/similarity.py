@@ -3,9 +3,9 @@
 Two paths, per the standard ANN playbook:
 
 - :func:`brute_force_topk` — exact cosine top-k. The query set
-  broadcasts; the corpus is scanned once; per-query top-k via a
-  ``row_number`` window over (query, sim). The baseline and the
-  oracle-checkable path.
+  broadcasts; the corpus is scanned once; per-query top-k via
+  :func:`operators.analytics.top_k_per_group` over (query, sim). The
+  baseline and the oracle-checkable path.
 - :func:`hyperplane_buckets` / :func:`lsh_topk` — random-hyperplane
   LSH: 100 TB path. Each vector gets an ``L``-table signature of
   ``p`` sign bits; candidates share a bucket in ≥1 table, exact
@@ -13,20 +13,25 @@ Two paths, per the standard ANN playbook:
 - :func:`embedding_neardup` — near-duplicate vector pairs above a
   cosine threshold, via the same buckets (never all-pairs).
 
-Everything is built-in array math (``zip_with`` / ``aggregate`` /
-``sqrt``) inside codegen — no UDFs, no driver-side loops. The
-hyperplanes are a deterministic seeded matrix materialized as column
-literals (tiny: L·p·dim doubles), so plans are reproducible across
-runs and sessions.
+Scoring (cosine, dot, norms) is built-in array math (``zip_with`` /
+``aggregate`` / ``sqrt``) inside codegen. The per-vector matrix
+kernels — hyperplane bucketing, IVF centroid assignment, PQ encoding
+and ADC scoring, cluster profiles and random projection — are
+Arrow-batched ``pandas_udf``s over numpy, one matmul per batch. The
+IVF quantizer trains with distributed ``KMeans``; the PQ codebooks
+train on the driver from a bounded sample (``max_train`` rows). The
+hyperplanes are a deterministic seeded
+matrix, so plans are reproducible across runs and sessions.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.operators.analytics import top_k_per_group
 from workshoop2_etl_spark.operators.pairs import bucket_pairs
 from workshoop2_etl_spark.sources.readers import from_records
 
@@ -62,6 +67,11 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return F.when((denom > 0) & ~F.isnan(denom), dot(ad, bd) / denom)
 
 
+def _by_sim(id_col: str) -> list[Column]:
+    """The neighbor order: most similar first, ties on ascending id."""
+    return [F.desc("sim"), F.asc(id_col)]
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -91,11 +101,8 @@ def brute_force_topk(
     scored = joined.withColumn("sim", cosine(vec_col, "__qvec")).filter(
         F.col("sim").isNotNull()  # zero-norm/corrupt vectors: never neighbors
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
+    return top_k_per_group(scored, [query_id_col], _by_sim(id_col), k).select(
+        query_id_col, id_col, "sim", "rank"
     )
 
 
@@ -241,11 +248,8 @@ def lsh_topk(
         .withColumn("sim", cosine(vec_col, "__qvec"))
         .filter(F.col("sim").isNotNull())
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
+    return top_k_per_group(scored, [query_id_col], _by_sim(id_col), k).select(
+        query_id_col, id_col, "sim", "rank"
     )
 
 
@@ -357,11 +361,8 @@ def ivf_topk(
         .withColumn("sim", cosine(vec_col, "__qvec"))
         .filter(F.col("sim").isNotNull())
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
+    return top_k_per_group(scored, [query_id_col], _by_sim(id_col), k).select(
+        query_id_col, id_col, "sim", "rank"
     )
 
 
@@ -695,14 +696,9 @@ def ivfpq_topk(
         .filter(F.col(id_col) != F.col(query_id_col))
         .withColumn("__adc", _adc(F.col(query_id_col), F.col("__code")))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("__adc"), F.asc(id_col)
-    )
-    shortlist = (
-        cand.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= refine * k)
-        .select(query_id_col, id_col)
-    )
+    shortlist = top_k_per_group(
+        cand, [query_id_col], [F.desc("__adc"), F.asc(id_col)], refine * k
+    ).select(query_id_col, id_col)
     rescored = (
         shortlist.join(corpus.select(id_col, vec_col), id_col)
         .join(
@@ -714,11 +710,8 @@ def ivfpq_topk(
         .withColumn("sim", cosine(vec_col, "__qvec"))
         .filter(F.col("sim").isNotNull())
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "sim", "rank")
+    return top_k_per_group(rescored, [query_id_col], _by_sim(id_col), k).select(
+        query_id_col, id_col, "sim", "rank"
     )
 
 
@@ -767,10 +760,8 @@ def hard_negatives(
     scored = joined.withColumn("sim", cosine(vec_col, "__qvec")).filter(
         F.col("sim").isNotNull()
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        top_k_per_group(scored, [query_id_col], _by_sim(id_col), k)
         .select(
             query_id_col,
             id_col,
@@ -876,15 +867,13 @@ def cluster_balanced_sample(
     assigned = ivf_assign(
         corpus, centroids, vec_col=vec_col, out_col="__cl", n_probe=1
     ).withColumn("cluster", F.col("__cl")[0]).drop("__cl")
-    w = Window.partitionBy("cluster").orderBy(
+    order = [
         F.md5(F.concat_ws("|", F.col(id_col).cast("string"), F.lit(salt))),
         F.col(id_col),
-    )
-    return (
-        assigned.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= per_cluster)
-        .drop("__rn")
-    )
+    ]
+    return top_k_per_group(
+        assigned, ["cluster"], order, per_cluster, rank_col="__rn"
+    ).drop("__rn")
 
 
 def rrf_fuse(

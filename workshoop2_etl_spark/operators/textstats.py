@@ -11,8 +11,8 @@
   character shingles (a MinHash-style sketch usable for containment
   and near-dup grouping);
 - :func:`nfc_normalize` — Unicode NFC canonical composition (the
-  normalize-before-hashing step every dedup pipeline needs; the one
-  Arrow-batched Python hop here, since Spark has no built-in
+  normalize-before-hashing step every dedup pipeline needs; a per-row
+  Python hop on the Arrow row shell, since Spark has no built-in
   normalizer).
 
 All pure column expressions (one narrow projection per operator, no
@@ -24,6 +24,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from workshoop2_etl_spark.operators.analytics import top_k_per_group
+from workshoop2_etl_spark.operators.dedup import tokens_expr
+from workshoop2_etl_spark.operators.rows import map_rows
 
 #: BPE-ish tokenization: letter runs | single digits | single
 #: non-alnum marks — a crude approximation of byte-pair pretoken
@@ -51,32 +56,26 @@ def nfc_normalize(
     normalized first.
 
     Spark has no built-in Unicode normalizer, so this is the rare
-    in-policy Python hop: a vectorized Arrow-batched pandas
-    ``Series.str.normalize('NFC')`` (never row-at-a-time), replacing
-    ``text_col`` in place unless ``out_col`` renames.  DuckDB's
-    ``nfc_normalize`` is the oracle twin — both sides implement the
-    same published Unicode canonical composition, which the
-    planted-fixture entry pins cross-engine."""
-    from pyspark.sql import types as T
+    in-policy Python hop: stdlib ``unicodedata.normalize('NFC')`` per
+    value on the Arrow row shell (:func:`operators.rows.map_rows`), so
+    every other column passes through as Arrow, untouched.
+    ``text_col`` is replaced in place (column order kept) unless
+    ``out_col`` names a new column. DuckDB's ``nfc_normalize`` is the
+    oracle twin — both sides implement the same published Unicode
+    canonical composition (UAX #15), which the planted-fixture entries
+    pin cross-engine."""
+    import unicodedata
+
+    def norm(t):
+        return (None if t is None else unicodedata.normalize("NFC", t),)
 
     target = out_col or text_col
-    schema = (
-        df.schema
-        if target == text_col
-        else T.StructType(
-            list(df.schema) + [T.StructField(target, T.StringType())]
-        )
+    keep = [c for c in df.columns if c != target]
+    out = map_rows(
+        df, [text_col], norm, [T.StructField(target, T.StringType())],
+        keep=keep,
     )
-
-    def batches(it):
-        for pdf in it:
-            out = pdf.copy()
-            out[target] = (
-                pdf[text_col].astype("string").str.normalize("NFC")
-            )
-            yield out
-
-    return df.mapInPandas(batches, schema)
+    return out.select(*df.columns) if target == text_col else out
 
 
 def whitespace_token_count(text: Column | str) -> Column:
@@ -94,7 +93,7 @@ def token_stats(
 ) -> DataFrame:
     """Per-document token statistics: char count, whitespace tokens,
     BPE-ish tokens, distinct whitespace tokens."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
+    toks = tokens_expr(text_col)
     keep = id_cols if id_cols is not None else [c for c in df.columns if c != text_col]
     return df.select(
         *keep,
@@ -112,7 +111,7 @@ def word_frequencies(
     (token, n), most frequent first (token asc on ties — total
     order). The shuffle carries (token, partial-count) pairs thanks
     to map-side partial aggregation."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != "")
+    toks = tokens_expr(text_col)
     return (
         df.select(F.explode(toks).alias("token"))
         .groupBy("token")
@@ -361,9 +360,7 @@ def tf_idf(
 
     Output: ``{id_col}``, ``term``, ``tf``, ``df``, ``tfidf``.
     """
-    terms = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    terms = tokens_expr(text_col)
     tf = (
         df.select(F.col(id_col), F.explode(terms).alias("term"))
         .groupBy(id_col, "term")
@@ -418,9 +415,7 @@ def bm25_search(
     Output: (``{id_col}``, ``score`` double) — top ``k`` by
     (score desc, id asc).
     """
-    terms = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    terms = tokens_expr(text_col)
     q = [t.lower() for t in query_terms]
     posting = (
         df.select(
@@ -688,9 +683,7 @@ def phrase_search(
     if len(phrase) < 1:
         raise ValueError("phrase must have at least one term")
     terms = [t.lower() for t in phrase]
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens_expr(text_col)
     postings = (
         df.select(F.col(id_col), toks.alias("__t"))
         .select(F.col(id_col), F.posexplode("__t").alias("__p", "__term"))
@@ -736,9 +729,7 @@ def ctfidf_topic_terms(
 
     Returns (``{cluster_col}``, ``term``, ``weight``, ``rk`` long).
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens_expr(text_col)
     ct = (
         df.select(F.col(cluster_col), F.explode(toks).alias("term"))
         .groupBy(cluster_col, "term")
@@ -750,10 +741,7 @@ def ctfidf_topic_terms(
     avg_tokens = ct.groupBy(cluster_col).agg(
         F.sum("__tf").alias("__ctoks")
     ).agg(F.avg("__ctoks").alias("__a"))
-    w = Window.partitionBy(cluster_col).orderBy(
-        F.desc("weight"), F.asc("term")
-    )
-    return (
+    weighted = (
         ct.join(corpus_f, "term")
         .crossJoin(F.broadcast(avg_tokens))
         .withColumn(
@@ -762,10 +750,11 @@ def ctfidf_topic_terms(
                 F.col("__tf") * F.log(1.0 + F.col("__a") / F.col("__f")), 6
             ),
         )
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select(cluster_col, "term", "weight", "rk")
     )
+    order = [F.desc("weight"), F.asc("term")]
+    return top_k_per_group(
+        weighted, [cluster_col], order, k, rank_col="rk"
+    ).select(cluster_col, "term", "weight", F.col("rk").cast("long"))
 
 
 def pmi_collocations(
@@ -799,9 +788,7 @@ def pmi_collocations(
     Returns (``a``, ``b``, ``n_pair`` long, ``pmi`` double) — top
     ``k`` by (pmi desc, a asc, b asc).
     """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens_expr(text_col)
     base = df.select(toks.alias("__t"))
     pairs = (
         base.select(

@@ -41,6 +41,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.operators.dedup import tokens_expr
+
 __all__ = ["unigram_train", "unigram_apply", "viterbi_segment"]
 
 #: Log-prob assigned to an out-of-vocabulary single character at
@@ -59,14 +61,7 @@ def _word_freqs(df: DataFrame, text_col: str, max_train_docs: int):
         df.select(F.col(text_col).alias("__t"))
         .orderBy(F.md5(F.concat(F.lit("unigram:"), F.col("__t"))), "__t")
         .limit(max_train_docs)
-        .select(
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.col("__t")), r"\s+"),
-                    lambda t: t != "",
-                )
-            ).alias("w")
-        )
+        .select(F.explode(tokens_expr("__t")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()

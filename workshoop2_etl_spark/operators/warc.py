@@ -17,7 +17,7 @@ Design (the codec-ladder pattern):
   (Spark ``binaryFile`` source: one row per file, payload in the
   ``content`` column) and fans records out per file — embarrassingly
   parallel, no shuffle. ``parse_warc_blobs`` is that kernel
-  (Arrow-batched ``mapInPandas``, one input row → N record rows).
+  (Arrow row shell ``flat_map_rows``, one input row → N record rows).
 - **Closed-form fixture.** ``synthesize_warc_record`` wraps a page in
   a deterministic WARC/1.0 response record (URI carries the doc id),
   so the registered query recovers doc_id FROM the parsed record and

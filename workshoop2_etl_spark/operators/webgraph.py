@@ -24,10 +24,11 @@ The reference has no graph surface; SURVEY §2.9 X207.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from workshoop2_etl_spark.functions.urls import host_of
+from workshoop2_etl_spark.operators.analytics import top_k_per_group
 
 
 def anchor_stats(
@@ -53,12 +54,10 @@ def anchor_stats(
         .groupBy(d.alias("__dst"), F.col(anchor_col).alias("__anchor"))
         .agg(F.count(F.lit(1)).alias("__n"))
     )
-    w = Window.partitionBy("__dst").orderBy(
-        F.col("__n").desc(), F.col("__anchor")
-    )
     top = (
-        per_anchor.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
+        top_k_per_group(
+            per_anchor, ["__dst"], [F.col("__n").desc(), F.col("__anchor")], 1
+        )
         .select(
             "__dst",
             F.col("__anchor").alias("top_anchor"),
@@ -70,10 +69,10 @@ def anchor_stats(
     # holds more than max_anchors values per key (an unbounded
     # collect_set over a Zipf-head homepage target would blow the
     # buffer exactly where this operator must not)
-    wa = Window.partitionBy("__dst").orderBy("__anchor")
     capped = (
-        per_anchor.withColumn("__ra", F.row_number().over(wa))
-        .where(F.col("__ra") <= max_anchors)
+        top_k_per_group(
+            per_anchor, ["__dst"], [F.col("__anchor")], max_anchors
+        )
         .groupBy("__dst")
         .agg(
             F.array_join(

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from workshoop2_etl_spark.operators.basket import association_rules
+from workshoop2_etl_spark.operators.dedup import tokens_expr
 from workshoop2_etl_spark.operators.graph import triangle_count
 from workshoop2_etl_spark.operators.pairs import both_orientations
 from workshoop2_etl_spark.plans.reference_queries import _register, _t
@@ -249,14 +250,7 @@ def kcore_word_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = copurchase_pairs(
         docs.select(
             "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.filter(
-                        F.split(F.lower(F.col("text")), r"\s+"),
-                        lambda t: t != "",
-                    )
-                )
-            ).alias("word"),
+            F.explode(F.array_distinct(tokens_expr("text"))).alias("word"),
         ),
         basket_col="doc_id",
         item_col="word",
@@ -403,14 +397,7 @@ def textrank_fixed_point_documents(
     docs = _t(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.split(F.lower(F.col("text")), r"\s+"),
-                    lambda t: t != "",
-                )
-            )
-        ).alias("word"),
+        F.explode(F.array_distinct(tokens_expr("text"))).alias("word"),
     )
     pairs = copurchase_pairs(
         words, basket_col="doc_id", item_col="word", min_count=20

@@ -1398,25 +1398,24 @@ FROM (
 def topk_pergroup_partial_lineitem(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Top-3 line items per supplier by price, via the map-side
-    partial prune (operators/analytics.py:top_k_per_group_partial):
-    each partition folds down to its local per-group top-3 in bounded
-    memory BEFORE the exchange, so the shuffle carries survivors only
-    — never the fact table. The answer is EXACT (total order via the
-    (orderkey, linenumber) tiebreak), hence the plain window oracle."""
-    from workshoop2_etl_spark.operators.analytics import (
-        top_k_per_group_partial,
-    )
+    """Top-3 line items per supplier by price
+    (operators/analytics.py:top_k_per_group), which Spark plans as a
+    partial ``WindowGroupLimit`` per partition BEFORE the exchange,
+    so the shuffle carries each partition's local top-3 per supplier
+    only — never the fact table. The answer is EXACT (total order via
+    the (orderkey, linenumber) tiebreak), hence the plain window
+    oracle."""
+    from workshoop2_etl_spark.operators.analytics import top_k_per_group
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_suppkey", "l_partkey", "l_extendedprice", "l_orderkey",
         "l_linenumber",
     )
-    out = top_k_per_group_partial(
+    out = top_k_per_group(
         li,
         ["l_suppkey"],
-        [("l_extendedprice", False), ("l_orderkey", True),
-         ("l_linenumber", True)],
+        [F.col("l_extendedprice").desc(), F.col("l_orderkey").asc(),
+         F.col("l_linenumber").asc()],
         3,
     )
     return out.select(

@@ -29,6 +29,7 @@ from workshoop2_etl_spark.operators.dedup import (
     near_dedup_keep,
     near_dedup_minhash,
     simhash,
+    tokens_expr,
 )
 from workshoop2_etl_spark.operators.heavyhitters import heavy_hitters
 from workshoop2_etl_spark.operators.similarity import (
@@ -571,9 +572,7 @@ def heavy_hitters_bigrams_documents(
     is internal; the ANSWER is exact, hence the plain SQL oracle
     (``HAVING count >= ceil(φ·N)``). See operators/heavyhitters.py
     for the pigeonhole completeness argument."""
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
-    )
+    toks = tokens_expr("text")
     docs = _tp(spark, sf_dir, "documents").select(toks.alias("__ts"))
     tail = "slice(__ts, 1, greatest(size(__ts) - 1, 0))"
     head = "slice(__ts, 2, greatest(size(__ts) - 1, 0))"
@@ -743,7 +742,7 @@ def video_demux_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed container (VID0 magic + u32 frame count + u32 lengths) of
     genuine 24-bpp BMP frames, frame i sized
     (1 + (doc_id+i) % 31) × (1 + (doc_id+i) % 13), and the
-    mapInPandas kernel actually parses the index, walks the frames,
+    Arrow row kernel actually parses the index, walks the frames,
     and struct-decodes each frame's BMP header for its true
     dimensions. The oracle checks frame count and per-frame geometry
     against the closed form — a full mux→demux→decode round trip
@@ -780,7 +779,7 @@ def image_decode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode, no codec library: the synthetic generator
     emits actual 24-bpp BMP files (BITMAPFILEHEADER + INFOHEADER +
     padded pixel rows) whose geometry is closed-form in doc_id, and
-    the mapInPandas kernel struct-unpacks biWidth/biHeight/biBitCount
+    the Arrow row kernel struct-unpacks biWidth/biHeight/biBitCount
     from the real bytes. The oracle checks the decoded values against
     the closed form — a full generate→encode→decode round trip."""
     from workshoop2_etl_spark.operators.multimodal import (
@@ -802,7 +801,7 @@ def image_decode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register("media_embedding_topk")  # rows-only: stub encoder + ANN compose
 def media_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal → ANN composition: stub-encode payloads to unit
-    vectors (mapInPandas batch inference shape), then exact cosine
+    vectors (Arrow row-kernel batch inference shape), then exact cosine
     top-5 for the first three docs — the retrieval layout of an
     image-dedup / caption-matching pipeline."""
     from workshoop2_etl_spark.operators.multimodal import extract_embedding
@@ -932,7 +931,7 @@ def resize_images_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     24-bpp BMPs (geometry closed-form in doc_id, pixel bytes cycling
     md5(text)) are decoded to their padded pixel grids, numpy
     nearest-neighbor resampled to 8×8, and re-encoded as valid BMPs
-    inside the mapInPandas kernel. The oracle replays the layout
+    inside the Arrow row kernel. The oracle replays the layout
     arithmetic exactly: output size 54 + 8·24 = 246 bytes, re-decoded
     geometry 8×8 RGB, and two probe pixels — the first 3 pixel-array
     bytes (bottom-up row 0 = image row 7 → source row (7·h_in)//8)
@@ -1003,7 +1002,7 @@ def resize_images_png_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     IHDR/IDAT/IEND with CRCs; geometry closed-form in doc_id, raw
     scanline bytes cycling md5(text)) are zlib-INFLATED, unfiltered,
     nearest-neighbor resampled to 8×8, and deflate RE-ENCODED as
-    valid PNGs inside the mapInPandas kernel. A PNG's stored bytes
+    valid PNGs inside the Arrow row kernel. A PNG's stored bytes
     are compressed, so the oracle cannot substring the payload the
     way the BMP twin does — instead the probe kernel DECODES the
     output and the oracle replays the closed form of the decoded
@@ -1210,7 +1209,7 @@ def tiff_decode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generator emits genuine TIFF 6.0 files (II and MM byte
     orders, multi-strip rasters, compression cycling none → LZW with
     horizontal-differencing predictor → PackBits by doc_id) and the
-    mapInPandas kernel walks the IFD for ImageWidth / ImageLength /
+    Arrow row kernel walks the IFD for ImageWidth / ImageLength /
     Photometric / SamplesPerPixel.  The oracle checks the decoded
     geometry against the closed form — a wrong byte-order read,
     entry-offset resolution, or tag type size breaks it."""
@@ -1286,7 +1285,7 @@ def audio_features_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode, no codec library: the generator emits actual
     PCM WAV files (RIFF chunk layout, mono 16-bit 16 kHz, constant
     amplitude 100 + doc_id % 900, 1600 + len(text) % 800 frames) and
-    the mapInPandas kernel walks the RIFF chunks with struct, reads
+    the Arrow row kernel walks the RIFF chunks with struct, reads
     the fmt parameters, and computes duration + per-2048-sample-chunk
     RMS from the actual int16 samples. n_frames is recovered exactly
     from the decoded duration (round(d*rate)); rms0 equals the
@@ -2582,8 +2581,8 @@ def nfc_normalize_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-different but canonically equal, and a pipeline that hashes
     unnormalized text silently keeps such duplicates.  The fixture
     plants BOTH forms by doc_id%3; after ``textstats.nfc_normalize``
-    (vectorized Arrow ``Series.str.normalize`` — Spark has no
-    built-in normalizer) the decomposed rows change (flag pinned),
+    (``unicodedata`` on the Arrow row shell — Spark has no built-in
+    normalizer) the decomposed rows change (flag pinned),
     every planted suffix hashes to the SAME md5 tail, and the
     normalized length drops by exactly the combining characters.
     Oracle: DuckDB's ``nfc_normalize`` — two independent
@@ -2929,6 +2928,7 @@ def rp_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic embeddings are i.i.d. noise, the JL worst case — real
     embedding corpora cluster, where the same pipeline recalls far
     higher); the distortion bound is pytest-proven."""
+    from workshoop2_etl_spark.operators.analytics import top_k_per_group
     from workshoop2_etl_spark.operators.similarity import (
         brute_force_topk,
         cosine,
@@ -2954,13 +2954,11 @@ def rp_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("sim", F.round(cosine("embedding", "__orig_q"), 4))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("vec_id")
+    out = top_k_per_group(
+        rerank, ["query_id"], [F.desc("sim"), F.asc("vec_id")], 10
     )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "vec_id", "sim", "rank")
+    return out.select(
+        "query_id", "vec_id", "sim", F.col("rank").cast("long").alias("rank")
     )
 
 
@@ -3312,7 +3310,7 @@ def allpairs_jaccard_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NFC_SQL = """
+_NFC_PLANTED_SQL = """
 WITH planted AS (
   SELECT doc_id,
          text || ' ' || CASE doc_id % 3
@@ -3329,18 +3327,18 @@ FROM planted
 """
 
 
-@_register("unicode_nfc_documents", _NFC_SQL)
+@_register("unicode_nfc_documents", _NFC_PLANTED_SQL)
 def unicode_nfc_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC canonicalization (operators/redaction.py
-    ``unicode_normalize``): every document gets a planted DECOMPOSED
+    """Unicode NFC canonicalization (operators/textstats.py
+    ``nfc_normalize``): every document gets a planted DECOMPOSED
     suffix (combining acute/diaeresis/ring chosen by doc_id % 3), the
-    Arrow-batched unicodedata kernel composes it, and the oracle
+    Arrow row-shell unicodedata kernel composes it, and the oracle
     replays the identical planting through DuckDB's ``nfc_normalize``
     — same UAX #15 algorithm, so codepoint counts before/after AND
     the md5 of the normalized bytes hash-match. The length drop
     (n_before > n_after on every row) proves the normalization
     actually fired rather than passing ASCII through."""
-    from workshoop2_etl_spark.operators.redaction import unicode_normalize
+    from workshoop2_etl_spark.operators.textstats import nfc_normalize
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     suffix = (
@@ -3352,7 +3350,7 @@ def unicode_nfc_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.concat(F.col("text"), F.lit(" "), suffix).alias("t"),
     )
-    out = unicode_normalize(planted, "t", form="NFC", out_col="t_nfc")
+    out = nfc_normalize(planted, "t", out_col="t_nfc")
     return out.select(
         "doc_id",
         F.length("t").cast("long").alias("n_before"),
@@ -4838,7 +4836,8 @@ def web_curation_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     set exactly where a blocked doc would have out-ranked a clean
     one, which the shared-fixture oracle states closed-form. Both
     stages keep their scale shapes: suffix-chain equi-join, then the
-    map-side-pruned exact top-k."""
+    exact top-k with its partial ``WindowGroupLimit`` before the
+    exchange."""
     from workshoop2_etl_spark.operators.curation import per_domain_cap
     from workshoop2_etl_spark.operators.urlfilter import blocklist_filter
 
@@ -5098,9 +5097,9 @@ def domain_cap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     over seven sites, so the cap only comes out right if subdomains
     SHARE one budget (registrable_domain collapses www/ads/media
     before ranking — a per-host window would keep 15). Selection is
-    the shuffle-bounded exact top-k (map-side per-group prune, then
-    the window over survivors). Oracle replays the standard-SQL
-    window over the same closed-form URLs."""
+    the shuffle-bounded exact top-k (a partial ``WindowGroupLimit``
+    per partition, then the window over survivors). Oracle replays
+    the standard-SQL window over the same closed-form URLs."""
     from workshoop2_etl_spark.operators.curation import per_domain_cap
 
     docs = _tp(spark, sf_dir, "documents").select(
@@ -7095,7 +7094,7 @@ def pdf_text_extract_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams, WinAnsi Helvetica, classic xref — the closed-form
     ``operators/pdfextract.build_pdf``) and parsed BACK through the
     full xref → page tree → BT‥ET text machine
-    (``extract_pdf_text``), inside one Arrow ``mapInPandas`` pass
+    (``extract_pdf_text``), inside one Arrow ``map_rows`` pass
     each (blobs never shuffle; at 100 TB the parse runs where the
     crawl-scan task runs, exactly the WARC layout).
 
@@ -7198,7 +7197,7 @@ def pdf_xrefstream_extract_documents(
     rows under a PNG-Up ``/Predictor 12``), then parses BACK through
     the §7.5.8 xref-stream walk → §7.5.7 object-stream unpack →
     predictor inversion → the same BT‥ET text machine
-    (``operators/pdfextract.py``).  Same Arrow ``mapInPandas``
+    (``operators/pdfextract.py``).  Same Arrow ``map_rows``
     layout as X222: blobs never shuffle.
 
     Oracle: identity on the WinAnsi-safe projection, exactly as
@@ -7604,7 +7603,7 @@ def audio_flac_features_documents(
     CONSTANT / FIXED / order-2 quantized-LPC subframes, and the
     channel assignment cycling independent → left/side → right/side
     → mid/side by doc_id so every stereo decorrelation decodes in
-    one query) and the mapInPandas kernel decodes them through
+    one query) and the Arrow row kernel decodes them through
     ``_parse_flac`` — metadata-block walk, frame-sync + CRC
     verification, subframe + stereo reconstruction — then computes
     duration + per-2048-sample-chunk RMS from the interleaved
@@ -7831,8 +7830,8 @@ def web_curation_directives_documents(
     so the cap's ranking differs from the X213 entry exactly where a
     noindex page would have held a budget slot, which the oracle
     states closed-form. All three stages keep their scale shapes:
-    pure-column regex admission, suffix-chain equi-join, map-side-
-    pruned exact top-k."""
+    pure-column regex admission, suffix-chain equi-join, exact top-k
+    with its partial ``WindowGroupLimit`` before the exchange."""
     from workshoop2_etl_spark.operators.curation import per_domain_cap
     from workshoop2_etl_spark.operators.htmlextract import page_directives
     from workshoop2_etl_spark.operators.urlfilter import blocklist_filter
