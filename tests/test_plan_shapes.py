@@ -593,20 +593,9 @@ _PYTHON_NODE = re.compile(
 )
 
 
-def test_paper_etl_load_runs_no_python(spark, tmp_path):
-    """A warehouse load shaped like the paper's (clean with recode and
-    mode-or-first → outer merge with a parquet checkpoint → star →
-    writes) executes only JVM plans: no Python RDD scan and no node
-    that evaluates Python, in any plan the load runs."""
-    from workshoop2_etl_spark.plans.pipelines import (
-        DimSpec,
-        clean_pipeline,
-        merge_pipeline,
-        star_pipeline,
-    )
-    from workshoop2_etl_spark.sources.readers import read_parquet
-    from workshoop2_etl_spark.sources.writers import write_parquet
-
+def _executed_plans(spark, run) -> list[str]:
+    """The physical plans of every SQL execution ``run()`` starts, read
+    from the status store (which works with the UI disabled)."""
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
 
@@ -616,6 +605,50 @@ def test_paper_etl_load_runs_no_python(spark, tmp_path):
         return [runs.apply(i) for i in range(runs.size())]
 
     before = max((x.executionId() for x in executions()), default=-1)
+    run()
+    return [
+        x.physicalPlanDescription()
+        for x in executions()
+        if x.executionId() > before
+    ]
+
+
+def _assert_no_python(plans: list[str]) -> None:
+    for plan in plans:
+        assert "ExistingRDD" not in plan
+        assert not _PYTHON_NODE.search(plan), _PYTHON_NODE.search(plan)
+
+
+def test_paper_etl_load_runs_no_python(spark, tmp_path):
+    """A warehouse load shaped like the paper's (clean with recode and
+    mode-or-first → outer merge with a parquet checkpoint → star →
+    writes) executes only JVM plans: no Python RDD scan and no node
+    that evaluates Python, in any plan the load runs."""
+    plans = _executed_plans(spark, lambda: _paper_etl_load(spark, tmp_path))
+    assert len(plans) >= 4  # the checkpoint write and three table writes
+    assert any("LocalTableScan" in p for p in plans)  # the recode lookup
+    _assert_no_python(plans)
+
+
+def test_xml_roundtrip_runs_no_python(spark):
+    """The XML sink and scan are Spark's own ``xml`` source: neither the
+    write nor the read of ``xml_roundtrip_orders`` runs Python."""
+    plans = _executed_plans(
+        spark, lambda: q("xml_roundtrip_orders")(spark, SF).collect()
+    )
+    assert len(plans) >= 2  # the write and the read
+    _assert_no_python(plans)
+
+
+def _paper_etl_load(spark, tmp_path) -> None:
+    from workshoop2_etl_spark.plans.pipelines import (
+        DimSpec,
+        clean_pipeline,
+        merge_pipeline,
+        star_pipeline,
+    )
+    from workshoop2_etl_spark.sources.readers import read_parquet
+    from workshoop2_etl_spark.sources.writers import write_parquet
 
     lineitem = read_parquet(spark, f"{SF}/lineitem.parquet")
     orders = read_parquet(spark, f"{SF}/orders.parquet")
@@ -649,17 +682,6 @@ def test_paper_etl_load_runs_no_python(spark, tmp_path):
     )
     for name, df in (*dims.items(), ("fact_orders", fact)):
         write_parquet(df, str(tmp_path / name))
-
-    plans = [
-        x.physicalPlanDescription()
-        for x in executions()
-        if x.executionId() > before
-    ]
-    assert len(plans) >= 4  # the checkpoint write and three table writes
-    assert any("LocalTableScan" in p for p in plans)  # the recode lookup
-    for plan in plans:
-        assert "ExistingRDD" not in plan
-        assert not _PYTHON_NODE.search(plan), _PYTHON_NODE.search(plan)
 
 
 # Per-group top-k: Spark plans ``row_number() <= k`` as a partial

@@ -152,3 +152,47 @@ def test_kept_long_above_2_53_next_to_null_is_exact(spark):
         df, ["k"], lambda k: (repr(k),), [T.StructField("r", T.StringType())]
     )
     assert [r.r for r in seen.collect()] == [repr(2**53 + 1), "nan"]
+
+
+def _compression_ratio(df):
+    from workshoop2_etl_spark.operators.textstats import compression_ratio
+
+    return compression_ratio(df, "text")
+
+
+def _bpe_apply(df):
+    from workshoop2_etl_spark.operators.bpe import bpe_apply
+
+    return bpe_apply(df, "text", [("l", "o"), ("lo", "w")])
+
+
+def _unigram_apply(df):
+    from workshoop2_etl_spark.operators.unigram import unigram_apply
+
+    return unigram_apply(df, "text", {"l": -1.0, "o": -1.0, "lo": -0.5})
+
+
+ID_PASSTHROUGH = pytest.mark.parametrize(
+    "op",
+    [_compression_ratio, _bpe_apply, _unigram_apply],
+    ids=["compression_ratio", "bpe_apply", "unigram_apply"],
+)
+
+
+@ID_PASSTHROUGH
+def test_token_kernels_keep_a_string_id(spark, op):
+    df = spark.createDataFrame(
+        [("doc-a", "low low"), ("doc-b", None)], "doc_id string, text string"
+    ).coalesce(1)
+    out = op(df)
+    assert out.schema["doc_id"].dataType == T.StringType()
+    assert sorted(r.doc_id for r in out.collect()) == ["doc-a", "doc-b"]
+
+
+@ID_PASSTHROUGH
+def test_token_kernels_keep_long_ids_exact_next_to_null(spark, op):
+    # one partition, so the big id and the null id share an Arrow batch
+    df = spark.createDataFrame(
+        [(2**53 + 1, "low"), (None, "lo")], "doc_id long, text string"
+    ).coalesce(1)
+    assert [r.doc_id for r in op(df).collect()] == [2**53 + 1, None]

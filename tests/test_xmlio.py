@@ -1,21 +1,19 @@
-"""Generic declared-schema XML source/sink (round 13): full-lattice
-round trips, entity escaping, NULL-vs-empty distinction, malformed
-input tolerance/refusals, and the multi-file Spark path."""
+"""Declared-schema XML source/sink: full-lattice round trips through
+``write_xml``/``read_xml``, entity escaping, NULL-vs-empty, nested and
+binary columns, read tolerance and refusals, real-XML syntax, and
+multi-file output."""
 
 from __future__ import annotations
 
 import datetime
 import decimal
+import glob
+import math
 
 import pytest
 from pyspark.sql import types as T
 
-from workshoop2_etl_spark.sources.xmlio import (
-    decode_xml_pandas,
-    encode_xml_pandas,
-    read_xml,
-    write_xml,
-)
+from workshoop2_etl_spark.sources.xmlio import read_xml, write_xml
 
 FULL = T.StructType(
     [
@@ -26,79 +24,132 @@ FULL = T.StructType(
         T.StructField("amt", T.DecimalType(10, 2)),
         T.StructField("d", T.DateType()),
         T.StructField("ts", T.TimestampNTZType()),
+        T.StructField("tz", T.TimestampType()),
+        T.StructField("_VALUE", T.StringType()),
+        T.StructField("_merge", T.StringType()),
     ]
 )
 
 
-def test_full_lattice_roundtrip_with_escapes_and_nulls():
-    import pandas as pd
+def _write_doc(tmp_path, text: str) -> str:
+    d = tmp_path / "doc"
+    d.mkdir()
+    (d / "a.xml").write_text(text, encoding="utf-8")
+    return str(d)
 
-    rows = pd.DataFrame(
-        {
-            "k": pd.array([1, 2, None], dtype="Int64"),
-            "name": ["a<b>&\"c'", "", None],
-            "price": pd.array([1.5, float(1) / 3, None], dtype="float64"),
-            "ok": pd.Series([True, False, None], dtype="object"),
-            "amt": pd.Series(
-                [decimal.Decimal("10.25"), None, decimal.Decimal("0.01")],
-                dtype="object",
+
+def _same(a, b) -> bool:
+    if isinstance(a, float) and isinstance(b, float):
+        if math.isnan(a):
+            return math.isnan(b)
+        return a == b and math.copysign(1, a) == math.copysign(1, b)
+    return a == b
+
+
+def test_full_lattice_roundtrip_with_escapes_and_nulls(spark, tmp_path):
+    ts = datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)
+    rows = [
+        (1, "a<b>&\"c'", 1.5, True, decimal.Decimal("10.25"),
+         datetime.date(2024, 2, 29), ts, ts, "x", "both"),
+        # empty string != NULL; surrounding spaces kept
+        (2, "", 1 / 3, False, None,
+         datetime.date(9999, 12, 31), None, None, "  padded ", ""),
+        (2**63 - 1, None, -0.0, None, decimal.Decimal("0.01"),
+         None, None, None, None, None),
+        (None, "café €", float("nan"), None, None,
+         None, None, None, None, None),
+        (None,) * 10,
+    ]
+    out = str(tmp_path / "lattice")
+    write_xml(spark.createDataFrame(rows, FULL).coalesce(1), out)
+    back = read_xml(spark, out, FULL)
+    assert back.schema == FULL
+    got = [tuple(r) for r in back.collect()]
+    assert len(got) == len(rows)
+    for want, have in zip(rows, got):
+        assert all(_same(a, b) for a, b in zip(want, have)), (want, have)
+
+
+def test_nested_and_binary_columns_roundtrip(spark, tmp_path):
+    schema = T.StructType(
+        [
+            T.StructField("a", T.ArrayType(T.LongType())),
+            T.StructField(
+                "s",
+                T.StructType(
+                    [
+                        T.StructField("x", T.LongType()),
+                        T.StructField("y", T.StringType()),
+                    ]
+                ),
             ),
-            "d": pd.Series(
-                [datetime.date(2024, 2, 29), None, datetime.date(1999, 1, 1)],
-                dtype="object",
-            ),
-            "ts": pd.to_datetime(
-                pd.Series(
-                    [datetime.datetime(2024, 1, 2, 3, 4, 5, 678901), None, None],
-                    dtype="object",
-                )
-            ),
-        }
+            T.StructField("b", T.BinaryType()),
+        ]
     )
-    blob = encode_xml_pandas(rows, FULL)
-    back = decode_xml_pandas(blob, FULL)
-    assert list(back["k"]) == [1, 2] + [v for v in [back["k"][2]]][:1]
-    assert back["k"][2] is None or back["k"].isna()[2]
-    # escaped string round-trips exactly; empty != NULL
-    assert back["name"][0] == "a<b>&\"c'"
-    assert back["name"][1] == ""
-    assert back["name"][2] is None
-    # shortest-roundtrip doubles are value-exact (1/3 survives)
-    assert back["price"][1] == float(1) / 3
-    assert back["amt"][0] == decimal.Decimal("10.25")
-    assert back["d"][0] == datetime.date(2024, 2, 29)
-    assert back["ts"][0] == datetime.datetime(2024, 1, 2, 3, 4, 5, 678901)
+    rows = [
+        ([1, 2, 3], (4, "q"), bytearray(b"\x00\xffxy")),
+        ([2**53 + 1], (None, ""), bytearray(b"")),
+        (None, None, None),
+    ]
+    out = str(tmp_path / "nested")
+    write_xml(spark.createDataFrame(rows, schema).coalesce(1), out)
+    got = [tuple(r) for r in read_xml(spark, out, schema).collect()]
+    assert got == [
+        ([1, 2, 3], (4, "q"), b"\x00\xffxy"),
+        ([2**53 + 1], (None, ""), b""),
+        (None, None, None),
+    ]
 
 
-def test_numeric_character_references_unescape():
-    blob = (
-        b'<?xml version="1.0"?><rows>'
-        b"<row><name>caf&#233; &#x20AC;</name></row></rows>"
+def test_numeric_character_references_unescape(spark, tmp_path):
+    path = _write_doc(
+        tmp_path,
+        '<?xml version="1.0"?><rows>'
+        "<row><name>caf&#233; &#x20AC;</name></row></rows>",
     )
     schema = T.StructType([T.StructField("name", T.StringType())])
-    back = decode_xml_pandas(blob, schema)
-    assert back["name"][0] == "café €"
+    assert read_xml(spark, path, schema).collect()[0]["name"] == "café €"
 
 
-def test_tolerance_and_refusals():
+def test_tolerance_and_refusals(spark, tmp_path):
     schema = T.StructType([T.StructField("k", T.LongType())])
     # bytes outside row elements ignored; missing column -> NULL
-    blob = b"<rows>junk<row><other>9</other></row><row><k>7</k></row></rows>"
-    back = decode_xml_pandas(blob, schema)
-    assert back["k"].isna()[0] and back["k"][1] == 7
-    # unparseable declared-long value fails loudly, never silently nulls
-    with pytest.raises(ValueError):
-        decode_xml_pandas(b"<rows><row><k>x7</k></row></rows>", schema)
-    # unsupported column types refused driver-side
-    nested = T.StructType(
-        [T.StructField("a", T.ArrayType(T.LongType()))]
+    ok = _write_doc(
+        tmp_path,
+        "<rows>junk<row><other>9</other></row><row><k>7</k></row></rows>",
     )
-    with pytest.raises(ValueError, match="lattice"):
-        decode_xml_pandas(b"<rows/>", nested)
-    # invalid element names refused
-    bad = T.StructType([T.StructField("1bad name", T.StringType())])
+    assert [r["k"] for r in read_xml(spark, ok, schema).collect()] == [None, 7]
+    # unparseable declared-long value fails loudly, never silently nulls
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "a.xml").write_text("<rows><row><k>x7</k></row></rows>")
+    with pytest.raises(Exception, match="MALFORMED_RECORD"):
+        read_xml(spark, str(bad), schema).collect()
+    # invalid element names refused driver-side, on both directions
+    bad_name = T.StructType([T.StructField("1bad name", T.StringType())])
     with pytest.raises(ValueError, match="element name"):
-        decode_xml_pandas(b"<rows/>", bad)
+        read_xml(spark, ok, bad_name)
+    with pytest.raises(ValueError, match="element name"):
+        write_xml(
+            spark.createDataFrame([("v",)], bad_name), str(tmp_path / "nope")
+        )
+
+
+def test_reads_attributes_self_closing_cdata_and_tag_spaces(spark, tmp_path):
+    path = _write_doc(
+        tmp_path,
+        '<rows><row id="9"><k>7</k><name/><v><![CDATA[a<b]]></v></row>'
+        "<row><k >8</k><name>x</name></row></rows>",
+    )
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType()),
+            T.StructField("name", T.StringType()),
+            T.StructField("v", T.StringType()),
+        ]
+    )
+    got = [tuple(r) for r in read_xml(spark, path, schema).collect()]
+    assert got == [(7, "", "a<b"), (8, "x", None)]
 
 
 def test_spark_multifile_roundtrip(spark, tmp_path):
@@ -113,8 +164,8 @@ def test_spark_multifile_roundtrip(spark, tmp_path):
         [(i, f"name&{i}<tag>", i * 0.125) for i in range(100)], schema
     )
     out = str(tmp_path / "xmlsink")
-    n_files = write_xml(df.repartition(4, "k"), out)
-    assert n_files == 4
+    write_xml(df.repartition(4, "k"), out)
+    assert len(glob.glob(out + "/*.xml")) == 4
     back = read_xml(spark, out, schema)
     assert back.schema == schema
     got = sorted((r["k"], r["v"], r["x"]) for r in back.collect())
@@ -122,16 +173,11 @@ def test_spark_multifile_roundtrip(spark, tmp_path):
     assert got == want
 
 
-def test_write_refuses_binary_and_renders_deterministically(spark, tmp_path):
-    bad = spark.createDataFrame([(bytearray(b"x"),)], "b binary")
-    with pytest.raises(ValueError, match="lattice"):
-        write_xml(bad, str(tmp_path / "nope"))
+def test_renders_deterministically(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "k long, v string")
     p1, p2 = str(tmp_path / "a"), str(tmp_path / "b")
     write_xml(df.coalesce(1), p1)
     write_xml(df.coalesce(1), p2)
-    import glob
-
-    b1 = open(glob.glob(p1 + "/*.xml")[0], "rb").read()
-    b2 = open(glob.glob(p2 + "/*.xml")[0], "rb").read()
-    assert b1 == b2
+    (f1,) = glob.glob(p1 + "/*.xml")
+    (f2,) = glob.glob(p2 + "/*.xml")
+    assert open(f1, "rb").read() == open(f2, "rb").read()

@@ -15,7 +15,7 @@ shape every large-corpus tokenizer pipeline uses:
   quantizers). Driver-side pure Python over the word-freq dict;
   deterministic: ties on pair frequency break lexicographically.
 - **Apply** (:func:`bpe_apply`): merges broadcast as a rank dict;
-  each Arrow batch tokenizes its DISTINCT words once (corpora are
+  each task tokenizes its DISTINCT words once (corpora are
   Zipfian — the memo hit rate is the point) and maps results back.
   Merging is the GPT-2-style loop: repeatedly fuse the
   lowest-ranked adjacent pair until none ranks.
@@ -27,14 +27,12 @@ invariant (tokens reconstruct the pre-tokenized words).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from workshoop2_etl_spark.operators.dedup import tokens_expr
+from workshoop2_etl_spark.operators.rows import map_rows
 
 #: End-of-word sentinel appended to each pre-tokenized word so merges
 #: can distinguish word-final from word-internal contexts (the ACL'16
@@ -131,39 +129,34 @@ def bpe_apply(
 ) -> DataFrame:
     """Tokenize every document with the trained merges.
 
-    The rank dict broadcasts in the UDF closure (merge lists are
-    KB-scale). Each batch encodes its DISTINCT words once and maps
-    per-document token lists back through the memo — on Zipfian text
-    the encode loop runs for the vocabulary, not the corpus. Output:
-    ``id_col``, ``out_col`` (array<string>), ``n_bpe`` (int).
+    The rank dict broadcasts in the kernel closure (merge lists are
+    KB-scale). Each task encodes its DISTINCT words once through a
+    word memo and maps per-document token lists back through it — on
+    Zipfian text the encode loop runs for the vocabulary, not the
+    corpus. Runs on the Arrow row shell
+    (:func:`operators.rows.map_rows`), so ``id_col`` passes through
+    unconverted. Output: ``id_col``, ``out_col`` (array<string>),
+    ``n_bpe`` (int).
     """
     ranks = {pair: i for i, pair in enumerate(merges)}
+    memo: dict[str, list[str]] = {}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict[str, list[str]] = {}
-
-        def enc(word: str) -> list[str]:
-            got = memo.get(word)
+    def tokenize(text):
+        out: list[str] = []
+        for w in _pretokenize(text or ""):
+            got = memo.get(w)
             if got is None:
-                got = memo[word] = _encode_word(word, ranks)
-            return got
+                got = memo[w] = _encode_word(w, ranks)
+            out.extend(got)
+        return out, len(out)
 
-        for pdf in batches:
-            toks = []
-            for text in pdf[text_col].fillna(""):
-                out: list[str] = []
-                for w in _pretokenize(text):
-                    out.extend(enc(w))
-                toks.append(out)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    out_col: toks,
-                    "n_bpe": [len(t) for t in toks],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel,
-        schema=f"{id_col} long, {out_col} array<string>, n_bpe int",
+    return map_rows(
+        df,
+        [text_col],
+        tokenize,
+        [
+            T.StructField(out_col, T.ArrayType(T.StringType())),
+            T.StructField("n_bpe", T.IntegerType()),
+        ],
+        keep=[id_col],
     )

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.operators.analytics import top_k_per_group
 from workshoop2_etl_spark.operators.dedup import tokens_expr
 from workshoop2_etl_spark.sources.readers import from_records
 
@@ -441,7 +442,6 @@ def per_domain_cap(
     the whole fact table through one hot partition. (SURVEY §2.9
     X209.)"""
     from workshoop2_etl_spark.functions.urls import registrable_domain
-    from workshoop2_etl_spark.operators.analytics import top_k_per_group
 
     work = df.withColumn(domain_col, registrable_domain(F.col(url_col)))
     order = [F.col(c).asc() if a else F.col(c).desc() for c, a in order_by]
@@ -661,8 +661,6 @@ def language_classify(
     degrades to bias order (measured: 338/500 collapse onto one
     language on the planted fixture) — the multiclass form of the
     r12 feature-agreement ADVICE."""
-    from pyspark.sql import Window
-
     bag = hashed_char_ngram_buckets(
         text_col, n=ngram_n, n_buckets=n_buckets
     )
@@ -721,11 +719,6 @@ def language_classify(
             ).alias("__z"),
         )
     )
-    pick = Window.partitionBy(id_col).orderBy(
-        F.desc("__z"), F.asc("lang")
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(pick))
-        .where(F.col("__rn") == 1)
-        .select(id_col, "n_feats", F.col("lang").alias(out_col))
-    )
+    return top_k_per_group(
+        scored, [id_col], [F.desc("__z"), F.asc("lang")], 1
+    ).select(id_col, "n_feats", F.col("lang").alias(out_col))

@@ -37,10 +37,11 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from workshoop2_etl_spark.operators.analytics import top_k_per_group
 from workshoop2_etl_spark.operators.rows import flat_map_rows, map_rows
 
 
@@ -285,15 +286,18 @@ def robots_filter(
             F.expr(f"`{path_col}` RLIKE __rule_regex"),
         ).otherwise(F.col(path_col).startswith(F.col("__rule_path")))
     ).cast("int")
-    w = Window.partitionBy(url_key).orderBy(
-        is_match.desc(),
-        F.length(F.col("__rule_path")).desc_nulls_last(),
-        F.col("__rule_allow").desc_nulls_last(),
-    )
     decided = (
-        joined.withColumn("__m", is_match)
-        .withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
+        top_k_per_group(
+            joined.withColumn("__m", is_match),
+            [url_key],
+            [
+                F.col("__m").desc(),
+                F.length(F.col("__rule_path")).desc_nulls_last(),
+                F.col("__rule_allow").desc_nulls_last(),
+            ],
+            1,
+            rank_col="__rn",
+        )
         .withColumn(
             "allowed",
             F.when(F.col("__m") == 0, F.lit(True)).otherwise(

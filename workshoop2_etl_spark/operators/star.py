@@ -34,6 +34,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from workshoop2_etl_spark.operators.analytics import top_k_per_group
+
 
 def build_dim(
     src: DataFrame,
@@ -59,12 +61,9 @@ def build_dim(
         F.lit(True) if not nk else F.expr(" AND ".join(f"{k} IS NOT NULL" for k in nk))
     )
     if extra_cols:
-        w = Window.partitionBy(*nk).orderBy(*[F.col(c) for c in extra_cols])
-        distinct = (
-            distinct.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        distinct = top_k_per_group(
+            distinct, nk, [F.col(c) for c in extra_cols], 1, rank_col="__rn"
+        ).drop("__rn")
     else:
         distinct = distinct.distinct()
     w_key = Window.orderBy(*[F.col(k) for k in nk])

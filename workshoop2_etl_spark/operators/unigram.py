@@ -20,7 +20,7 @@ Same two-phase contract as the BPE/IVF/classifier trainers:
   last bit: every iteration walks words and pieces in sorted order,
   pruning ties break lexicographically, no RNG anywhere.
 - **Apply** (:func:`unigram_apply`): the piece table broadcasts in
-  the UDF closure; each Arrow batch Viterbi-segments its DISTINCT
+  the kernel closure; each task Viterbi-segments its DISTINCT
   words once and maps results back (Zipfian memo, the bpe_apply
   shape). Single characters are never pruned, so segmentation is
   total: pieces always reconstruct the word (the lossless-roundtrip
@@ -34,14 +34,13 @@ hand-scored lattice, and train→apply round trips).
 from __future__ import annotations
 
 import math
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from workshoop2_etl_spark.operators.dedup import tokens_expr
+from workshoop2_etl_spark.operators.rows import map_rows
 
 __all__ = ["unigram_train", "unigram_apply", "viterbi_segment"]
 
@@ -266,36 +265,30 @@ def unigram_apply(
 ) -> DataFrame:
     """Tokenize every document with the trained piece table
     (broadcast in the closure, KB-scale). Distinct-word memo per
-    batch — the encode loop runs for the vocabulary, not the corpus.
-    Output: ``id_col``, ``out_col`` (array<string>), ``n_pieces``."""
+    task — the encode loop runs for the vocabulary, not the corpus.
+    Runs on the Arrow row shell (:func:`operators.rows.map_rows`), so
+    ``id_col`` passes through unconverted. Output: ``id_col``,
+    ``out_col`` (array<string>), ``n_pieces``."""
+    memo: dict[str, list[str]] = {}
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict[str, list[str]] = {}
-
-        def enc(word: str) -> list[str]:
-            got = memo.get(word)
+    def tokenize(text):
+        out: list[str] = []
+        for w in (text or "").lower().split():
+            got = memo.get(w)
             if got is None:
-                got = memo[word] = viterbi_segment(
-                    word, pieces, max_piece_len=max_piece_len
+                got = memo[w] = viterbi_segment(
+                    w, pieces, max_piece_len=max_piece_len
                 )
-            return got
+            out.extend(got)
+        return out, len(out)
 
-        for pdf in batches:
-            toks = []
-            for text in pdf[text_col].fillna(""):
-                out: list[str] = []
-                for w in text.lower().split():
-                    out.extend(enc(w))
-                toks.append(out)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    out_col: toks,
-                    "n_pieces": [len(t) for t in toks],
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        kernel,
-        schema=f"{id_col} long, {out_col} array<string>, n_pieces int",
+    return map_rows(
+        df,
+        [text_col],
+        tokenize,
+        [
+            T.StructField(out_col, T.ArrayType(T.StringType())),
+            T.StructField("n_pieces", T.IntegerType()),
+        ],
+        keep=[id_col],
     )

@@ -2641,16 +2641,15 @@ FROM orders WHERE o_orderkey % 10 = 5
 def xml_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X225 (round 13, VERDICT r12 missing-item 5): generic
     declared-schema XML source/sink — parquet → row-per-element XML
-    documents → declared-schema scan (``sources/xmlio.py``, the
-    ``from_xml``-shaped generalization of the wikidump parser core:
-    regex row-tag extraction + five-entity/numeric-ref unescape).
-    The deterministic orders slice repartitions to 4 documents so
-    the read is genuinely multi-file; the hash match against the
-    straight-parquet oracle proves the long/string/double/date
-    lattice round-trips value-exact (shortest-roundtrip doubles,
-    ISO dates, NULL-as-absent-element). Writes encode per partition
-    in a mapInPandas fold; reads are binaryFile + Arrow kernels —
-    blobs never shuffle."""
+    documents → declared-schema scan (``sources/xmlio.py``, thin
+    calls to Spark's built-in ``xml`` data source with fixed
+    options). The deterministic orders slice repartitions to 4
+    documents so the read is genuinely multi-file; the hash match
+    against the straight-parquet oracle proves the
+    long/string/double/date lattice round-trips value-exact
+    (NULL-as-absent-element). Write and read both run on the JVM; no
+    Python worker starts (pinned by
+    ``tests/test_plan_shapes.py::test_xml_roundtrip_runs_no_python``)."""
     from workshoop2_etl_spark.sources.xmlio import read_xml, write_xml
 
     orders = (

@@ -716,9 +716,9 @@ def streaming_heavy_hitters_events(
     included; the over-capacity decrement path (where MG's n/(k+1)
     guarantee, not exactness, is the contract) is pytest-proven on a
     planted skewed stream (tests/test_streaming_mg.py)."""
-    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
+    from workshoop2_etl_spark.operators.analytics import top_k_per_group
     from workshoop2_etl_spark.streaming.events import streaming_heavy_hitters
 
     stream = stream_events(spark, f"{sf_dir}/events.parquet")
@@ -730,13 +730,7 @@ def streaming_heavy_hitters_events(
         shuffle_partitions=4,
     )
     last = (
-        out.withColumn(
-            "__r",
-            F.row_number().over(
-                W.partitionBy("shard").orderBy(F.desc("version"))
-            ),
-        )
-        .filter("__r = 1")
+        top_k_per_group(out, ["shard"], [F.desc("version")], 1)
         .select(F.arrays_zip("items", "counts").alias("z"))
         .select(F.explode("z").alias("e"))
         .select(

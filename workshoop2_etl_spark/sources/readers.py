@@ -421,9 +421,9 @@ def read_container_files(
     *,
     ext: str,
 ) -> DataFrame:
-    """Container-file scan shared by the Avro, TFRecord and XML
-    readers: a ``binaryFile`` scan lists and reads the ``*.{ext}``
-    files executor-side, and ``decode(blob) -> pandas.DataFrame``
+    """Container-file scan shared by the Avro and TFRecord readers: a
+    ``binaryFile`` scan lists and reads the ``*.{ext}`` files
+    executor-side, and ``decode(blob) -> pandas.DataFrame``
     (rows in ``schema``) runs per file in a ``mapInPandas`` kernel
     where its scan task runs — the file is the unit of parallelism
     (``spark-avro``'s split story for non-splittable codecs), and

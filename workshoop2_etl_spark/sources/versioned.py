@@ -489,7 +489,8 @@ def foreach_batch_versioned_upsert(table_dir: str, key_cols: list[str]):
     is a logical overwrite (new manifest lists the merged file set),
     identical durability semantics to :func:`merge_cdc`."""
     from pyspark.sql import functions as F
-    from pyspark.sql import Window
+
+    from workshoop2_etl_spark.operators.analytics import top_k_per_group
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         latest = current_version(table_dir)
@@ -504,14 +505,13 @@ def foreach_batch_versioned_upsert(table_dir: str, key_cols: list[str]):
         # deterministic within-batch dedup by key (one crawl wave can
         # fetch one canonical URL twice)
         others = [c for c in batch_df.columns if c not in key_cols]
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).asc_nulls_last() for c in others]
-        )
-        batch = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        batch = top_k_per_group(
+            batch_df,
+            key_cols,
+            [F.col(c).asc_nulls_last() for c in others],
+            1,
+            rank_col="__rn",
+        ).drop("__rn")
         if latest is None:
             files = _write_data(batch, table_dir)
             _publish(

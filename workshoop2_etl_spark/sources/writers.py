@@ -353,8 +353,8 @@ def write_container_files(
     *,
     ext: str,
 ) -> int:
-    """Container-file sink shared by the Avro, TFRecord and XML
-    writers: one ``{ext}`` file per non-empty partition, encoded
+    """Container-file sink shared by the Avro and TFRecord writers:
+    one ``{ext}`` file per non-empty partition, encoded
     executor-side by ``encode(pdf, file_no) -> bytes`` in a
     ``mapInPandas`` fold over the whole partition (the iterator form —
     batches concatenate into ONE blob, so file count == partition
